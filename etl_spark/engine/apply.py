@@ -16,9 +16,15 @@ file is missing (crash in the window between the two commits)
 recomputes and rewrites the lineage — the MERGE itself stays a no-op.
 
 Per-batch fixed-cost budget (the non-scaling `c` term that caps
-scaling efficiency): exactly ONE full-pipeline Spark job (the MERGE
-write) plus one small aggregation over the persisted resolved set
-(lineage rollup, <= num_buckets result rows, written driver-side).
+scaling efficiency): ONE MERGE write action runs the whole parse ->
+normalize -> resolve pipeline over a single scan of the batch, plus
+one small aggregation over the persisted resolved set (lineage
+rollup, <= num_buckets result rows, written driver-side). Adaptive
+execution submits each shuffle-map stage as a job of its own, so the
+traced `replay_bulk` benchmark run (perfbench/) counts 7 Spark jobs
+per MoR batch: 5 under the MERGE, ending with the staging write, and
+2 for the lineage rollup. (A per-version Union parse counted 10 there:
+every schema version in the batch added its own raw-exchange job.)
 Batch stats come from parquet footers (driver-side, no job); the
 lineage rollup of batch N runs in a background thread overlapped with
 batch N+1's source read and parse (commit pipelining, depth 1).
@@ -33,7 +39,7 @@ import threading
 import time
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from etl_spark.cdc_schema import (
     BASE_VERSION,
@@ -46,6 +52,7 @@ from etl_spark.cdc_schema import (
 from etl_spark.config import EngineConfig
 from etl_spark.engine import lineage
 from etl_spark.engine.normalize import normalize_text
+from etl_spark.engine.quarantine import max_known_version, quarantine_split
 from etl_spark.engine.resolve import resolve_max_lsn, resolve_patch_fold
 from etl_spark.engine.skew import salted_repartition
 from etl_spark.lake.merge import merge_into
@@ -92,9 +99,15 @@ def parse_events(
     and casting widened types (epoch-sec long -> timestamp; ISO string
     -> timestamp). Pure JVM expressions (from_json + casts).
 
-    `versions` prunes the union to the schema versions actually
-    present in the batch (steady state = one version = one branch,
-    no union, single scan).
+    One pass over the batch, whatever the number of versions: a filter
+    keeps the events of `versions`, a first projection decodes each row
+    once under its own version's struct (`_p<v>` is
+    `CASE WHEN schema_version = v THEN from_json(payload, struct_v)`;
+    CASE is lazy per row, so other versions' structs are never
+    parsed), and a second projection routes every target column by
+    schema_version. The plan keeps one scan, so an upstream exchange
+    and a downstream UDF stage run once per batch, not once per
+    version.
 
     `with_set_flags=True` (the partial-image/patch path) additionally
     emits one boolean `_set_<col>` per target payload column: for full
@@ -113,8 +126,12 @@ def parse_events(
         if f.name not in spec.key
     ]
     target_by_id = {f.id: f for f in target}
+    ver = F.col("schema_version")
+    is_full = F.col("op") != F.lit("P")
 
-    branches = []
+    decoded = []
+    # per target field ID: [(version, routed value, patch-mask test)]
+    routes: dict[int, list[tuple[int, Column, Column]]] = {f.id: [] for f in target}
     for v in versions:
         pf = payload_fields(ops, v, spec)
         struct_fields = [T.StructField(f.name, spark_type(f.type), True) for f in pf]
@@ -125,49 +142,82 @@ def parse_events(
             struct_fields.append(
                 T.StructField("_changed", T.ArrayType(T.StringType()), True)
             )
-        pstruct = T.StructType(struct_fields)
-        sub = df.filter(F.col("schema_version") == v).withColumn(
-            "_p", F.from_json(F.col("payload"), pstruct)
+        p = f"_p{v}"
+        decoded.append(
+            F.when(ver == v, F.from_json(F.col("payload"), T.StructType(struct_fields))).alias(p)
         )
-        by_id = {f.id: f for f in pf}
-        is_full = F.col("op") != F.lit("P")
-        cols = [F.col(k) for k in spec.key] + [
-            F.col("lsn"),
-            F.col("op"),
-            F.col("op_ts"),
-        ]
-        for fid, tf in target_by_id.items():
-            src = by_id.get(fid)
-            if src is None:
-                cols.append(F.lit(None).cast(spark_type(tf.type)).alias(tf.name))
-                if with_set_flags:
-                    cols.append(is_full.alias(f"_set_{tf.name}"))
-            else:
-                c = F.col(f"_p.{src.name}")
-                if tf.type == "timestamp" and src.type == "string":
-                    c = F.to_timestamp(c)
-                elif src.type != tf.type:
-                    c = c.cast(spark_type(tf.type))
-                cols.append(c.alias(tf.name))
-                if with_set_flags:
-                    cols.append(
-                        (
-                            is_full
-                            | F.array_contains(
-                                F.coalesce(
-                                    F.col("_p._changed"),
-                                    F.array().cast("array<string>"),
-                                ),
-                                F.lit(src.name),
-                            )
-                        ).alias(f"_set_{tf.name}")
-                    )
-        branches.append(sub.select(*cols))
+        changed = F.coalesce(F.col(f"{p}._changed"), F.array().cast("array<string>"))
+        for src in pf:
+            tf = target_by_id.get(src.id)
+            if tf is None:
+                continue
+            c = F.col(f"{p}.{src.name}")
+            if tf.type == "timestamp" and src.type == "string":
+                c = F.to_timestamp(c)
+            elif src.type != tf.type:
+                c = c.cast(spark_type(tf.type))
+            routes[tf.id].append((v, c, F.array_contains(changed, F.lit(src.name))))
 
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
+    cols = [F.col(k) for k in spec.key] + [F.col("lsn"), F.col("op"), F.col("op_ts")]
+    for tf in target:
+        branches = routes[tf.id]
+        if not branches:
+            cols.append(F.lit(None).cast(spark_type(tf.type)).alias(tf.name))
+            if with_set_flags:
+                cols.append(is_full.alias(f"_set_{tf.name}"))
+            continue
+        value = mask = None
+        for v, c, m in branches:
+            value = F.when(ver == v, c) if value is None else value.when(ver == v, c)
+            mask = F.when(ver == v, m) if mask is None else mask.when(ver == v, m)
+        cols.append(value.alias(tf.name))
+        if with_set_flags:
+            # a version without this field leaves the mask test NULL:
+            # unset for patches, as if the field were never named
+            cols.append((is_full | mask.otherwise(F.lit(False))).alias(f"_set_{tf.name}"))
+
+    return (
+        df.filter(ver.isin(*versions))
+        .select(*[F.col(k) for k in spec.key], "lsn", "op", "op_ts", "schema_version", *decoded)
+        .select(*cols)
+    )
+
+
+def parse_batch(
+    batch_df: DataFrame,
+    ops: list[SchemaOp],
+    target_version: int,
+    versions: list[int],
+    spec: SourceSpec = TRANSCRIPTS,
+    with_set_flags: bool = False,
+    normalize: bool = True,
+) -> DataFrame:
+    """The parse and normalize steps of `apply_batch`: `parse_events`
+    (one pass: each row decodes once, under its own version's struct;
+    patch_ops also decodes the `_changed` mask into `_set_<col>`
+    flags), then vectorized text normalization (Arrow pandas UDF; D
+    rows keep null) — one ArrowEvalPython over the batch."""
+    parsed = parse_events(
+        batch_df,
+        ops,
+        target_version,
+        versions=versions,
+        spec=spec,
+        with_set_flags=with_set_flags,
+    )
+    if not normalize or spec.normalize_field_id is None:
+        return parsed
+    text_col = next(
+        (
+            f.name
+            for f in fields_at_version(ops, target_version, spec.base_fields)
+            if f.id == spec.normalize_field_id
+        ),
+        None,
+    )
+    if text_col is None:
+        return parsed
+    return parsed.withColumn(text_col, normalize_text(F.col(text_col)))
 
 
 def evolve_due_ops(table: LakeTable, ops: list[SchemaOp], max_lsn: int) -> int:
@@ -223,10 +273,14 @@ def _batch_files_from_checkpoint(checkpoint_dir: str, batch_id: int) -> list[str
     return out
 
 
+# batch stats of an empty batch; `vnull` counts NULL schema_versions
+_EMPTY_STATS = {"min_lsn": 0, "max_lsn": 0, "events_in": 0, "vmin": None, "vmax": None, "vnull": 0}
+
+
 def _stats_from_footers(batch_df: DataFrame, files: list[str] | None = None) -> dict | None:
-    """Batch stats (min/max lsn, row count, schema_version range) from
-    the source parquet footers — driver-side metadata reads, O(#files),
-    no Spark job. A streaming file-source micro-batch is a set of whole
+    """Batch stats (min/max lsn, row count, schema_version range and
+    NULL count) from the source parquet footers — driver-side metadata
+    reads, O(#files), no Spark job. A streaming file-source micro-batch is a set of whole
     files, so footer row-group statistics describe the batch exactly.
     Returns None (caller falls back to an aggregation) when the frame
     is not a pure file scan or stats are absent."""
@@ -240,6 +294,7 @@ def _stats_from_footers(batch_df: DataFrame, files: list[str] | None = None) -> 
     import pyarrow.parquet as pq
 
     tot = 0
+    vnull = 0
     mn = mx = vmn = vmx = None
     for uri in files:
         path = unquote(urlparse(uri).path) if "://" in uri or uri.startswith("file:") else uri
@@ -255,20 +310,28 @@ def _stats_from_footers(batch_df: DataFrame, files: list[str] | None = None) -> 
             row_group = md.row_group(rg)
             s_lsn = row_group.column(names["lsn"]).statistics
             s_ver = row_group.column(names["schema_version"]).statistics
-            if s_lsn is None or s_ver is None or not s_lsn.has_min_max or not s_ver.has_min_max:
+            if (
+                s_lsn is None
+                or s_ver is None
+                or not s_lsn.has_min_max
+                or not s_ver.has_min_max
+                or not s_ver.has_null_count
+            ):
                 return None
+            vnull += s_ver.null_count
             mn = s_lsn.min if mn is None else min(mn, s_lsn.min)
             mx = s_lsn.max if mx is None else max(mx, s_lsn.max)
             vmn = s_ver.min if vmn is None else min(vmn, s_ver.min)
             vmx = s_ver.max if vmx is None else max(vmx, s_ver.max)
     if tot == 0:
-        return {"min_lsn": 0, "max_lsn": 0, "events_in": 0, "vmin": None, "vmax": None}
+        return dict(_EMPTY_STATS)
     return {
         "min_lsn": int(mn),
         "max_lsn": int(mx),
         "events_in": int(tot),
         "vmin": int(vmn),
         "vmax": int(vmx),
+        "vnull": int(vnull),
     }
 
 
@@ -282,15 +345,17 @@ def _stats_from_agg(batch_df: DataFrame) -> dict:
         F.count("*").alias("events_in"),
         F.min("schema_version").alias("vmin"),
         F.max("schema_version").alias("vmax"),
+        F.count("schema_version").alias("vset"),
     ).collect()[0]
     if row["events_in"] == 0:
-        return {"min_lsn": 0, "max_lsn": 0, "events_in": 0, "vmin": None, "vmax": None}
+        return dict(_EMPTY_STATS)
     return {
         "min_lsn": int(row["min_lsn"]),
         "max_lsn": int(row["max_lsn"]),
         "events_in": int(row["events_in"]),
-        "vmin": int(row["vmin"]),
-        "vmax": int(row["vmax"]),
+        "vmin": None if row["vmin"] is None else int(row["vmin"]),
+        "vmax": None if row["vmax"] is None else int(row["vmax"]),
+        "vnull": int(row["events_in"]) - int(row["vset"]),
     }
 
 
@@ -405,32 +470,26 @@ def apply_batch(
     t = _tlog(batch_id, "evolve", t)
 
     # schema versions possibly present: version is monotone in LSN, so
-    # the footer min/max of schema_version bounds the branch set
+    # the footer min/max of schema_version bounds the decode set,
+    # clamped to the versions the schema-op track can decode (a poison
+    # schema_version = 2^31-1 must not inflate the decode list)
     vmin, vmax = stats_src["vmin"], stats_src["vmax"]
+    lo = BASE_VERSION if vmin is None else max(vmin, BASE_VERSION)
+    hi = BASE_VERSION - 1 if vmax is None else min(vmax, max_known_version(ops))
 
     # 1.5 dead-letter quarantine (config-gated, default off): divert
     #     malformed-payload / unknown-version events to the DLQ before
-    #     they can become all-NULL upserts, and clamp the branch
-    #     bounds to decodable versions BEFORE materializing the list
-    #     (a poison schema_version=2^62 must not inflate the union or
-    #     the driver). Idempotent on epoch replay (overwrite per
-    #     batch_id) — see engine/quarantine.py.
+    #     they can become all-NULL upserts. Idempotent on epoch replay
+    #     (overwrite per batch_id) — see engine/quarantine.py. Without
+    #     it, a NULL or undecodable schema_version fails the batch: the
+    #     parse filter would otherwise drop those events silently.
     n_quarantined = 0
     if cfg.quarantine_dir:
-        from etl_spark.engine.quarantine import max_known_version, quarantine_split
-
         batch_df, n_quarantined = quarantine_split(
             batch_df, cfg.quarantine_dir, ops, batch_id, spec=spec
         )
-        # vmin/vmax are None when EVERY event's schema_version is NULL
-        # (min/max ignore nulls) — treat as an empty decodable range;
-        # the whole batch just went to the DLQ above
-        vmin = BASE_VERSION if vmin is None else max(vmin, BASE_VERSION)
-        vmax = (
-            BASE_VERSION - 1 if vmax is None else min(vmax, max_known_version(ops))
-        )
         t = _tlog(batch_id, "quarantine", t)
-        if n_quarantined >= stats_src["events_in"] or vmin > vmax:
+        if n_quarantined >= stats_src["events_in"] or lo > hi:
             # whole batch was poison: nothing to apply, but the batch
             # still covered an LSN span — without a ledger row the
             # invariant checker would report a phantom 'LSN gap' and
@@ -444,14 +503,21 @@ def apply_batch(
                 table.manifest().version,
             )
             return
-    elif vmin is None or vmax is None:
-        raise ValueError(
-            f"batch {batch_id}: every event has NULL schema_version "
-            f"(poison source) and no quarantine_dir is configured — "
-            f"refusing to guess; set EngineConfig.quarantine_dir to "
-            f"divert such events to the dead-letter queue"
+    elif stats_src["vnull"] or (vmin, vmax) != (lo, hi):
+        why = (
+            f"{stats_src['vnull']} of {stats_src['events_in']} events have "
+            f"NULL schema_version"
+            if stats_src["vnull"]
+            else f"schema_version range [{vmin}, {vmax}] exceeds the "
+            f"decodable versions [{BASE_VERSION}, {max_known_version(ops)}]"
         )
-    versions = list(range(vmin, vmax + 1))
+        raise ValueError(
+            f"batch {batch_id}: {why} (poison source) and no quarantine_dir "
+            f"is configured — refusing to guess; set "
+            f"EngineConfig.quarantine_dir to divert such events to the "
+            f"dead-letter queue"
+        )
+    versions = list(range(lo, hi + 1))
 
     # 2. ensure the narrow parse/normalize stages have enough map-side
     #    parallelism. A micro-batch of >= `width` source files already
@@ -463,8 +529,10 @@ def apply_batch(
     #    the difference between one cross-JVM shuffle of raw JSON and
     #    one of resolved rows). Only a batch of FEWER files than cores
     #    (unsplittable row groups) pays the up-front repartition,
-    #    partitioned on the resolve key so Catalyst elides the exchange
-    #    under the max-LSN aggregation — one shuffle either way. For
+    #    partitioned on the resolve key so Catalyst can elide the
+    #    exchange under the max-LSN aggregation (it does only without
+    #    the normalize UDF: ArrowEvalPython does not pass the child's
+    #    partitioning on, so a normalized batch shuffles twice). For
     #    the pathological single-(conv,turn) hot key, cfg.salt_buckets
     #    switches to the salted two-phase layout instead.
     #    Callers that already distributed the input (the routed path
@@ -477,31 +545,16 @@ def apply_batch(
     elif not input_partitioned and (n_src_files is None or n_src_files < width):
         batch_df = batch_df.repartition(width, *[F.col(k) for k in spec.key])
 
-    # 3. parse by version -> current schema (JVM from_json + casts);
-    #    only the versions present in the batch are unioned (steady
-    #    state: exactly one branch, one scan). patch_ops additionally
-    #    decodes the per-event `_changed` mask into `_set_<col>` flags.
-    parsed = parse_events(
+    # 3-4. parse by version -> current schema, then normalize text
+    parsed = parse_batch(
         batch_df,
         ops,
         target_version,
-        versions=versions,
+        versions,
         spec=spec,
         with_set_flags=cfg.patch_ops,
+        normalize=cfg.normalize_text_col,
     )
-
-    # 4. vectorized text normalization (Arrow pandas UDF; D rows keep null)
-    if cfg.normalize_text_col and spec.normalize_field_id is not None:
-        text_col = next(
-            (
-                f.name
-                for f in fields_at_version(ops, target_version, spec.base_fields)
-                if f.id == spec.normalize_field_id
-            ),
-            None,
-        )
-        if text_col is not None:
-            parsed = parsed.withColumn(text_col, normalize_text(F.col(text_col)))
 
     # 5. max-LSN resolution per key (out-of-order within the batch).
     #    Exact-duplicate re-emits (same key AND lsn) carry identical

@@ -131,6 +131,7 @@ def apply_batch_routed(
                 F.count("*").alias("events_in"),
                 F.min("schema_version").alias("vmin"),
                 F.max("schema_version").alias("vmax"),
+                F.count("schema_version").alias("vset"),
             )
             .collect()
         )
@@ -139,12 +140,14 @@ def apply_batch_routed(
                 "min_lsn": int(r["min_lsn"]),
                 "max_lsn": int(r["max_lsn"]),
                 "events_in": int(r["events_in"]),
-                # min/max ignore NULLs: an all-NULL schema_version
-                # slice yields None here; apply_batch diverts it to
-                # the DLQ (quarantine configured) or fails loud —
-                # never a TypeError before the screen runs
+                # min/max ignore NULLs (an all-NULL schema_version
+                # slice yields None here) and vnull counts them;
+                # apply_batch diverts such events to the DLQ
+                # (quarantine configured) or fails loud — never a
+                # TypeError before the screen runs
                 "vmin": None if r["vmin"] is None else int(r["vmin"]),
                 "vmax": None if r["vmax"] is None else int(r["vmax"]),
+                "vnull": int(r["events_in"]) - int(r["vset"]),
             }
             for r in stat_rows
         }
@@ -161,7 +164,7 @@ def apply_batch_routed(
                 f"to allowlist-skip them"
             )
         empty = {"min_lsn": 0, "max_lsn": 0, "events_in": 0,
-                 "vmin": None, "vmax": None}
+                 "vmin": None, "vmax": None, "vnull": 0}
 
         def _apply_one(name: str) -> None:
             cfg, ops, spec = routes[name]

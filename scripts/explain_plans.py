@@ -160,10 +160,45 @@ def main() -> None:
     checks.append(("patch fold no join", "Join" not in p))
     checks.append(("patch fold map-side partial agg", p.count("Aggregate") >= 2))
 
+    # micro-batch parse over all four schema versions: one pass — one
+    # scan, no per-version Union, one raw exchange, one normalize UDF
+    # stage, and exactly one from_json per version (CollapseProject
+    # must not inline a version's decode into each routed column)
+    import re as _re
+    import tempfile
+    from collections import Counter
+
+    from etl_spark.cdc_schema import TRANSCRIPTS
+    from etl_spark.engine.apply import parse_batch
+    from etl_spark.gen.binlog import (
+        GenConfig, gen_base, gen_binlog, gen_schema_ops, write_segments,
+    )
+
+    g = GenConfig(n_convs=6, n_events=200, dup_rate=0.0, disorder_window=4,
+                  segment_size=200, schema_op_fracs=(0.2, 0.5, 0.8))
+    ops = gen_schema_ops(g)
+    seg_dir = tempfile.mkdtemp(prefix="plan_parse_")
+    write_segments(gen_binlog(g, gen_base(g), ops), seg_dir)
+    raw = spark.read.schema(TRANSCRIPTS.binlog_schema()).parquet(seg_dir)
+    p = plan_of(parse_batch(raw.repartition(4, *TRANSCRIPTS.key), ops, 4, [1, 2, 3, 4]))
+
+    def n_nodes(name):
+        # formatted explain lists each node twice (tree line + detail
+        # header) — count detail headers only
+        return len(_re.findall(rf"^\(\d+\) {name}\b", p, _re.M))
+
+    decodes = Counter(_re.findall(r"schema_version#\d+ = (\d+)\) THEN from_json\(", p))
+    checks.append(("parse scans the batch once, no Union",
+                   n_nodes("Scan parquet") == 1 and "Union" not in p))
+    checks.append(("parse has one exchange and one ArrowEvalPython",
+                   n_nodes("Exchange") == 1 and n_nodes("ArrowEvalPython") == 1))
+    checks.append(("parse decodes each version with exactly one from_json",
+                   decodes == {"1": 1, "2": 1, "3": 1, "4": 1}
+                   and p.count("from_json(") == 4))
+
     # bucket-pruned point lookup: the scan must read strictly fewer
     # files than the full table (manifest pruning, not a post-filter)
     from etl_spark.lake.table import LakeTable
-    import tempfile
 
     tdir = tempfile.mkdtemp(prefix="plan_lookup_")
     lt = LakeTable.create(
@@ -393,7 +428,6 @@ def main() -> None:
     checks.append(("pack_shards action plan has NO single-partition stage "
                    "(offsets precomputed driver-side as bounded metadata)",
                    "SinglePartition" not in p))
-    import re as _re
 
     # formatted explain lists each node twice (tree line + detail
     # header) — count detail headers only
