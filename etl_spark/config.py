@@ -25,9 +25,6 @@ class EngineConfig:
     use_watermark_dedup: bool = False
     # files per micro-batch for the streaming file source
     max_files_per_trigger: int = 4
-    # salt buckets for extreme single-key skew in resolve (0 = off;
-    # partial aggregation already collapses per-key rows map-side)
-    salt_buckets: int = 0
     normalize_text_col: bool = True
     # "mor" (merge-on-read, O(batch) write cost per micro-batch) or
     # "cow" (copy-on-write, read-optimized; O(touched buckets) rewrite)

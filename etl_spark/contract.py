@@ -2097,9 +2097,7 @@ def q_mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     and emit a 16-bin intensity histogram per image. The oracle
     recomputes every (bin, count) from the pixel arithmetic
     (px_i = (doc_id*31 + i) % 256), so a hash match proves the feature
-    vector came from genuinely decoded pixels. (The byte-hash
-    `decode_features(fake=True)` stub remains in operators/multimodal
-    only for external-lib formats; it is no longer a contract entry.)"""
+    vector came from genuinely decoded pixels."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     media = MM.synthesize_images(docs, "doc_id")
     return MM.image_histogram(media, bins=16)

@@ -54,7 +54,6 @@ from etl_spark.engine import lineage
 from etl_spark.engine.normalize import normalize_text
 from etl_spark.engine.quarantine import max_known_version, quarantine_split
 from etl_spark.engine.resolve import resolve_max_lsn, resolve_patch_fold
-from etl_spark.engine.skew import salted_repartition
 from etl_spark.lake.merge import merge_into
 from etl_spark.lake.table import LakeTable, spark_type
 
@@ -532,17 +531,13 @@ def apply_batch(
     #    partitioned on the resolve key so Catalyst can elide the
     #    exchange under the max-LSN aggregation (it does only without
     #    the normalize UDF: ArrowEvalPython does not pass the child's
-    #    partitioning on, so a normalized batch shuffles twice). For
-    #    the pathological single-(conv,turn) hot key, cfg.salt_buckets
-    #    switches to the salted two-phase layout instead.
+    #    partitioning on, so a normalized batch shuffles twice).
     #    Callers that already distributed the input (the routed path
     #    widens the SHARED batch once before fan-out) pass
     #    input_partitioned=True so each slice skips its own raw
     #    shuffle — N raw repartitions per batch was the routed cost.
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if cfg.salt_buckets:
-        batch_df = salted_repartition(batch_df, spec.bucket_by, width, salt=8)
-    elif not input_partitioned and (n_src_files is None or n_src_files < width):
+    if not input_partitioned and (n_src_files is None or n_src_files < width):
         batch_df = batch_df.repartition(width, *[F.col(k) for k in spec.key])
 
     # 3-4. parse by version -> current schema, then normalize text
@@ -572,7 +567,6 @@ def apply_batch(
         resolved = resolve_patch_fold(
             parsed.drop("op_ts"),
             list(spec.key),
-            salt_buckets=cfg.salt_buckets,
             with_counts=True,
             covered_lsn_ranges=covered,
         )
@@ -580,7 +574,6 @@ def apply_batch(
         resolved = resolve_max_lsn(
             parsed.drop("op_ts"),
             list(spec.key),
-            salt_buckets=cfg.salt_buckets,
             with_counts=True,
             covered_lsn_ranges=covered,
         )

@@ -108,26 +108,31 @@ def _refuse_shared(values, what: str, fix: str) -> None:
 
 
 def validate_disjoint_derived_state(cfgs) -> None:
-    """Refuse derived-state dirs shared ACROSS configs (and between
-    the index and MV namespaces): in a routed deployment the
-    per-entity applies run concurrently, so two routes pointing at one
-    index root or MV dir would interleave commits / state-file sweeps
-    into a plausible-looking but garbage derived state with a valid
-    cursor and no error anywhere. Called once at routed-stream start —
-    the per-call refusals inside refresh_indexes/refresh_mvs only see
-    one config's specs."""
+    """Refuse derived-state dirs shared ACROSS configs, between the
+    index and MV namespaces, or with a target table root: two writers
+    in one directory (concurrent routed applies, or one config's index,
+    MV and table commits) interleave commits / state-file sweeps into
+    a plausible-looking but garbage derived state with a valid cursor
+    and no error anywhere. Called once at stream start by run_replay
+    and run_replay_routed — the per-call refusals inside
+    refresh_indexes/refresh_mvs only see one namespace of one config.
+    Each table root enters the checked set once: whether routes may
+    share a target table is not a derived-state question."""
+    cfgs = list(cfgs)
     _refuse_shared(
-        (
+        [
             p
             for cfg in cfgs
             for p in (
                 [s.root for s in getattr(cfg, "index_specs", ())]
                 + [s.mv_dir for s in getattr(cfg, "mv_specs", ())]
             )
-        ),
-        "derived-state dirs are shared across route configs",
-        "each route's index roots and MV dirs must be disjoint from "
-        "every other route's (and from each other)",
+        ]
+        + sorted({cfg.table_root for cfg in cfgs}),
+        "derived-state dirs are shared across route configs, "
+        "namespaces or table roots",
+        "each index root and MV dir must be disjoint from every other "
+        "one and from every target table root",
     )
 
 

@@ -10,7 +10,8 @@ across parallelism levels (local[8] vs local[32]).
 
 Write path is hot-loop-aware: the per-bucket rollup is ONE Spark
 aggregation (collect of <= num_buckets rows), and the parquet file is
-written driver-side with pyarrow via tmp+atomic-rename — no Spark
+written driver-side with pyarrow (`_write_ledger`, the one writer of
+the `LEDGER_COLUMNS` schema) via tmp+atomic-rename — no Spark
 write job, no commit-protocol temp dirs/_SUCCESS/fsync chatter per
 micro-batch. A crash-replayed epoch rewrites the identical rows
 (os.replace is an atomic overwrite).
@@ -27,6 +28,27 @@ from etl_spark.lake.table import BUCKET_COL, LakeTable
 
 # resolve-internal count columns excluded from the content checksum
 INTERNAL_COLS = {BUCKET_COL, "_nev", "_nlsn", "_nnew"}
+
+# The ledger schema, defined once: (column, Spark type). Every batch
+# file and the empty-ledger frame of `read_manifest` derive from it.
+# The first eight columns are per bucket; the rest repeat per batch.
+LEDGER_COLUMNS = (
+    ("partition_id", "int"),
+    ("min_lsn", "long"),
+    ("max_lsn", "long"),
+    ("row_count", "long"),
+    ("checksum", "long"),
+    ("events_in", "long"),
+    ("events_distinct", "long"),
+    ("events_new", "long"),
+    ("batch_id", "long"),
+    ("batch_min_lsn", "long"),
+    ("batch_max_lsn", "long"),
+    ("batch_events_in", "long"),
+    ("batch_events_quarantined", "long"),
+    ("table_version", "long"),
+    ("committed_at_us", "long"),
+)
 
 
 def _content_cols(cols: list[str]) -> list[str]:
@@ -61,6 +83,42 @@ def _batch_file(manifest_dir: str, batch_id: int) -> str:
 
 def has_batch_manifest(manifest_dir: str, batch_id: int) -> bool:
     return os.path.exists(_batch_file(manifest_dir, batch_id))
+
+
+def _write_ledger(
+    manifest_dir: str,
+    batch_id: int,
+    stats: dict,
+    table_version: int,
+    buckets: list[dict],
+) -> None:
+    """Write one batch's ledger file: one row per dict in `buckets`
+    (its per-bucket columns; a missing one is NULL) plus the
+    batch-level columns, in the `LEDGER_COLUMNS` schema. tmp +
+    os.replace makes it atomic, and a crash-replayed epoch overwrites
+    it with identical rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    batch = {
+        "batch_id": batch_id,
+        "batch_min_lsn": stats["min_lsn"],
+        "batch_max_lsn": stats["max_lsn"],
+        "batch_events_in": stats["events_in"],
+        "batch_events_quarantined": stats.get("events_quarantined", 0),
+        "table_version": table_version,
+        "committed_at_us": int(time.time() * 1e6),
+    }
+    rows = [{**b, **batch} for b in buckets]
+    arrow_type = {"int": pa.int32(), "long": pa.int64()}
+    tbl = pa.table(
+        {c: pa.array([r.get(c) for r in rows], arrow_type[t]) for c, t in LEDGER_COLUMNS}
+    )
+    os.makedirs(manifest_dir, exist_ok=True)
+    out = _batch_file(manifest_dir, batch_id)
+    tmp = out + ".tmp"
+    pq.write_table(tbl, tmp)
+    os.replace(tmp, out)
 
 
 def write_batch_manifest(
@@ -105,39 +163,9 @@ def write_batch_manifest(
         .collect()
     )
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    n = len(rows)
-    ev_in = [int(r["events_in"]) if has_counts else None for r in rows]
-    ev_di = [int(r["events_distinct"]) if has_counts else None for r in rows]
-    ev_nw = [int(r["events_new"]) if has_new else None for r in rows]
-    tbl = pa.table(
-        {
-            "partition_id": pa.array([r["partition_id"] for r in rows], pa.int32()),
-            "min_lsn": pa.array([r["min_lsn"] for r in rows], pa.int64()),
-            "max_lsn": pa.array([r["max_lsn"] for r in rows], pa.int64()),
-            "row_count": pa.array([r["row_count"] for r in rows], pa.int64()),
-            "checksum": pa.array([r["checksum"] for r in rows], pa.int64()),
-            "events_in": pa.array(ev_in, pa.int64()),
-            "events_distinct": pa.array(ev_di, pa.int64()),
-            "events_new": pa.array(ev_nw, pa.int64()),
-            "batch_id": pa.array([batch_id] * n, pa.int64()),
-            "batch_min_lsn": pa.array([stats["min_lsn"]] * n, pa.int64()),
-            "batch_max_lsn": pa.array([stats["max_lsn"]] * n, pa.int64()),
-            "batch_events_in": pa.array([stats["events_in"]] * n, pa.int64()),
-            "batch_events_quarantined": pa.array(
-                [stats.get("events_quarantined", 0)] * n, pa.int64()
-            ),
-            "table_version": pa.array([table_version] * n, pa.int64()),
-            "committed_at_us": pa.array([int(time.time() * 1e6)] * n, pa.int64()),
-        }
+    _write_ledger(
+        manifest_dir, batch_id, stats, table_version, [r.asDict() for r in rows]
     )
-    os.makedirs(manifest_dir, exist_ok=True)
-    out = _batch_file(manifest_dir, batch_id)
-    tmp = out + ".tmp"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, out)
 
 
 def write_poison_batch_manifest(
@@ -151,35 +179,24 @@ def write_poison_batch_manifest(
     accounting. One driver-side row (partition_id = -1, zero applied
     events, the batch's LSN bounds and quarantine count); idempotent
     overwrite like the normal rollup."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbl = pa.table(
-        {
-            "partition_id": pa.array([-1], pa.int32()),
-            "min_lsn": pa.array([stats["min_lsn"]], pa.int64()),
-            "max_lsn": pa.array([stats["max_lsn"]], pa.int64()),
-            "row_count": pa.array([0], pa.int64()),
-            "checksum": pa.array([0], pa.int64()),
-            "events_in": pa.array([0], pa.int64()),
-            "events_distinct": pa.array([0], pa.int64()),
-            "events_new": pa.array([0], pa.int64()),
-            "batch_id": pa.array([batch_id], pa.int64()),
-            "batch_min_lsn": pa.array([stats["min_lsn"]], pa.int64()),
-            "batch_max_lsn": pa.array([stats["max_lsn"]], pa.int64()),
-            "batch_events_in": pa.array([stats["events_in"]], pa.int64()),
-            "batch_events_quarantined": pa.array(
-                [stats.get("events_quarantined", 0)], pa.int64()
-            ),
-            "table_version": pa.array([table_version], pa.int64()),
-            "committed_at_us": pa.array([int(time.time() * 1e6)], pa.int64()),
-        }
+    _write_ledger(
+        manifest_dir,
+        batch_id,
+        stats,
+        table_version,
+        [
+            {
+                "partition_id": -1,
+                "min_lsn": stats["min_lsn"],
+                "max_lsn": stats["max_lsn"],
+                "row_count": 0,
+                "checksum": 0,
+                "events_in": 0,
+                "events_distinct": 0,
+                "events_new": 0,
+            }
+        ],
     )
-    os.makedirs(manifest_dir, exist_ok=True)
-    out = _batch_file(manifest_dir, batch_id)
-    tmp = out + ".tmp"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, out)
 
 
 def read_manifest(
@@ -205,13 +222,7 @@ def read_manifest(
         # empty ledger, not a FileNotFoundError / schema-inference
         # crash from the audit job
         return spark.createDataFrame(
-            [],
-            "partition_id int, min_lsn long, max_lsn long, row_count long, "
-            "checksum long, events_in long, events_distinct long, "
-            "events_new long, batch_id long, batch_min_lsn long, "
-            "batch_max_lsn long, batch_events_in long, "
-            "batch_events_quarantined long, table_version long, "
-            "committed_at_us long",
+            [], ", ".join(f"{c} {t}" for c, t in LEDGER_COLUMNS)
         )
     return spark.read.parquet(*paths)
 

@@ -12,9 +12,7 @@ per key before the MERGE.
 Implemented as a hash aggregation (`max_by(struct(*), lsn)`), which
 Catalyst runs as partial (map-side) + final aggregate — each map task
 emits at most one row per key, so a hot conversation's events collapse
-before the shuffle. An optional explicit two-phase salted variant is
-provided for extreme single-key skew (10^8 events for one key), where
-even the final-side single reducer row stream matters.
+before the shuffle.
 """
 
 from __future__ import annotations
@@ -35,7 +33,7 @@ def _lineage_count_aggs(
     even under at-least-once re-delivery and out-of-LSN-order batch
     arrival. collect_set state is bounded by events-per-key within one
     micro-batch; LSNs are unique per event, so per-key sets are
-    disjoint across keys and across salt groups."""
+    disjoint across keys."""
     if not with_counts:
         return []
     aggs = [
@@ -56,25 +54,10 @@ def _lineage_count_aggs(
     return aggs
 
 
-def _lineage_final_sums(
-    with_counts: bool, covered_lsn_ranges: list[tuple[int, int]] | None
-) -> list:
-    """Phase-2 recombination of `_lineage_count_aggs` under the salted
-    two-phase layout: a given LSN lands in exactly one hash(lsn) salt
-    group, so per-group distinct counts SUM exactly."""
-    if not with_counts:
-        return []
-    aggs = [F.sum("_nev").alias("_nev"), F.sum("_nlsn").alias("_nlsn")]
-    if covered_lsn_ranges is not None:
-        aggs.append(F.sum("_nnew").cast("int").alias("_nnew"))
-    return aggs
-
-
 def resolve_max_lsn(
     df: DataFrame,
     key: list[str],
     lsn_col: str = "lsn",
-    salt_buckets: int = 0,
     with_counts: bool = False,
     covered_lsn_ranges: list[tuple[int, int]] | None = None,
 ) -> DataFrame:
@@ -91,7 +74,7 @@ def resolve_max_lsn(
     bounded by events-per-key within one micro-batch, which the
     key-grain — e.g. (conv_id, turn_idx) — keeps small even for hot
     conversations; LSNs are unique per event so per-key sets are
-    disjoint across keys and across salt groups.)
+    disjoint across keys.)
 
     `covered_lsn_ranges` (with with_counts) additionally emits `_nnew`:
     the per-key count of distinct LSNs OUTSIDE the given [lo, hi]
@@ -105,30 +88,10 @@ def resolve_max_lsn(
     """
     others = [c for c in df.columns if c not in key]
     packed = F.struct(*[F.col(c) for c in others]).alias("_row")
-
-    def _count_aggs():
-        return _lineage_count_aggs(lsn_col, with_counts, covered_lsn_ranges)
-
-    if salt_buckets and salt_buckets > 1:
-        # phase 1: reduce within (key, salt) groups; phase 2: final.
-        # salt = hash(lsn) -> a given LSN lands in exactly one salt
-        # group, so phase-2 sums of per-group distinct counts are exact.
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt_buckets))
-        )
-        part = (
-            salted.groupBy(*key, "_salt")
-            .agg(F.max_by(packed, F.col(lsn_col)).alias("_row"),
-                 F.max(lsn_col).alias("_max_lsn"),
-                 *_count_aggs())
-        )
-        final_aggs = [F.max_by(F.col("_row"), F.col("_max_lsn")).alias("_row")]
-        final_aggs += _lineage_final_sums(with_counts, covered_lsn_ranges)
-        final = part.groupBy(*key).agg(*final_aggs)
-    else:
-        final = df.groupBy(*key).agg(
-            F.max_by(packed, F.col(lsn_col)).alias("_row"), *_count_aggs()
-        )
+    final = df.groupBy(*key).agg(
+        F.max_by(packed, F.col(lsn_col)).alias("_row"),
+        *_lineage_count_aggs(lsn_col, with_counts, covered_lsn_ranges),
+    )
 
     extra = ["_nev", "_nlsn"] if with_counts else []
     if with_counts and covered_lsn_ranges is not None:
@@ -141,7 +104,6 @@ def resolve_patch_fold(
     key: list[str],
     lsn_col: str = "lsn",
     op_col: str = "op",
-    salt_buckets: int = 0,
     with_counts: bool = False,
     covered_lsn_ranges: list[tuple[int, int]] | None = None,
 ) -> DataFrame:
@@ -195,44 +157,21 @@ def resolve_patch_fold(
     if missing:
         raise ValueError(f"resolve_patch_fold: no _set_ flag for {missing}")
     is_full = F.col(op_col) != F.lit("P")
-
-    def _fold_aggs(lsn, op, val):
-        """Per-group (or per-salt-group) fold state: boundary struct +
-        one struct-max per payload column."""
-        aggs = [
-            F.max(F.when(is_full, F.struct(lsn.alias("l"), op.alias("o")))).alias("_b"),
-            F.max(lsn).alias("_max_lsn"),
-        ]
-        for c in payload:
-            aggs.append(
-                F.max(
-                    F.when(F.col(f"_set_{c}"), F.struct(lsn.alias("l"), val(c).alias("v")))
-                ).alias(f"_f_{c}")
-            )
-        return aggs
-
-    def _count_aggs():
-        return _lineage_count_aggs(lsn_col, with_counts, covered_lsn_ranges)
-
-    if salt_buckets and salt_buckets > 1:
-        # two-phase: struct-max is associative, so per-(key, salt)
-        # partial folds recombine exactly with a second max; the
-        # distinct counts stay exact because hash(lsn) puts each LSN
-        # in one salt group (same argument as resolve_max_lsn).
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt_buckets))
+    lsn, op = F.col(lsn_col), F.col(op_col)
+    # fold state: boundary struct + one struct-max per payload column
+    fold_aggs = [
+        F.max(F.when(is_full, F.struct(lsn.alias("l"), op.alias("o")))).alias("_b"),
+        F.max(lsn).alias("_max_lsn"),
+    ]
+    for c in payload:
+        fold_aggs.append(
+            F.max(
+                F.when(F.col(f"_set_{c}"), F.struct(lsn.alias("l"), F.col(c).alias("v")))
+            ).alias(f"_f_{c}")
         )
-        part = salted.groupBy(*key, "_salt").agg(
-            *_fold_aggs(F.col(lsn_col), F.col(op_col), F.col), *_count_aggs()
-        )
-        final_aggs = [F.max("_b").alias("_b"), F.max("_max_lsn").alias("_max_lsn")]
-        final_aggs += [F.max(f"_f_{c}").alias(f"_f_{c}") for c in payload]
-        final_aggs += _lineage_final_sums(with_counts, covered_lsn_ranges)
-        final = part.groupBy(*key).agg(*final_aggs)
-    else:
-        final = df.groupBy(*key).agg(
-            *_fold_aggs(F.col(lsn_col), F.col(op_col), F.col), *_count_aggs()
-        )
+    final = df.groupBy(*key).agg(
+        *fold_aggs, *_lineage_count_aggs(lsn_col, with_counts, covered_lsn_ranges)
+    )
 
     is_del = F.col("_b").isNotNull() & (F.col("_b.o") == F.lit("D"))
     out_cols = [F.col(k) for k in key]

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, functions as F
 from etl_spark.cdc_schema import TRANSCRIPTS, SchemaOp, SourceSpec
 from etl_spark.config import EngineConfig
 from etl_spark.engine.apply import apply_batch, drain_pending, reconcile_lineage
+from etl_spark.engine.indexes import validate_disjoint_derived_state
 from etl_spark.lake.table import spark_type
 
 
@@ -70,6 +71,8 @@ def run_replay(
     `available_now=True` = bounded replay (drain all segments, then
     stop); False = continuous tail. Resumable: offsets live in the
     checkpoint, applied state in the lake manifest ledger."""
+    # refuse colliding index roots / MV dirs / table root before any work
+    validate_disjoint_derived_state([cfg])
     # heal the async-lineage crash window (epoch committed, lineage
     # write lost) before the engine starts skipping committed batches
     reconcile_lineage(spark, cfg, ops, spec=spec)

@@ -8,7 +8,7 @@ of the seed: no wall clock, no process entropy.
 
 Perturbations (all seeded, FIXTURES.md §2):
 - hot keys: conversation pick is Zipf-weighted -> a few conv_ids carry
-  a large share of events (skew/salting tests);
+  a large share of events (hot-key skew tests);
 - multi-event keys: several U for one (conv_id, turn_idx), U-after-D,
   I-after-D;
 - duplicates: `dup_rate` of events re-emitted later *within the same

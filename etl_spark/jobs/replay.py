@@ -41,7 +41,7 @@ def ensure_corpus(
 ):
     """Generate (or reuse) the deterministic binlog corpus.
     `zipf_alpha` > ~2 makes a handful of conversations carry most of
-    the stream (the hot-key skew corpus for salting evidence).
+    the stream (the hot-key skew corpus).
     `gen` (or $SPARK_GRAFT_GEN): "driver" (default — the vectorized
     single-process generator, byte-stable with existing caches) or
     "spark" (gen/binlog_spark.py — the distributed path for corpora
@@ -131,7 +131,6 @@ def run(args) -> dict:
     from etl_spark.session import get_spark
 
     zipf = getattr(args, "zipf_alpha", 1.2)
-    salt = getattr(args, "salt_buckets", 0)
     patch_rate = getattr(args, "patch_rate", 0.0)
     routes_n = getattr(args, "routes", 0)
     seg_dir, base_path, ops = ensure_corpus(
@@ -147,7 +146,6 @@ def run(args) -> dict:
         checkpoint_dir=os.path.join(run_dir, "ckpt"),
         num_buckets=args.num_buckets,
         max_files_per_trigger=args.max_files_per_trigger,
-        salt_buckets=salt,
         # partial-image corpora fold patches in the resolve; CoW
         # coalesces in the MERGE, MoR defers the fold to read
         patch_ops=bool(patch_rate),
@@ -211,7 +209,6 @@ def run(args) -> dict:
                 checkpoint_dir=os.path.join(run_dir, name, "ckpt"),
                 num_buckets=args.num_buckets,
                 max_files_per_trigger=args.max_files_per_trigger,
-                salt_buckets=salt,
                 # same patch/write-mode resolution as the single-table
                 # path: without patch_ops a routed --patch-rate corpus
                 # would parse op='P' partial images as FULL images
@@ -305,7 +302,6 @@ def main() -> None:
     p.add_argument("--max-files-per-trigger", type=int, default=4)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--zipf-alpha", type=float, default=1.2)
-    p.add_argument("--salt-buckets", type=int, default=0)
     p.add_argument("--write-mode", choices=["auto", "mor", "cow"], default="auto",
                    help="lake write mode; auto = mor for full-image "
                         "corpora, cow when --patch-rate > 0 (both modes "

@@ -20,8 +20,7 @@ Scale design (10^10 events):
   one shuffle of (left + right) keyed rows and a per-partition sort,
   the same price as any groupBy over the union. No pair space, no
   per-key memory blowup; a hot key degrades to the same single-key
-  sort any windowed op pays (salt upstream if one key dominates, as
-  engine/skew.py does for the CDC resolve).
+  sort any windowed op pays.
 - Ordering is total and deterministic: (ts, side, right payload
   struct), with the right row sorting BEFORE the left row at equal ts
   so backward matches are inclusive, and the greatest right payload

@@ -138,7 +138,8 @@ def pack_shards(
     NOTE this is an EAGER operator: it runs a handful of bounded
     metadata jobs at call time (min/max + one small count aggregate
     per refinement round, all against a persisted 2-column
-    projection of the input) before returning the lazy result."""
+    projection of the input) before returning the lazy result. A NULL
+    `key_col` raises ValueError in the first of those jobs."""
     if shard_budget <= 0:
         raise ValueError(f"shard_budget must be positive, got {shard_budget}")
     clash = {_SZ, _GRP, _GOFF, _EXCL} & set(df.columns)
@@ -154,7 +155,15 @@ def pack_shards(
     # all metadata jobs run against this 2-column projection, read once
     slim = df.select(k.alias(key_col), size_col.cast("long").alias(_SZ)).persist()
     try:
-        lo, hi = slim.agg(F.min(key_col), F.max(key_col)).first()
+        # min/max skip NULLs, so the NULL-key count rides the same job
+        lo, hi, n_rows, n_keyed = slim.agg(
+            F.min(key_col), F.max(key_col), F.count("*"), F.count(key_col)
+        ).first()
+        if n_rows != n_keyed:
+            raise ValueError(
+                f"pack_shards: {n_rows - n_keyed} rows have a NULL "
+                f"{key_col!r}; a NULL key has no place in the key order"
+            )
         if lo is None:
             return df.withColumn(out_col, F.lit(None).cast("long"))
         lo, hi = int(lo), int(hi)

@@ -13,13 +13,11 @@ Design for a 100 TB media corpus:
   parse) and REAL for audio (operators/audiocodec.py — RIFF/WAVE PCM
   round-trip incl. sample-sum decode): `synthesize_images` /
   `synthesize_audio` emit genuine bytes and `decode_image_meta` /
-  `decode_audio_meta` / `decode_features(..., fake=False)` decode them
-  back — and REAL for video (operators/videocodec.py — AVI/MJPEG RIFF
-  round-trip incl. per-frame chunk measurement); `image_histogram`
-  runs the REAL pixel decode into an intensity-histogram feature.
-  `decode_features(fake=True)` keeps a deterministic byte-hash
-  stand-in only for external-lib formats (entropy-coded JPEG scans,
-  H.264) this container cannot decode.
+  `decode_audio_meta` / `decode_features` decode them back — and REAL
+  for video (operators/videocodec.py — AVI/MJPEG RIFF round-trip incl.
+  per-frame chunk measurement); `image_histogram` runs the REAL pixel
+  decode into an intensity-histogram feature. A payload the codecs
+  cannot decode raises.
 
 The reference treats every payload as JSON text (no binary columns);
 this is training-pipeline surface beyond it.
@@ -72,14 +70,6 @@ def media_from_text(df: DataFrame, id_col: str, text_col: str, kind: str = "text
     )
 
 
-def _fake_feature(payload: bytes, dim: int) -> list[float]:
-    """Deterministic stand-in feature: bytes of sha512(payload) scaled
-    to [-1, 1). Stable across runs/engines."""
-    h = hashlib.sha512(payload or b"").digest()
-    raw = (h * ((dim // len(h)) + 1))[:dim]
-    return [(b - 128) / 128.0 for b in raw]
-
-
 def _image_feature(payload: bytes, dim: int) -> list[float]:
     """REAL decode feature: [width, height, channels, bit_depth,
     px_mean] (px_mean -1.0 when the format carries no scan data, i.e.
@@ -100,22 +90,15 @@ def _image_feature(payload: bytes, dim: int) -> list[float]:
     return (vals + [0.0] * dim)[:dim]
 
 
-def decode_features(
-    media: DataFrame, dim: int = 16, fake: bool = True
-) -> DataFrame:
+def decode_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """Decode payloads into fixed-dim feature vectors via mapInPandas
     (Arrow-batched; one Python worker pass per partition, no per-row
-    round trips). `fake=False` runs the REAL image codec
-    (operators/imagecodec.py) — payloads must be PNG/JPEG bytes
-    (ValueError otherwise); `fake=True` is the deterministic byte-hash
-    stand-in for kinds whose codecs need libs this container lacks."""
+    round trips) through the REAL image codec (operators/imagecodec.py)
+    — payloads must be PNG/JPEG bytes (ValueError otherwise)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if fake:
-                feats = [_fake_feature(p, dim) for p in pdf["payload"]]
-            else:
-                feats = [_image_feature(p, dim) for p in pdf["payload"]]
+            feats = [_image_feature(p, dim) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],

@@ -21,7 +21,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def run_level(
     work_dir: str, n_events: int, parallelism: int,
     segment_size: int = 200_000, mft: int = 20,
-    zipf: float = 1.2, salt: int = 0, patch_rate: float = 0.0,
+    zipf: float = 1.2, patch_rate: float = 0.0,
     routes: int = 0,
 ) -> dict:
     # Pin the WHOLE process (JVM task threads + GC + IO + Python
@@ -41,7 +41,6 @@ def run_level(
             "--max-files-per-trigger", str(mft),
             "--parallelism", str(parallelism),
             "--zipf-alpha", str(zipf),
-            "--salt-buckets", str(salt),
             "--patch-rate", str(patch_rate),
             "--routes", str(routes),
         ],
@@ -60,11 +59,9 @@ def main() -> None:
     p_hi = int(sys.argv[3]) if len(sys.argv) > 3 else 4 * p_lo
     work_dir = os.environ.get("SPARK_GRAFT_BENCH_DIR", "/tmp/etl_spark_bench")
     # skew-evidence knobs: SPARK_GRAFT_ZIPF=2.5 makes one conversation
-    # dominate the stream; SPARK_GRAFT_SALT=8 turns on the salted
-    # two-phase resolve. Pair with SPARK_GRAFT_NO_MD=1 so the skew run
-    # doesn't overwrite the headline BENCH.md section.
+    # dominate the stream. Pair with SPARK_GRAFT_NO_MD=1 so the skew
+    # run doesn't overwrite the headline BENCH.md section.
     zipf = float(os.environ.get("SPARK_GRAFT_ZIPF", "1.2"))
-    salt = int(os.environ.get("SPARK_GRAFT_SALT", "0"))
     # partial-image evidence: SPARK_GRAFT_PATCH=0.3 emits 30% of
     # updates as op='P' patches (engine runs the patch fold + CoW)
     patch_rate = float(os.environ.get("SPARK_GRAFT_PATCH", "0"))
@@ -84,9 +81,9 @@ def main() -> None:
     # full per-pair spread is printed and recorded in BENCH.md.
     pairs = []
     for _ in range(repeats):
-        lo = run_level(work_dir, n_events, p_lo, zipf=zipf, salt=salt,
+        lo = run_level(work_dir, n_events, p_lo, zipf=zipf,
                        patch_rate=patch_rate, routes=routes)
-        hi = run_level(work_dir, n_events, p_hi, zipf=zipf, salt=salt,
+        hi = run_level(work_dir, n_events, p_hi, zipf=zipf,
                        patch_rate=patch_rate, routes=routes)
         print(json.dumps(lo))
         print(json.dumps(hi))

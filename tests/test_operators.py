@@ -181,20 +181,17 @@ def test_lang_id_heuristic(spark, docs):
 
 
 def test_multimodal_decode_plumbing(spark, docs):
-    media = MM.media_from_text(docs, "doc_id", "text")
-    feats = MM.decode_features(media, dim=8, fake=True).collect()
-    assert len(feats) == len(DOCS)
-    by_id = {r["media_id"]: r for r in feats}
+    # media_from_text: n_bytes and sha256 metadata match the UTF-8 bytes
+    media = {r["media_id"]: r for r in MM.media_from_text(docs, "doc_id", "text").collect()}
+    assert len(media) == len(DOCS)
     for doc_id, txt in DOCS:
-        r = by_id[doc_id]
-        assert len(r["feature"]) == 8
-        exp = MM._fake_feature(txt.encode(), 8)
-        assert [round(float(x), 6) for x in r["feature"]] == [round(x, 6) for x in exp]
-        assert r["n_bytes"] == len(txt.encode())
-    # sha256 metadata matches hashlib
-    metas = {r["media_id"]: r["sha256"] for r in media.collect()}
-    for doc_id, txt in DOCS:
-        assert metas[doc_id] == hashlib.sha256(txt.encode()).hexdigest()
+        assert media[doc_id]["n_bytes"] == len(txt.encode())
+        assert media[doc_id]["sha256"] == hashlib.sha256(txt.encode()).hexdigest()
+    # decode_features carries media_id / kind / n_bytes through unchanged
+    images = MM.synthesize_images(docs, "doc_id")
+    meta = {r["media_id"]: (r["kind"], r["n_bytes"]) for r in images.collect()}
+    feats = MM.decode_features(images, dim=8).collect()
+    assert {r["media_id"]: (r["kind"], r["n_bytes"]) for r in feats} == meta
 
 
 def test_image_codec_round_trip_pure():
@@ -235,11 +232,11 @@ def test_synthesize_and_decode_images_spark(spark, docs):
 
 
 def test_decode_features_real_codec(spark, docs):
-    """fake=False runs the REAL image codec: feature head is
+    """decode_features runs the REAL image codec: feature head is
     [w, h, channels, bit_depth, px_mean]."""
     media = MM.synthesize_images(docs, "doc_id")
     feats = {r["media_id"]: r["feature"]
-             for r in MM.decode_features(media, dim=8, fake=False).collect()}
+             for r in MM.decode_features(media, dim=8).collect()}
     for doc_id, _txt in DOCS:
         w, h = 4 + doc_id % 29, 4 + (doc_id * 7) % 23
         f = feats[doc_id]
@@ -253,7 +250,7 @@ def test_decode_features_real_codec(spark, docs):
     # non-image payloads are rejected, not silently featurized
     text_media = MM.media_from_text(docs, "doc_id", "text")
     with pytest.raises(Exception):  # ValueError inside the worker
-        MM.decode_features(text_media, fake=False).collect()
+        MM.decode_features(text_media).collect()
 
 
 def test_audio_codec_round_trip_pure():
@@ -955,6 +952,19 @@ def test_pack_shards_empty_bad_budget_and_collisions(spark):
     clash = df.withColumn("__ps_grp", F.lit(1))
     with pytest.raises(ValueError, match="reserves"):
         pack_shards(clash, "doc_id", F.col("n_tok"), 10)
+
+
+def test_pack_shards_refuses_null_keys(spark):
+    """A NULL key has no position in the key order: refused with a
+    clear error, not a driver-side TypeError from sorting the NULL
+    group next to the integer ones."""
+    from etl_spark.operators.curation import pack_shards
+
+    df = spark.createDataFrame(
+        [(1, 5), (None, 7), (3, 2)], "doc_id long, n_tok int"
+    )
+    with pytest.raises(ValueError, match="1 rows have a NULL 'doc_id'"):
+        pack_shards(df, "doc_id", F.col("n_tok"), 10, n_groups=2)
 
 
 def test_hash_ops_refuse_null_keys_and_bad_weights(spark):

@@ -98,7 +98,9 @@ def test_fold_patch_null_assignment_survives(spark):
     assert r["a"] is None and r["b"] == "b5" and r["_set_a"]
 
 
-def test_fold_salted_matches_plain(spark):
+def test_fold_lineage_counts(spark):
+    """The fold's lineage tallies ride the same aggregation: `_nev` raw
+    events and `_nnew` distinct LSNs outside the covered ranges."""
     rows = [
         ("k1", 1, "I", "a1", True, "b1", True),
         ("k1", 4, "P", "a4", True, None, False),
@@ -106,19 +108,14 @@ def test_fold_salted_matches_plain(spark):
         ("k2", 2, "I", "x", True, "y", True),
         ("k2", 3, "D", None, True, None, True),
     ]
-    plain = {
+    out = {
         r["k"]: r.asDict()
         for r in resolve_patch_fold(_fold_frame(spark, rows), ["k"], with_counts=True,
                                     covered_lsn_ranges=[]).collect()
     }
-    salted = {
-        r["k"]: r.asDict()
-        for r in resolve_patch_fold(_fold_frame(spark, rows), ["k"], salt_buckets=4,
-                                    with_counts=True, covered_lsn_ranges=[]).collect()
-    }
-    assert plain == salted
-    assert plain["k1"]["a"] == "a4" and plain["k1"]["b"] == "b6"
-    assert plain["k1"]["_nev"] == 3 and plain["k1"]["_nnew"] == 3
+    assert out["k1"]["a"] == "a4" and out["k1"]["b"] == "b6"
+    assert out["k1"]["_nev"] == 3 and out["k1"]["_nnew"] == 3
+    assert (out["k2"]["op"], out["k2"]["_nev"], out["k2"]["_nnew"]) == ("D", 2, 2)
 
 
 # ----------------------------------------------- engine end-to-end

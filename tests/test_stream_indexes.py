@@ -247,6 +247,30 @@ def test_routed_refuses_shared_derived_dirs():
         validate_disjoint_derived_state([cfg, mk("/tmp/shared")])
 
 
+def test_run_replay_refuses_colliding_derived_dirs(spark, tmp_path):
+    """One config whose index root equals its own MV dir, or whose MV
+    dir is its own table root, is refused before the stream starts."""
+    import pytest
+
+    from etl_spark.engine.stream import run_replay
+
+    root = str(tmp_path / "t")
+    for kw in (
+        dict(
+            index_specs=(IndexSpec("dedup", "/tmp/shared", "id", "text"),),
+            mv_specs=(MVSpec("/tmp/shared", ("role",)),),
+        ),
+        dict(mv_specs=(MVSpec(root, ("role",)),)),
+    ):
+        cfg = EngineConfig(
+            table_root=root, manifest_dir=str(tmp_path / "m"),
+            checkpoint_dir=str(tmp_path / "c"), **kw,
+        )
+        with pytest.raises(ValueError, match="shared across route configs"):
+            run_replay(spark, str(tmp_path / "segments"), cfg, [])
+    assert not os.path.exists(tmp_path / "c")
+
+
 def test_refresh_rejects_shared_index_root():
     """Two specs pointing at one index root would fold two different
     derivations into the same table — refused before any work."""
