@@ -33,8 +33,8 @@ class EngineConfig:
     # count exceeds this (0 = never; run as external maintenance)
     compact_max_files_per_bucket: int = 0
     # compaction cadence: check the file-count bound every K batches
-    # (main-thread, serialized with merges; independent of async
-    # lineage — compaction commits table versions, lineage does not)
+    # (runs inside the batch after its lineage write, serialized with
+    # the merges — compaction commits table versions)
     compact_every_batches: int = 1
     # dead-letter directory for poison events (malformed payload /
     # unknown schema_version). None = off (zero cost); see
@@ -56,11 +56,6 @@ class EngineConfig:
     # (lake/table.py _resolve_versions patch fold) — O(batch) write
     # cost for partial-update streams.
     patch_ops: bool = False
-    # overlap batch N's lineage rollup with batch N+1's source read
-    # (depth-1 commit pipelining; crash-safe — in-batch heal plus
-    # startup reconciliation, see engine/apply.py reconcile_lineage).
-    # Lineage readers drain in-flight writes first.
-    async_lineage: bool = True
     # stream-maintained persisted indexes (engine/indexes.IndexSpec):
     # after a micro-batch's MERGE commits, each spec'd dedup/near-dup/
     # ANN index folds that batch's change feed into itself —
@@ -76,5 +71,6 @@ class EngineConfig:
     # signed deltas after the MERGE commits. Empty = off.
     mv_specs: tuple = ()
     # refresh cadence: fold the feed every K batches (amortizes the
-    # per-index/-MV fixed cost when micro-batches are small)
+    # per-index/-MV fixed cost when micro-batches are small); a
+    # bounded replay folds the tail batches once at the end
     index_refresh_every_batches: int = 1

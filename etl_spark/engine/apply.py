@@ -11,9 +11,11 @@ Exactly-once: Spark may re-run a batch_id after a crash; idempotence
 comes from (a) the lake manifest's committed-batch ledger (a replayed
 batch_id is a no-op commit), (b) the MERGE LSN-monotonicity guard, and
 (c) lineage written per batch_id with atomic overwrite (SURVEY.md
-§7.2). A replayed epoch whose ledger entry exists but whose lineage
-file is missing (crash in the window between the two commits)
-recomputes and rewrites the lineage — the MERGE itself stays a no-op.
+§7.2). Lineage is written in-batch, right after the MERGE, and the
+epoch commits only once this function returns. A crash between the
+two commits leaves an uncommitted epoch; Spark replays it, and the
+replay finds the ledger entry without a lineage file, so it recomputes
+and rewrites the lineage — the MERGE itself stays a no-op.
 
 Per-batch fixed-cost budget (the non-scaling `c` term that caps
 scaling efficiency): ONE MERGE write action runs the whole parse ->
@@ -25,17 +27,12 @@ traced `replay_bulk` benchmark run (perfbench/) counts 7 Spark jobs
 per MoR batch: 5 under the MERGE, ending with the staging write, and
 2 for the lineage rollup. (A per-version Union parse counted 10 there:
 every schema version in the batch added its own raw-exchange job.)
-Batch stats come from parquet footers (driver-side, no job); the
-lineage rollup of batch N runs in a background thread overlapped with
-batch N+1's source read and parse (commit pipelining, depth 1).
+Batch stats come from parquet footers (driver-side, no job).
 """
 
 from __future__ import annotations
 
-import concurrent.futures
 import os
-import sys
-import threading
 import time
 from urllib.parse import unquote, urlparse
 
@@ -51,37 +48,20 @@ from etl_spark.cdc_schema import (
 )
 from etl_spark.config import EngineConfig
 from etl_spark.engine import lineage
+from etl_spark.engine.indexes import refresh_derived
 from etl_spark.engine.normalize import normalize_text
 from etl_spark.engine.quarantine import max_known_version, quarantine_split
 from etl_spark.engine.resolve import resolve_max_lsn, resolve_patch_fold
 from etl_spark.lake.merge import merge_into
 from etl_spark.lake.table import LakeTable, spark_type
 
-# one in-flight lineage writer per table (commit pipelining, depth 1)
-_PENDING: dict[str, concurrent.futures.Future] = {}
-_EXECUTOR = concurrent.futures.ThreadPoolExecutor(
-    max_workers=4, thread_name_prefix="lineage"
-)
-_LOCK = threading.Lock()
-
 
 def drain_pending(table_root: str) -> None:
-    """Join the previous batch's background lineage write for this
-    table; re-raises any error it hit."""
-    with _LOCK:
-        fut = _PENDING.pop(table_root, None)
-    if fut is not None:
-        fut.result()
-
-
-def drain_all_pending() -> None:
-    """Join every in-flight lineage write (call before reading lineage
-    or shutting down)."""
-    with _LOCK:
-        futs = list(_PENDING.values())
-        _PENDING.clear()
-    for fut in futs:
-        fut.result()
+    """No-op: lineage is written inside `apply_batch`, so nothing is
+    ever in flight. The name survives only because the benchmark
+    tracer (perfbench/layers.py) wraps `engine.apply.drain_pending` and
+    `engine.stream.drain_pending` for its `lineage.drain_wait_s`
+    metric; it goes away with that wrap in the next benchmark change."""
 
 
 def parse_events(
@@ -358,16 +338,6 @@ def _stats_from_agg(batch_df: DataFrame) -> dict:
     }
 
 
-_TIMING = bool(os.environ.get("SPARK_GRAFT_TIMING"))
-
-
-def _tlog(batch_id: int, phase: str, t0: float) -> float:
-    t = time.time()
-    if _TIMING:
-        print(f"#T batch={batch_id} {phase}={t - t0:.3f}s", file=sys.stderr)
-    return t
-
-
 def _prior_covered_ranges(
     committed: dict[str, dict], source_id: str, batch_id: int
 ) -> list[tuple[int, int]]:
@@ -412,7 +382,6 @@ def apply_batch(
     stats_override: dict | None = None,
     input_partitioned: bool = False,
 ) -> None:
-    t0 = time.time()
     table = LakeTable(spark, cfg.table_root, branch=cfg.branch)
     batch_key = f"{source_id}:{batch_id}"
 
@@ -422,7 +391,6 @@ def apply_batch(
         # replayed epoch after crash. The MERGE is already committed; if
         # the crash hit the window before the lineage write, fall
         # through to recompute it (merge_into below no-ops via ledger).
-        drain_pending(cfg.table_root)
         if lineage.has_batch_manifest(cfg.manifest_dir, batch_id):
             return
 
@@ -430,7 +398,6 @@ def apply_batch(
     # slim aggregation for non-file frames or when the stream was
     # transformed upstream (watermark dedup drops rows the footers
     # would still count)
-    t = _tlog(batch_id, "drain+ledger", t0)
     use_footers = footer_stats and not cfg.use_watermark_dedup
     stats_src = stats_override
     n_src_files = None
@@ -462,11 +429,9 @@ def apply_batch(
             f"prior batches already covered up to {covered[-1][1]}; "
             f"for cross-segment re-delivery enable use_watermark_dedup"
         )
-    t = _tlog(batch_id, "stats", t)
 
     # 1. schema evolution due at this LSN horizon (metadata-only commits)
     target_version = evolve_due_ops(table, ops, max_lsn)
-    t = _tlog(batch_id, "evolve", t)
 
     # schema versions possibly present: version is monotone in LSN, so
     # the footer min/max of schema_version bounds the decode set,
@@ -487,7 +452,6 @@ def apply_batch(
         batch_df, n_quarantined = quarantine_split(
             batch_df, cfg.quarantine_dir, ops, batch_id, spec=spec
         )
-        t = _tlog(batch_id, "quarantine", t)
         if n_quarantined >= stats_src["events_in"] or lo > hi:
             # whole batch was poison: nothing to apply, but the batch
             # still covered an LSN span — without a ledger row the
@@ -590,135 +554,45 @@ def apply_batch(
     }
 
     # 6. MERGE into the lake (bucket-pruned CoW / O(batch) MoR append;
-    #    atomic ledgered commit) — the batch's one full-pipeline job
+    #    atomic ledgered commit) — the batch's one full-pipeline job —
+    # 7. then the per-partition lineage manifest (idempotent per
+    #    batch_id), a small rollup over the persisted resolved set
     try:
         version = merge_into(table, resolved, batch_key=batch_key, batch_stats=stats)
-    except BaseException:
-        resolved.unpersist()
-        raise
-    t = _tlog(batch_id, "merge", t)
-
-    # join the PREVIOUS batch's background lineage write only now —
-    # this batch's read/parse/resolve/merge all overlapped it. Raising
-    # its error here (post-merge, pre-commit of this epoch) keeps
-    # failures loud while hiding the rollup's latency entirely.
-    drain_pending(cfg.table_root)
-    t = _tlog(batch_id, "drain_prev", t)
-
-    def _finish() -> None:
-        tf = time.time()
         try:
-            # 7. per-partition lineage manifest (idempotent per batch_id)
-            try:
-                lineage.write_batch_manifest(
-                    spark, cfg.manifest_dir, table, resolved, batch_id, stats, version
-                )
-            except Exception:
-                # one synchronous retry: a transient failure here would
-                # otherwise leave a permanent lineage gap (this epoch
-                # commits and is never replayed)
-                time.sleep(1.0)
-                lineage.write_batch_manifest(
-                    spark, cfg.manifest_dir, table, resolved, batch_id, stats, version
-                )
-        finally:
-            resolved.unpersist()
-            _tlog(batch_id, "lineage", tf)
+            lineage.write_batch_manifest(
+                spark, cfg.manifest_dir, table, resolved, batch_id, stats, version
+            )
+        except Exception:
+            # one retry for a transient failure; a second failure
+            # fails this epoch, and Spark replays it (the MERGE no-ops
+            # via the ledger and the lineage is recomputed)
+            time.sleep(1.0)
+            lineage.write_batch_manifest(
+                spark, cfg.manifest_dir, table, resolved, batch_id, stats, version
+            )
+    finally:
+        resolved.unpersist()
 
-    # lineage is a small rollup over the persisted resolved set; run it
-    # in the background so the streaming engine can commit this epoch
-    # and start reading batch N+1 while it lands. Safe because lineage
-    # is idempotent-overwrite, a crash in the window is healed by the
-    # has_batch+has_batch_manifest recheck above plus the startup
-    # reconciliation in run_replay (reconcile_lineage — covers the case
-    # where the crash lands AFTER this epoch commits, so the batch is
-    # never replayed), and the lineage write commits no table version
-    # (driver-side parquet only), so it cannot race a manifest commit.
-    if cfg.async_lineage:
-        with _LOCK:
-            _PENDING[cfg.table_root] = _EXECUTOR.submit(_finish)
-    else:
-        _finish()
-
-    # 8. merge-on-read maintenance every K batches, in the MAIN thread:
-    # compaction commits a table version, so it must serialize with the
-    # merges (which it does here by construction) — but it does not
-    # conflict with the in-flight lineage write above, which only
-    # produces a driver-side parquet file.
+    # 8. merge-on-read maintenance every K batches: compaction commits
+    # a table version, so it must serialize with the merges (which it
+    # does here by construction).
     if cfg.compact_max_files_per_bucket and (
         (batch_id + 1) % max(1, cfg.compact_every_batches) == 0
     ):
         table.compact(cfg.compact_max_files_per_bucket)
-        t = _tlog(batch_id, "compact", t)
 
-    # 9. stream-maintained persisted indexes (engine/indexes.py): fold
-    # this batch's change feed into each spec'd dedup/near-dup/ANN
-    # index. Main thread for the same reason as compaction — index
-    # refreshes commit versions (on the INDEX tables) — and safely
-    # AFTER this batch's merge, so the fold window always ends at a
-    # committed version. Crash composition: a crash here leaves the
-    # index cursor behind and the next refresh covers both versions; a
-    # replayed batch's MERGE no-ops via the ledger, so the refresh
-    # sees no new version and no-ops via its cursor.
-    if (cfg.index_specs or cfg.mv_specs) and (
-        (batch_id + 1) % max(1, cfg.index_refresh_every_batches) == 0
-    ):
-        from etl_spark.engine.indexes import refresh_indexes, refresh_mvs
-
-        if cfg.index_specs:
-            refresh_indexes(spark, table, cfg.index_specs)
-            t = _tlog(batch_id, "index_refresh", t)
-        if cfg.mv_specs:
-            refresh_mvs(table, cfg.mv_specs)
-            t = _tlog(batch_id, "mv_refresh", t)
-
-
-def reconcile_lineage(
-    spark,
-    cfg: EngineConfig,
-    ops: list[SchemaOp],
-    source_id: str = "cdc",
-    spec: SourceSpec = TRANSCRIPTS,
-) -> list[int]:
-    """Startup reconciliation for the async-lineage crash window: a
-    crash AFTER epoch N committed to the streaming checkpoint but
-    BEFORE its background lineage write landed means batch N is never
-    replayed, so the in-batch heal path never runs — without this, the
-    lineage manifest for N would be permanently missing and
-    check_invariants would report a phantom LSN gap.
-
-    For every ledger-committed batch of this source whose lineage file
-    is absent, the batch's exact file set is recovered from the
-    checkpoint's offset log and re-pushed through apply_batch (the
-    MERGE no-ops via the ledger; only the lineage rollup recomputes —
-    at the CURRENT table schema, which affects the checksum column
-    only, never the LSN/count invariants). Call before starting the
-    stream; run_replay does. Returns the reconciled batch ids."""
-    if not LakeTable.exists(cfg.table_root):
-        return []
-    table = LakeTable(spark, cfg.table_root, branch=cfg.branch)
-    prefix = f"{source_id}:"
-    healed: list[int] = []
-    for k in sorted(table.manifest().committed_batches):
-        if not k.startswith(prefix):
-            continue
-        try:
-            bid = int(k[len(prefix):])
-        except ValueError:
-            continue
-        if lineage.has_batch_manifest(cfg.manifest_dir, bid):
-            continue
-        files = _batch_files_from_checkpoint(cfg.checkpoint_dir, bid)
-        if not files:
-            raise RuntimeError(
-                f"lineage lost for committed batch {bid} and its file set "
-                f"is not in the checkpoint offset log ({cfg.checkpoint_dir}) "
-                "— cannot reconcile; table state itself is intact"
-            )
-        batch_df = spark.read.schema(spec.binlog_schema()).parquet(*files)
-        apply_batch(
-            spark, cfg, ops, batch_df, bid, source_id=source_id, spec=spec
-        )
-        drain_pending(cfg.table_root)
-        healed.append(bid)
-    return healed
+    # 9. stream-maintained persisted indexes and MVs (engine/
+    # indexes.py): fold this batch's change feed into each spec'd
+    # dedup/near-dup/ANN index and MV. Serialized with the merges for
+    # the same reason as compaction — index refreshes commit versions
+    # (on the INDEX tables) — and safely AFTER this batch's merge, so
+    # the fold window always ends at a committed version. Crash
+    # composition: a crash here leaves the index cursor behind and the
+    # next refresh covers both versions; a replayed batch's MERGE
+    # no-ops via the ledger, so the refresh sees no new version and
+    # no-ops via its cursor. With a cadence > 1, a bounded replay
+    # folds the tail batches once at the end of the stream
+    # (run_replay / run_replay_routed).
+    if (batch_id + 1) % max(1, cfg.index_refresh_every_batches) == 0:
+        refresh_derived(spark, cfg, table)

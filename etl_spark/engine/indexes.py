@@ -192,3 +192,20 @@ def refresh_indexes(spark, table: LakeTable, specs) -> list[dict]:
             )
         out.append({"kind": s.kind, "root": s.root, **r})
     return out
+
+
+def refresh_derived(spark, cfg, table: LakeTable | None = None) -> None:
+    """Bring every index and MV spec'd on `cfg` (an EngineConfig) up to
+    its table's current version. `apply_batch` calls it on the refresh
+    cadence; a bounded replay calls it once more at the end of the
+    stream, so the batches after the last cadence point are folded
+    too. A no-op when nothing is spec'd, and a cursor no-op when the
+    derived state is already current."""
+    if not (cfg.index_specs or cfg.mv_specs):
+        return
+    if table is None:
+        table = LakeTable(spark, cfg.table_root, branch=cfg.branch)
+    if cfg.index_specs:
+        refresh_indexes(spark, table, cfg.index_specs)
+    if cfg.mv_specs:
+        refresh_mvs(table, cfg.mv_specs)

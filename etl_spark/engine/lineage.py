@@ -205,10 +205,6 @@ def read_manifest(
     """Read one manifest dir, or the UNION of several (the routed
     mode's invariant surface: N per-entity ledgers over one shared
     global LSN sequence are individually sparse but dense together)."""
-    # join any in-flight async lineage writers before reading
-    from etl_spark.engine.apply import drain_all_pending
-
-    drain_all_pending()
     dirs = [manifest_dir] if isinstance(manifest_dir, str) else list(manifest_dir)
     paths = [
         os.path.join(d, f)

@@ -33,12 +33,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from etl_spark.cdc_schema import SchemaOp, SourceSpec
 from etl_spark.config import EngineConfig
-from etl_spark.engine.apply import (
-    _batch_files_from_checkpoint,
-    apply_batch,
-    drain_pending,
-)
-from etl_spark.engine import lineage
+from etl_spark.engine.apply import apply_batch
+from etl_spark.engine.indexes import refresh_derived, validate_disjoint_derived_state
+from etl_spark.engine.stream import await_bounded
 from etl_spark.lake.table import spark_type
 
 Route = tuple[EngineConfig, list[SchemaOp], SourceSpec]
@@ -98,11 +95,10 @@ def apply_batch_routed(
 
     The per-entity applies run CONCURRENTLY from driver threads (up
     to `max_concurrency`): the targets are disjoint tables, so the
-    applies share no table state (`apply_batch`'s lineage-pipelining
-    registry is lock-protected and keyed by table_root), and Spark's
-    scheduler interleaves their jobs — entity A's driver-side
-    planning/commit windows overlap entity B's executor work instead
-    of serializing N per-apply fixed costs per batch (measured: 4
+    applies share no table state, and Spark's scheduler interleaves
+    their jobs — entity A's driver-side planning/commit windows
+    overlap entity B's executor work instead of serializing N
+    per-apply fixed costs per batch (measured: 4
     sequential 1M-event applies left a ~10 s serial fraction per
     batch at 4 cores — scaling efficiency 0.776; concurrent applies
     recover it). Any apply failure fails the whole epoch loud (the
@@ -210,52 +206,6 @@ def apply_batch_routed(
         batch_df.unpersist()
 
 
-def reconcile_lineage_routed(
-    spark: SparkSession,
-    routes: dict[str, Route],
-    checkpoint_dir: str,
-    entity_col: str = ENTITY_COL,
-) -> list[int]:
-    """Routed twin of `engine.apply.reconcile_lineage` (the async-
-    lineage crash-window heal): a crash AFTER epoch N committed to the
-    shared streaming checkpoint but BEFORE an entity's background
-    lineage write landed leaves that entity's manifest missing
-    forever — the epoch is never replayed, so the in-batch heal never
-    runs. For every route, find ledger-committed batches whose lineage
-    file is absent, recover each batch's file set from the checkpoint
-    offset log, and re-push it through apply_batch_routed (merges
-    no-op via the per-entity ledgers; only the lineage recomputes).
-    Returns the healed batch ids."""
-    from etl_spark.lake.table import LakeTable
-
-    missing: set[int] = set()
-    for name, (cfg, _, _) in routes.items():
-        if not LakeTable.exists(cfg.table_root):
-            continue
-        table = LakeTable(spark, cfg.table_root, branch=cfg.branch)
-        prefix = f"cdc-{name}:"
-        for k in table.manifest().committed_batches:
-            if not k.startswith(prefix):
-                continue
-            try:
-                bid = int(k[len(prefix):])
-            except ValueError:
-                continue
-            if not lineage.has_batch_manifest(cfg.manifest_dir, bid):
-                missing.add(bid)
-    healed: list[int] = []
-    for bid in sorted(missing):
-        files = _batch_files_from_checkpoint(checkpoint_dir, bid)
-        if not files:
-            continue
-        df = spark.read.schema(routed_binlog_schema(routes, entity_col)).parquet(*files)
-        apply_batch_routed(spark, routes, df, bid, entity_col, unrouted="ignore")
-        healed.append(bid)
-    for cfg, _, _ in routes.values():
-        drain_pending(cfg.table_root)
-    return healed
-
-
 def run_replay_routed(
     spark: SparkSession,
     segments_dir: str,
@@ -276,14 +226,15 @@ def run_replay_routed(
     `use_watermark_dedup`, the SHARED stream dedups on
     (entity, lsn) — LSNs are unique within an entity's log — before
     the split, under one watermark (mixed watermark strings across
-    flagged routes are a config error)."""
-    from etl_spark.engine.indexes import validate_disjoint_derived_state
+    flagged routes are a config error).
 
+    Like `run_replay`, each route whose `index_refresh_every_batches`
+    is > 1 refreshes its indexes and MVs once more after the stream
+    ends."""
     # concurrent per-entity applies refresh derived state (indexes/
     # MVs) from driver threads — shared dirs across routes would be
     # silent corruption, so refuse them before any work starts
     validate_disjoint_derived_state(cfg for cfg, _, _ in routes.values())
-    reconcile_lineage_routed(spark, routes, checkpoint_dir, entity_col)
     stream = (
         spark.readStream.schema(routed_binlog_schema(routes, entity_col))
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -308,6 +259,7 @@ def run_replay_routed(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    await_bounded(spark, q)
     for cfg, _, _ in routes.values():
-        drain_pending(cfg.table_root)
+        if cfg.index_refresh_every_batches > 1:
+            refresh_derived(spark, cfg)

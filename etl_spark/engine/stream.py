@@ -11,14 +11,17 @@ incremental scan the reference hand-rolled with a bucket listing and
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 from pyspark.sql import DataFrame, functions as F
 
 from etl_spark.cdc_schema import TRANSCRIPTS, SchemaOp, SourceSpec
 from etl_spark.config import EngineConfig
-from etl_spark.engine.apply import apply_batch, drain_pending, reconcile_lineage
-from etl_spark.engine.indexes import validate_disjoint_derived_state
+from etl_spark.engine.apply import apply_batch
+# unused: the perfbench tracer wraps this name (see its no-op docstring)
+from etl_spark.engine.apply import drain_pending  # noqa: F401
+from etl_spark.engine.indexes import refresh_derived, validate_disjoint_derived_state
 from etl_spark.lake.table import spark_type
 
 
@@ -58,6 +61,23 @@ def binlog_from_kafka(df: DataFrame, spec: SourceSpec = TRANSCRIPTS) -> DataFram
     return parsed.select(*cols)
 
 
+def await_bounded(spark: SparkSession, q) -> None:
+    """Wait for a bounded (availableNow) query to stop, then for Spark's
+    listener bus to hand every event the query posted to its
+    listeners. The query posts its last progress event before it
+    terminates, but a `StreamingQueryListener` receives it
+    asynchronously (about 0.1 s later on a 4-core host): without the
+    wait, a caller that reads its listener right after the replay
+    misses the last batch, and the listener sees it during the next
+    replay instead. A listener still busy after 10 s does not fail the
+    replay."""
+    q.awaitTermination()
+    try:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    except Py4JJavaError:
+        pass
+
+
 def run_replay(
     spark: SparkSession,
     segments_dir: str,
@@ -70,12 +90,16 @@ def run_replay(
     """Tail the binlog segment directory and apply every micro-batch.
     `available_now=True` = bounded replay (drain all segments, then
     stop); False = continuous tail. Resumable: offsets live in the
-    checkpoint, applied state in the lake manifest ledger."""
+    checkpoint, applied state in the lake manifest ledger.
+
+    With `index_refresh_every_batches` > 1, a bounded replay refreshes
+    the spec'd indexes and MVs once more after the last batch, so the
+    batches after the last cadence point are not left out. The
+    continuous tail returns the running query; a caller who stops it
+    owns that final refresh (`engine.indexes.refresh_derived(spark,
+    cfg)`)."""
     # refuse colliding index roots / MV dirs / table root before any work
     validate_disjoint_derived_state([cfg])
-    # heal the async-lineage crash window (epoch committed, lineage
-    # write lost) before the engine starts skipping committed batches
-    reconcile_lineage(spark, cfg, ops, spec=spec)
     stream = (
         spark.readStream.schema(spec.binlog_schema())
         .option("maxFilesPerTrigger", cfg.max_files_per_trigger)
@@ -93,12 +117,12 @@ def run_replay(
         lambda df, bid: apply_batch(spark, cfg, ops, df, bid, spec=spec)
     ).option("checkpointLocation", cfg.checkpoint_dir)
     if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        drain_pending(cfg.table_root)  # join the last batch's lineage
+        await_bounded(spark, writer.trigger(availableNow=True).start())
+        if cfg.index_refresh_every_batches > 1:
+            refresh_derived(spark, cfg)
     else:
-        # continuous tail: caller owns the query; stop with
-        # q.stop() then drain_pending(cfg.table_root)
+        # continuous tail: caller owns the query (and the final
+        # derived-state refresh after q.stop())
         q = writer.trigger(processingTime=processing_time).start()
         return q
 

@@ -130,7 +130,7 @@ CDC replay of the deterministic seeded binlog ({n_events:,} distinct
 change events, dup_rate 3%, disorder window 16, canonical 3-op schema
 evolution) through the full engine path (streaming file source →
 foreachBatch: version-routed parse → vectorized normalize → max-LSN
-resolve → MERGE → pipelined lineage manifest), identical input
+resolve → MERGE → lineage manifest), identical input
 corpus, two parallelism levels in separate JVMs (levels run
 back-to-back as a pair; median pair of {repeats} by efficiency
 reported, spread {spread} — the sandbox hypervisor shows CPU-steal
@@ -182,9 +182,8 @@ of truly serial cost per run — single-queue virtio disk for the
 corpus read (zstd segments minimize bytes), streaming offset/commit
 log fsyncs, and per-batch driver planning. On a multi-executor
 cluster each executor owns an independent disk/network path and the
-driver plans batch N+1 while executors run batch N (the engine
-already overlaps its lineage rollup the same way), so the c term is
-the sandbox's, not the design's.
+driver plans batch N+1 while executors run batch N, so the c term
+is the sandbox's, not the design's.
 """
     if os.environ.get("SPARK_GRAFT_NO_MD"):
         return

@@ -157,8 +157,9 @@ def main():
         bare = _run(spark, work, seg, docs, "bare", with_derived=False)
         end = _end_refresh(spark, work, "bare")
         derived = _run(spark, work, seg, docs, "derived", with_derived=True)
-        # the amortized arm's cadence must divide n_segments, or the
-        # tail batches are never folded and the arm under-reports
+        # a cadence that divides n_segments keeps every refresh window
+        # the same size (a bounded replay folds a shorter tail window
+        # once at the end)
         cadence = max(2, n_segments // 2)
         while n_segments % cadence:
             cadence -= 1

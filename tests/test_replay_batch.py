@@ -103,7 +103,7 @@ def test_crash_window_heals_missing_lineage(spark, tmp_path):
     import os
 
     from etl_spark.engine import lineage as L
-    from etl_spark.engine.apply import apply_batch, drain_all_pending
+    from etl_spark.engine.apply import apply_batch
     from etl_spark.lake.table import LakeTable
 
     g = GenConfig(
@@ -126,7 +126,6 @@ def test_crash_window_heals_missing_lineage(spark, tmp_path):
         "schema_version", F.col("schema_version").cast("int")
     )
     apply_batch(spark, cfg, ops, df, batch_id=0)
-    drain_all_pending()
     state_before = final_state(spark, cfg).toPandas()
     v_before = LakeTable(spark, cfg.table_root).current_version()
     lf = os.path.join(cfg.manifest_dir, "batch-0000000000.parquet")
@@ -134,7 +133,6 @@ def test_crash_window_heals_missing_lineage(spark, tmp_path):
     os.remove(lf)  # simulate crash between ledger commit and lineage write
 
     apply_batch(spark, cfg, ops, df, batch_id=0)  # replayed epoch
-    drain_all_pending()
     assert os.path.exists(lf), "lineage must be healed on replay"
     assert LakeTable(spark, cfg.table_root).current_version() == v_before
     pd.testing.assert_frame_equal(final_state(spark, cfg).toPandas(), state_before)

@@ -271,13 +271,18 @@ def test_routed_unknown_entity_fails_loud(spark, tmp_path):
 
 
 def test_routed_reconcile_heals_lost_lineage(spark, tmp_path):
-    """Routed twin of the async-lineage crash-window heal: delete one
-    entity's lineage manifest for a committed batch (the crash left
-    the epoch committed but the background write lost) and re-run the
-    routed replay — reconcile_lineage_routed rebuilds it from the
-    checkpoint offset log before the stream starts skipping committed
-    batches."""
+    """Routed crash-window heal by epoch replay: a crash after entity
+    B's MERGE but before its lineage write leaves the epoch
+    uncommitted, so Spark re-pushes the same batch id through
+    apply_batch_routed. B's merge then no-ops via its ledger (table
+    version unchanged) and only its lineage file is rebuilt."""
     import os
+
+    import pytest
+
+    from etl_spark.engine.apply import _batch_files_from_checkpoint
+    from etl_spark.engine.route import apply_batch_routed, routed_binlog_schema
+    from etl_spark.lake.table import LakeTable
 
     gA = GenConfig(seed=51, n_convs=4, n_events=80, segment_size=20)
     gB = GenConfig(seed=52, n_convs=3, n_events=80, segment_size=20)
@@ -294,6 +299,7 @@ def test_routed_reconcile_heals_lost_lineage(spark, tmp_path):
     bootstrap(spark, cfgB, baseB)
     ckpt = str(tmp_path / "ckpt")
     run_replay_routed(spark, seg_dir, routes, ckpt, max_files_per_trigger=1)
+    vB = LakeTable(spark, cfgB.table_root).current_version()
 
     # simulate the crash window: batch 1's lineage for entity B is gone
     # (these entities carry their OWN dense LSN spaces, so B's ledger
@@ -301,14 +307,16 @@ def test_routed_reconcile_heals_lost_lineage(spark, tmp_path):
     victim = os.path.join(cfgB.manifest_dir, "batch-0000000001.parquet")
     assert os.path.exists(victim)
     os.remove(victim)
-    import pytest
-
     with pytest.raises(Exception):
         lineage.check_invariants(spark, cfgB.manifest_dir)
 
-    # resuming the routed replay heals it before the stream starts
-    run_replay_routed(spark, seg_dir, routes, ckpt, max_files_per_trigger=1)
-    assert os.path.exists(victim)  # manifest rebuilt from the offset log
+    # the replayed epoch: batch 1's files, as the offset log records them
+    files = _batch_files_from_checkpoint(ckpt, 1)
+    assert files
+    df = spark.read.schema(routed_binlog_schema(routes)).parquet(*files)
+    apply_batch_routed(spark, routes, df, batch_id=1)
+    assert os.path.exists(victim)  # manifest rebuilt
+    assert LakeTable(spark, cfgB.table_root).current_version() == vB
     invB = lineage.check_invariants(spark, cfgB.manifest_dir)
     assert invB["events_distinct_total"] == gB.n_events
     assert_frames_equal(final_state(spark, cfgA), replay_oracle(baseA, binA, []))

@@ -7,9 +7,11 @@ recompute over the final table, including across a kill/resume."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.cdc_schema import SourceSpec
@@ -352,8 +354,14 @@ def test_stream_maintains_ann_index(spark, tmp_path):
     assert refresh_ann_index(table, aidx)["mode"] == "noop"
 
 
-def test_stream_maintains_indexes(spark, tmp_path):
+@pytest.mark.parametrize("cadence", [1, 3])
+def test_stream_maintains_indexes(spark, tmp_path, cadence):
+    """Cadence 3 over this 2-batch stream never reaches a cadence
+    point inside the stream: the bounded replay's final refresh must
+    still bring the indexes and the MV to the table's current
+    version."""
     seg, cfg = _mk_world(spark, tmp_path)
+    cfg = dataclasses.replace(cfg, index_refresh_every_batches=cadence)
     bootstrap(spark, cfg, None, spec=DOCS)
     replay(spark, cfg, seg, ops=[], spec=DOCS)
     _assert_indexes_match_recompute(spark, cfg)

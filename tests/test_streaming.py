@@ -99,7 +99,6 @@ def test_continuous_tail_with_live_writer(spark, tmp_path):
     and lineage covers the log."""
     import time
 
-    from etl_spark.engine.apply import drain_all_pending
     from etl_spark.engine.stream import run_replay
 
     g = GenConfig(
@@ -150,7 +149,6 @@ def test_continuous_tail_with_live_writer(spark, tmp_path):
     finally:
         q.stop()
         q.awaitTermination()
-        drain_all_pending()
 
     assert_frames_equal(final_state(spark, cfg), replay_oracle(base, binlog, ops))
     inv = lineage.check_invariants(spark, cfg.manifest_dir)
@@ -188,37 +186,77 @@ def test_cross_segment_redelivery_tolerated(spark, tmp_path):
     assert inv["events_distinct_total"] == 150
 
 
-def test_startup_reconciliation_heals_lost_lineage(spark, tmp_path):
-    """The async-lineage crash window the in-batch heal cannot reach: a
-    crash AFTER epoch N committed to the checkpoint but BEFORE its
-    background lineage write landed — N is never replayed, so only the
-    startup reconciliation (run before the stream starts) can rebuild
-    its manifest, from the checkpoint offset log's file set."""
-    from etl_spark.engine.apply import reconcile_lineage
+def test_apply_batch_returns_with_lineage_written(spark, tmp_path):
+    """Lineage is written inside apply_batch, so a streaming epoch
+    commits only after its lineage file landed: after a replay every
+    ledger-committed batch has its manifest, and a direct apply_batch
+    leaves the batch's manifest on disk the moment it returns. There
+    is no committed-epoch-without-lineage window left to heal."""
+    from etl_spark.cdc_schema import TRANSCRIPTS
+    from etl_spark.engine.apply import apply_batch
+    from etl_spark.lake.table import LakeTable
 
-    _, base, ops, binlog, seg_dir, _ = gen_all(tmp_path)
+    _, base, ops, binlog, seg_dir, paths = gen_all(tmp_path)
     cfg = make_cfg(tmp_path)
     bootstrap(spark, cfg, base)
     replay(spark, cfg, seg_dir, ops)
-    inv0 = lineage.check_invariants(spark, cfg.manifest_dir)
-
-    # simulate the crash: epoch 2 is committed (ledger + checkpoint)
-    # but its lineage file never landed
-    lost = os.path.join(cfg.manifest_dir, "batch-0000000002.parquet")
-    assert os.path.exists(lost)
-    os.remove(lost)
-
-    healed = reconcile_lineage(spark, cfg, ops)
-    assert healed == [2]
-    assert os.path.exists(lost)
-    inv1 = lineage.check_invariants(spark, cfg.manifest_dir)
-    assert inv1["events_distinct_total"] == inv0["events_distinct_total"] == 150
-    assert inv1["max_lsn"] == 150
-    # idempotent: nothing left to heal, and a fresh replay (which runs
-    # reconciliation internally) is still a no-op
-    assert reconcile_lineage(spark, cfg, ops) == []
+    committed = sorted(
+        int(k.split(":", 1)[1])
+        for k in LakeTable(spark, cfg.table_root).manifest().committed_batches
+        if k.startswith("cdc:")
+    )
+    assert committed == list(range(len(paths)))  # one batch per segment
+    for bid in committed:
+        assert lineage.has_batch_manifest(cfg.manifest_dir, bid)
+    inv = lineage.check_invariants(spark, cfg.manifest_dir)
+    assert inv["events_distinct_total"] == 150
+    assert inv["max_lsn"] == 150
+    # a second replay finds nothing new and changes nothing
     replay(spark, cfg, seg_dir, ops)
     assert_frames_equal(final_state(spark, cfg), replay_oracle(base, binlog, ops))
+
+    direct = make_cfg(tmp_path / "direct")
+    bootstrap(spark, direct, base)
+    bdf = spark.read.schema(TRANSCRIPTS.binlog_schema()).parquet(seg_dir)
+    apply_batch(spark, direct, ops, bdf, batch_id=0)
+    assert lineage.has_batch_manifest(direct.manifest_dir, 0)
+    assert_frames_equal(final_state(spark, direct), replay_oracle(base, binlog, ops))
+    assert lineage.check_invariants(spark, direct.manifest_dir)["events_distinct_total"] == 150
+
+
+def test_bounded_replay_returns_after_listeners_saw_every_batch(spark, tmp_path):
+    """A bounded replay returns only after Spark's listener bus has
+    delivered the query's events: a StreamingQueryListener read right
+    after `replay` already holds one progress event per batch."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Collect(StreamingQueryListener):
+        def __init__(self):
+            self.rows = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    _, base, ops, _, seg_dir, paths = gen_all(tmp_path)
+    cfg = make_cfg(tmp_path)
+    bootstrap(spark, cfg, base)
+    listener = Collect()
+    spark.streams.addListener(listener)
+    try:
+        replay(spark, cfg, seg_dir, ops)
+        seen = [r for r in listener.rows if r > 0]
+    finally:
+        spark.streams.removeListener(listener)
+    assert len(seen) == len(paths)
 
 
 def test_kafka_shaped_source_frame(spark, tmp_path):
@@ -229,7 +267,7 @@ def test_kafka_shaped_source_frame(spark, tmp_path):
     to it reproduces the oracle state."""
     from pyspark.sql import functions as F
 
-    from etl_spark.engine.apply import apply_batch, drain_all_pending
+    from etl_spark.engine.apply import apply_batch
     from etl_spark.engine.stream import binlog_from_kafka
     from etl_spark.cdc_schema import TRANSCRIPTS
 
@@ -254,7 +292,6 @@ def test_kafka_shaped_source_frame(spark, tmp_path):
     cfg = make_cfg(tmp_path)
     bootstrap(spark, cfg, base)
     apply_batch(spark, cfg, ops, out, batch_id=0)
-    drain_all_pending()
     assert_frames_equal(final_state(spark, cfg), replay_oracle(base, binlog, ops))
 
 
