@@ -25,17 +25,14 @@ class EngineConfig:
     use_watermark_dedup: bool = False
     # files per micro-batch for the streaming file source
     max_files_per_trigger: int = 4
-    normalize_text_col: bool = True
     # "mor" (merge-on-read, O(batch) write cost per micro-batch) or
     # "cow" (copy-on-write, read-optimized; O(touched buckets) rewrite)
     write_mode: str = "mor"
-    # merge-on-read file-count bound: compact buckets whose live file
-    # count exceeds this (0 = never; run as external maintenance)
+    # merge-on-read file-count bound: after each batch's lineage
+    # write, compact buckets whose live file count exceeds this
+    # (serialized with the merges — compaction commits table
+    # versions; 0 = never, run as external maintenance)
     compact_max_files_per_bucket: int = 0
-    # compaction cadence: check the file-count bound every K batches
-    # (runs inside the batch after its lineage write, serialized with
-    # the merges — compaction commits table versions)
-    compact_every_batches: int = 1
     # dead-letter directory for poison events (malformed payload /
     # unknown schema_version). None = off (zero cost); see
     # engine/quarantine.py for the exactly-once + accounting contract.

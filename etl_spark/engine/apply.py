@@ -169,13 +169,13 @@ def parse_batch(
     versions: list[int],
     spec: SourceSpec = TRANSCRIPTS,
     with_set_flags: bool = False,
-    normalize: bool = True,
 ) -> DataFrame:
     """The parse and normalize steps of `apply_batch`: `parse_events`
     (one pass: each row decodes once, under its own version's struct;
     patch_ops also decodes the `_changed` mask into `_set_<col>`
     flags), then vectorized text normalization (Arrow pandas UDF; D
-    rows keep null) — one ArrowEvalPython over the batch."""
+    rows keep null) — one ArrowEvalPython over the batch. A spec with
+    `normalize_field_id = None` skips normalization."""
     parsed = parse_events(
         batch_df,
         ops,
@@ -184,7 +184,7 @@ def parse_batch(
         spec=spec,
         with_set_flags=with_set_flags,
     )
-    if not normalize or spec.normalize_field_id is None:
+    if spec.normalize_field_id is None:
         return parsed
     text_col = next(
         (
@@ -512,7 +512,6 @@ def apply_batch(
         versions,
         spec=spec,
         with_set_flags=cfg.patch_ops,
-        normalize=cfg.normalize_text_col,
     )
 
     # 5. max-LSN resolution per key (out-of-order within the batch).
@@ -574,12 +573,10 @@ def apply_batch(
     finally:
         resolved.unpersist()
 
-    # 8. merge-on-read maintenance every K batches: compaction commits
-    # a table version, so it must serialize with the merges (which it
-    # does here by construction).
-    if cfg.compact_max_files_per_bucket and (
-        (batch_id + 1) % max(1, cfg.compact_every_batches) == 0
-    ):
+    # 8. merge-on-read maintenance: compaction commits a table
+    # version, so it must serialize with the merges (which it does here
+    # by construction).
+    if cfg.compact_max_files_per_bucket:
         table.compact(cfg.compact_max_files_per_bucket)
 
     # 9. stream-maintained persisted indexes and MVs (engine/

@@ -38,6 +38,9 @@ from etl_spark.engine.indexes import refresh_derived, validate_disjoint_derived_
 from etl_spark.engine.stream import await_bounded
 from etl_spark.lake.table import spark_type
 
+# driver threads applying one batch's routes concurrently
+ROUTE_POOL_WIDTH = 4
+
 Route = tuple[EngineConfig, list[SchemaOp], SourceSpec]
 
 ENTITY_COL = "entity"
@@ -83,7 +86,6 @@ def apply_batch_routed(
     batch_id: int,
     entity_col: str = ENTITY_COL,
     unrouted: str = "error",
-    max_concurrency: int = 4,
 ) -> None:
     """Split one micro-batch by route column and apply each slice to
     its entity's table. File footer stats don't apply to a filtered
@@ -94,16 +96,16 @@ def apply_batch_routed(
     ~18 topics; N jobs/batch was the round-2 cost).
 
     The per-entity applies run CONCURRENTLY from driver threads (up
-    to `max_concurrency`): the targets are disjoint tables, so the
-    applies share no table state, and Spark's scheduler interleaves
-    their jobs — entity A's driver-side planning/commit windows
-    overlap entity B's executor work instead of serializing N
-    per-apply fixed costs per batch (measured: 4
-    sequential 1M-event applies left a ~10 s serial fraction per
-    batch at 4 cores — scaling efficiency 0.776; concurrent applies
-    recover it). Any apply failure fails the whole epoch loud (the
+    to `ROUTE_POOL_WIDTH`; a single route applies inline): the
+    targets are disjoint tables, so the applies share no table
+    state, and Spark's scheduler interleaves their jobs — entity A's
+    driver-side planning/commit windows overlap entity B's executor
+    work instead of serializing N per-apply fixed costs per batch
+    (measured: 4 sequential 1M-event applies left a ~10 s serial
+    fraction per batch at 4 cores — scaling efficiency 0.776;
+    concurrent applies recover it). Any apply failure fails the whole epoch loud (the
     others are joined first; ledger idempotency makes the replay
-    safe). `max_concurrency=1` restores strictly sequential applies.
+    safe).
 
     Partitioning: footer stats don't apply to slices, so apply_batch's
     n_src_files heuristic can't see the source width — left alone,
@@ -180,12 +182,11 @@ def apply_batch_routed(
             )
 
         names = sorted(routes)
-        if max_concurrency <= 1 or len(names) == 1:
-            for name in names:
-                _apply_one(name)
+        if len(names) == 1:
+            _apply_one(names[0])
         else:
             with concurrent.futures.ThreadPoolExecutor(
-                max_workers=min(max_concurrency, len(names)),
+                max_workers=min(ROUTE_POOL_WIDTH, len(names)),
                 thread_name_prefix=f"route-b{batch_id}",
             ) as pool:
                 futs = {pool.submit(_apply_one, n): n for n in names}
@@ -214,13 +215,11 @@ def run_replay_routed(
     max_files_per_trigger: int = 4,
     entity_col: str = ENTITY_COL,
     unrouted: str = "error",
-    max_concurrency: int = 4,
 ) -> None:
     """Bounded replay of a shared multi-entity log into every route's
     table: one streaming query, one checkpoint, N ledgered targets.
     Per-entity applies within a batch run concurrently (disjoint
-    tables — see apply_batch_routed; `max_concurrency=1` for strictly
-    sequential).
+    tables — see apply_batch_routed).
 
     Watermark dedup: if ANY route's config enables
     `use_watermark_dedup`, the SHARED stream dedups on
@@ -251,8 +250,7 @@ def run_replay_routed(
     q = (
         stream.writeStream.foreachBatch(
             lambda df, bid: apply_batch_routed(
-                spark, routes, df, bid, entity_col,
-                unrouted=unrouted, max_concurrency=max_concurrency,
+                spark, routes, df, bid, entity_col, unrouted=unrouted
             )
         )
         .option("checkpointLocation", checkpoint_dir)

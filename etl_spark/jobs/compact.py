@@ -6,8 +6,10 @@ the streaming writer appends O(batch) delta files per micro-batch and
 this job periodically collapses buckets whose live-file count exceeds
 the bound, committing a new snapshot atomically (readers keep seeing
 the old snapshot until the manifest swap). The ingest query never
-blocks — compaction and appends race only at the manifest O_EXCL
-create, and the loser simply retries on the next cycle.
+blocks — compaction and appends only race for the next snapshot
+version. An append that loses re-appends onto the compacted snapshot;
+a compaction that loses (an append landed while it rewrote) skips the
+cycle, and the next cycle re-plans from the fresh snapshot.
 
 With --expire-keep-last N the same maintenance window also runs
 snapshot retention (Iceberg `expire_snapshots` + `remove_orphan_files`

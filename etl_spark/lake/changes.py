@@ -81,26 +81,15 @@ def _commit_changes(
         return None
     is_erase = m_new.props.get("erase_commit") == v
     m_old = mf(v - 1)
-    # touched-bucket discovery is pure POINTER comparison when both
-    # snapshots carry the two-level index: a bucket's group pointer
-    # changes iff the commit touched it (group files are immutable and
-    # uniquely named), so the diff costs O(num_buckets) string
-    # compares with zero group loads for carried-over buckets. When
-    # either side is a flat (format v1) snapshot — or empty — the
-    # path-set diff keeps exactness across the upgrade commit.
-    if m_new.bucket_ptrs and m_old.bucket_ptrs:
-        keys = m_new.buckets() | m_old.buckets()
-        buckets = {
-            b
-            for b in keys
-            if m_new.bucket_ptrs.get(b) != m_old.bucket_ptrs.get(b)
-        }
-    else:
-        new_paths = {f.path for f in m_new.files}
-        old_paths = {f.path for f in m_old.files}
-        buckets = {f.bucket for f in m_new.files if f.path not in old_paths} | {
-            f.bucket for f in m_old.files if f.path not in new_paths
-        }
+    # touched-bucket discovery is pure POINTER comparison: a bucket's
+    # group pointer changes iff the commit touched it (group files are
+    # immutable and uniquely named), so the diff costs O(num_buckets)
+    # string compares with zero group loads for carried-over buckets
+    buckets = {
+        b
+        for b in m_new.buckets() | m_old.buckets()
+        if m_new.bucket_ptrs.get(b) != m_old.bucket_ptrs.get(b)
+    }
     if not buckets:
         return None
 

@@ -49,7 +49,7 @@ def _racing_merge(spark, table, conv_id, lsn):
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts long, op string, lsn long",
     )
-    merge_into(table, src, batch_key=f"race:{lsn}")
+    return merge_into(table, src, batch_key=f"race:{lsn}")
 
 
 def _inject_between_stage_and_commit(table, inject):
@@ -66,6 +66,22 @@ def _inject_between_stage_and_commit(table, inject):
         return out
 
     return mock.patch.object(LakeTable, "_stage_dataframe", wrapper)
+
+
+def _inject_before_commit(inject):
+    """Patch _commit_manifest so `inject` runs once right before the
+    first snapshot publish — for metadata-only commits, which stage
+    nothing."""
+    real = LakeTable._commit_manifest
+    state = {"fired": False}
+
+    def wrapper(self, m):
+        if not state["fired"]:
+            state["fired"] = True
+            inject()
+        return real(self, m)
+
+    return mock.patch.object(LakeTable, "_commit_manifest", wrapper)
 
 
 def test_compact_loses_race_gracefully(spark, tmp_path):
@@ -207,11 +223,13 @@ def test_erase_rebased_over_maintenance_keeps_feed_visibility(spark, tmp_path):
     assert deletes.count() == n_victim
 
 
-def test_merge_conflicts_when_rebucket_wins(spark, tmp_path):
+@pytest.mark.parametrize("write_mode", ["cow", "mor"])
+def test_merge_conflicts_when_rebucket_wins(spark, tmp_path, write_mode):
     """Rebucket carries the maintenance marker but CHANGES the bucket
-    layout: a stale rewrite must NOT rebase over it (its staged files
-    carry old hash-mod bucket ids), regardless of the marker."""
-    g, base, binlog, cfg, table = _table(spark, tmp_path, write_mode="cow")
+    layout: a stale rewrite (CoW) or delta append (MoR) must NOT rebase
+    over it (its staged files carry old hash-mod bucket ids),
+    regardless of the marker."""
+    g, base, binlog, cfg, table = _table(spark, tmp_path, write_mode=write_mode)
     oracle = replay_oracle(base, binlog, [])
     other = oracle["conv_id"].iloc[-1]
     max_lsn = int(binlog["lsn"].max())
@@ -260,3 +278,93 @@ def test_mor_append_rebases_over_compaction(spark, tmp_path):
     assert table.read().count() == len(oracle) + (
         0 if ((oracle["conv_id"] == other) & (oracle["turn_idx"] == 0)).any() else 1
     )
+
+
+def test_mor_append_returns_when_own_replay_wins(spark, tmp_path):
+    """A MoR append that loses the race to a replay of its OWN batch
+    (same batch key) returns the winner's version instead of appending
+    the batch a second time."""
+    g, base, binlog, cfg, table = _table(spark, tmp_path)  # mor default
+    oracle = replay_oracle(base, binlog, [])
+    other = oracle["conv_id"].iloc[-1]
+    lsn = int(binlog["lsn"].max()) + 1
+    replayer = LakeTable(spark, cfg.table_root)
+    v0 = table.current_version()
+
+    with _inject_between_stage_and_commit(
+        table, lambda: _racing_merge(spark, replayer, other, lsn)
+    ):
+        v = _racing_merge(spark, table, other, lsn)
+    assert v == table.current_version() == v0 + 1  # only the winner landed
+    m = table.manifest()
+    assert f"race:{lsn}" in m.committed_batches
+    assert f"race:{lsn}" not in table.manifest(v0).committed_batches
+    raw = table.read_raw().filter(
+        (F.col("conv_id") == other) & (F.col("turn_idx") == 0)
+        & (F.col("_lsn") == lsn)
+    )
+    assert raw.count() == 1  # the batch's delta is in the table once
+    row = table.read().filter(
+        (F.col("conv_id") == other) & (F.col("turn_idx") == 0)
+    ).collect()
+    assert len(row) == 1 and row[0]["text"] == f"winner-{lsn}"
+
+
+def test_set_props_retries_after_race(spark, tmp_path):
+    """A props-only commit (here `set_bloom_on_write`) that loses the
+    race to a live merge re-reads and reapplies: the policy lands, and
+    so does the racer's batch."""
+    g, base, binlog, cfg, table = _table(spark, tmp_path)
+    oracle = replay_oracle(base, binlog, [])
+    other = oracle["conv_id"].iloc[-1]
+    lsn = int(binlog["lsn"].max()) + 1
+    racer = LakeTable(spark, cfg.table_root)
+    v0 = table.current_version()
+
+    with _inject_before_commit(lambda: _racing_merge(spark, racer, other, lsn)):
+        v = table.set_bloom_on_write()
+    assert v == table.current_version() == v0 + 2
+    m = table.manifest()
+    assert m.props["bloom_on_write"]["fids"] == [
+        f.id for f in m.schema.fields if f.name == m.bucket_by
+    ]
+    assert m.props["maintenance_commit"] == v
+    assert f"race:{lsn}" in m.committed_batches
+
+
+def test_build_blooms_retries_after_race(spark, tmp_path):
+    """A Bloom build whose metadata commit loses the race to a live
+    merge annotates the FRESH snapshot: the racer's batch survives,
+    the commit is stamped as maintenance at the version it landed at,
+    and point lookups stay exact (the racer's unbloomed file is never
+    pruned)."""
+    g, base, binlog, cfg, table = _table(spark, tmp_path)
+    oracle = replay_oracle(base, binlog, [])
+    other = oracle["conv_id"].iloc[-1]
+    lsn = int(binlog["lsn"].max()) + 1
+    racer = LakeTable(spark, cfg.table_root)
+    v0 = table.current_version()
+    before = {f.path for f in table.manifest(v0).files}
+
+    with _inject_before_commit(lambda: _racing_merge(spark, racer, other, lsn)):
+        out = table.build_blooms()
+    v = out["version"]
+    assert v == table.current_version() == v0 + 2
+    m = table.manifest()
+    assert m.props["maintenance_commit"] == v
+    assert f"race:{lsn}" in m.committed_batches
+    assert out["files_bloomed"] == len(before)
+    assert all(f.bloom is not None for f in m.files if f.path in before)
+    assert any(f.path not in before and f.bloom is None for f in m.files)
+    for conv in (other, oracle["conv_id"].iloc[0]):
+        got = sorted(
+            (r["turn_idx"], r["text"])
+            for r in table.lookup([conv]).collect()
+        )
+        want = sorted(
+            (r["turn_idx"], r["text"])
+            for r in table.read().filter(F.col("conv_id") == conv).collect()
+        )
+        assert got == want and got
+    row = table.lookup([other]).filter(F.col("turn_idx") == 0).collect()
+    assert len(row) == 1 and row[0]["text"] == f"winner-{lsn}"

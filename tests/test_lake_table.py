@@ -381,6 +381,24 @@ def test_two_level_manifest_carries_pointers(spark, tmp_path):
     assert m0.bucket_ptrs[b1] not in on_disk  # superseded group expired
 
 
+def test_flat_format_snapshot_is_refused(spark, tmp_path):
+    """Only the two-level format is readable: a snapshot without
+    `bucket_ptrs` (the flat format-1 file list) fails loudly, naming
+    the format, instead of loading as an empty or partial table."""
+    import json as _json
+
+    t = make_table(spark, tmp_path)
+    seed(spark, t)
+    with open(t._manifest_path(t.current_version())) as fh:
+        d = _json.load(fh)
+    d.pop("bucket_ptrs")
+    d.update(format_version=1, version=d["version"] + 1, files=[])
+    with open(t._manifest_path(d["version"]), "w") as fh:
+        _json.dump(d, fh)
+    with pytest.raises(ValueError, match="format"):
+        t.manifest()
+
+
 def test_files_metadata_view(spark, tmp_path):
     """files() (Iceberg <table>.files analog): one row per live data
     file with recorded row counts (stage-time footer reads), the
