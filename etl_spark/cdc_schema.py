@@ -24,19 +24,6 @@ from pyspark.sql import types as T
 
 from etl_spark.lake.table import Field
 
-# ----------------------------------------------------------- binlog
-BINLOG_SCHEMA = T.StructType(
-    [
-        T.StructField("lsn", T.LongType(), False),
-        T.StructField("op", T.StringType(), False),  # I | U | D
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("op_ts", T.TimestampType(), False),  # commit time (watermark col)
-        T.StructField("schema_version", T.IntegerType(), False),
-        T.StructField("payload", T.StringType(), True),  # JSON; null for D
-    ]
-)
-
 # Base logical schema of the transcripts table (BASELINE.json input_hint):
 # (conv_id:string, turn_idx:int32, role:string, text:string, tool:string,
 #  ts). `ts` starts life as epoch-seconds long and is widened to

@@ -27,7 +27,9 @@ traced `replay_bulk` benchmark run (perfbench/) counts 7 Spark jobs
 per MoR batch: 5 under the MERGE, ending with the staging write, and
 2 for the lineage rollup. (A per-version Union parse counted 10 there:
 every schema version in the batch added its own raw-exchange job.)
-Batch stats come from parquet footers (driver-side, no job).
+Batch stats have two producers: the parquet footers of the files the
+checkpoint offset log lists for the batch (driver-side, no job), and
+otherwise `_stats_from_agg` (one slim aggregation job).
 """
 
 from __future__ import annotations
@@ -256,18 +258,14 @@ def _batch_files_from_checkpoint(checkpoint_dir: str, batch_id: int) -> list[str
 _EMPTY_STATS = {"min_lsn": 0, "max_lsn": 0, "events_in": 0, "vmin": None, "vmax": None, "vnull": 0}
 
 
-def _stats_from_footers(batch_df: DataFrame, files: list[str] | None = None) -> dict | None:
+def _stats_from_footers(files: list[str]) -> dict | None:
     """Batch stats (min/max lsn, row count, schema_version range and
-    NULL count) from the source parquet footers — driver-side metadata
-    reads, O(#files), no Spark job. A streaming file-source micro-batch is a set of whole
-    files, so footer row-group statistics describe the batch exactly.
-    Returns None (caller falls back to an aggregation) when the frame
-    is not a pure file scan or stats are absent."""
-    if files is None:
-        try:
-            files = batch_df.inputFiles()
-        except Exception:
-            return None
+    NULL count) from the parquet footers of the files the checkpoint
+    offset log lists for a micro-batch — driver-side metadata reads,
+    O(#files), no Spark job. A streaming file-source micro-batch is a
+    set of whole files, so their row-group statistics describe the
+    batch exactly. Returns None (caller aggregates) when there are no
+    files or a footer lacks the statistics."""
     if not files:
         return None
     import pyarrow.parquet as pq
@@ -314,28 +312,38 @@ def _stats_from_footers(batch_df: DataFrame, files: list[str] | None = None) -> 
     }
 
 
-def _stats_from_agg(batch_df: DataFrame) -> dict:
-    """Fallback: one slim aggregation action (min/max/count only — no
-    distinct expansion, no collect_set; those moved into the resolve
-    aggregation as per-key counts)."""
-    row = batch_df.agg(
+def _stats_from_agg(batch_df: DataFrame, by: str | None = None) -> dict:
+    """Batch stats from the rows themselves: one slim aggregation
+    action (min/max/count only — no distinct expansion, no
+    collect_set; those ride the resolve aggregation as per-key
+    counts). With `by`, one grouped action returns {group value:
+    stats} — the routed path's per-entity stats, one job for N
+    entities. min/max ignore NULLs (an all-NULL schema_version batch
+    yields None) and `vnull` counts them."""
+    aggs = [
         F.min("lsn").alias("min_lsn"),
         F.max("lsn").alias("max_lsn"),
         F.count("*").alias("events_in"),
         F.min("schema_version").alias("vmin"),
         F.max("schema_version").alias("vmax"),
         F.count("schema_version").alias("vset"),
-    ).collect()[0]
-    if row["events_in"] == 0:
-        return dict(_EMPTY_STATS)
-    return {
-        "min_lsn": int(row["min_lsn"]),
-        "max_lsn": int(row["max_lsn"]),
-        "events_in": int(row["events_in"]),
-        "vmin": None if row["vmin"] is None else int(row["vmin"]),
-        "vmax": None if row["vmax"] is None else int(row["vmax"]),
-        "vnull": int(row["events_in"]) - int(row["vset"]),
-    }
+    ]
+
+    def one(row) -> dict:
+        if row["events_in"] == 0:
+            return dict(_EMPTY_STATS)
+        return {
+            "min_lsn": int(row["min_lsn"]),
+            "max_lsn": int(row["max_lsn"]),
+            "events_in": int(row["events_in"]),
+            "vmin": None if row["vmin"] is None else int(row["vmin"]),
+            "vmax": None if row["vmax"] is None else int(row["vmax"]),
+            "vnull": int(row["events_in"]) - int(row["vset"]),
+        }
+
+    if by is None:
+        return one(batch_df.agg(*aggs).collect()[0])
+    return {r[by]: one(r) for r in batch_df.groupBy(by).agg(*aggs).collect()}
 
 
 def _prior_covered_ranges(
@@ -378,7 +386,6 @@ def apply_batch(
     batch_id: int,
     source_id: str = "cdc",
     spec: SourceSpec = TRANSCRIPTS,
-    footer_stats: bool = True,
     stats_override: dict | None = None,
     input_partitioned: bool = False,
 ) -> None:
@@ -394,17 +401,17 @@ def apply_batch(
         if lineage.has_batch_manifest(cfg.manifest_dir, batch_id):
             return
 
-    # batch stats from parquet footers (no Spark job); fall back to a
-    # slim aggregation for non-file frames or when the stream was
-    # transformed upstream (watermark dedup drops rows the footers
-    # would still count)
-    use_footers = footer_stats and not cfg.use_watermark_dedup
+    # batch stats: the footers of the files the checkpoint offset log
+    # lists for this batch_id (no Spark job), else one slim aggregation
+    # over the rows — a frame the offset log does not describe (a
+    # direct call, a routed slice), or a stream transformed upstream
+    # (watermark dedup drops rows the footers would still count)
     stats_src = stats_override
     n_src_files = None
-    if stats_src is None and use_footers:
+    if stats_src is None and not cfg.use_watermark_dedup:
         files = _batch_files_from_checkpoint(cfg.checkpoint_dir, batch_id)
-        stats_src = _stats_from_footers(batch_df, files or None)
-        if stats_src is not None and files:
+        stats_src = _stats_from_footers(files)
+        if stats_src is not None:
             n_src_files = len(files)
     stats_src = stats_src or _stats_from_agg(batch_df)
     if stats_src["events_in"] == 0:

@@ -15,6 +15,12 @@ the `LEDGER_COLUMNS` schema) via tmp+atomic-rename — no Spark
 write job, no commit-protocol temp dirs/_SUCCESS/fsync chatter per
 micro-batch. A crash-replayed epoch rewrites the identical rows
 (os.replace is an atomic overwrite).
+
+Read path: one rollup, `_per_batch` (per (batch, file), then per
+batch), feeds both audit views — `check_invariants` (gap/overlap
+verdict and totals) and `batch_metrics` (one row per batch plus the
+commit-to-commit gap). A new ledger column goes into `LEDGER_COLUMNS`
+and `_per_batch` only.
 """
 
 from __future__ import annotations
@@ -131,35 +137,27 @@ def write_batch_manifest(
     table_version: int,
 ) -> None:
     """One aggregation job -> <= num_buckets rows -> driver-side atomic
-    parquet write. `resolved` may carry the optional `_nev`/`_nlsn`
-    per-key counts from `resolve_max_lsn(..., with_counts=True)`; when
-    present they yield exact per-bucket raw/distinct event counts with
-    zero extra jobs (the round-1 design paid a separate full-batch
-    count_distinct action for these)."""
+    parquet write. `resolved` carries the per-key `_nev`/`_nlsn`/`_nnew`
+    counts of `resolve_max_lsn(..., with_counts=True)` (or the patch
+    fold's), which yield exact per-bucket raw/distinct/new event counts
+    with zero extra jobs (the round-1 design paid a separate
+    full-batch count_distinct action for these). `_nnew` counts the
+    distinct LSNs above the prior covered horizon, so each log event
+    counts exactly once across batches even under cross-batch
+    re-delivery."""
     m = table.manifest()
-    content_cols = _content_cols(resolved.columns)
-    aggs = [
-        F.min("lsn").alias("min_lsn"),
-        F.max("lsn").alias("max_lsn"),
-        F.count("*").alias("row_count"),
-        _canonical_checksum_col(content_cols).alias("checksum"),
-    ]
-    has_counts = "_nev" in resolved.columns
-    has_new = "_nnew" in resolved.columns
-    if has_counts:
-        aggs += [
-            F.sum("_nev").alias("events_in"),
-            F.sum("_nlsn").alias("events_distinct"),
-        ]
-    if has_new:
-        # distinct LSNs above the prior covered horizon — counts each
-        # log event exactly once across batches even under cross-batch
-        # re-delivery (see resolve_max_lsn new_lsn_floor)
-        aggs.append(F.sum("_nnew").alias("events_new"))
     rows = (
         resolved.withColumn(BUCKET_COL, table.bucket_expr(m))
         .groupBy(F.col(BUCKET_COL).alias("partition_id"))
-        .agg(*aggs)
+        .agg(
+            F.min("lsn").alias("min_lsn"),
+            F.max("lsn").alias("max_lsn"),
+            F.count("*").alias("row_count"),
+            _canonical_checksum_col(_content_cols(resolved.columns)).alias("checksum"),
+            F.sum("_nev").alias("events_in"),
+            F.sum("_nlsn").alias("events_distinct"),
+            F.sum("_nnew").alias("events_new"),
+        )
         .collect()
     )
 
@@ -223,6 +221,52 @@ def read_manifest(
     return spark.read.parquet(*paths)
 
 
+def _per_batch(spark: SparkSession, manifest_dir: str | list[str]) -> DataFrame:
+    """The ledger rolled up to one row per batch — the one rollup
+    behind `check_invariants` and `batch_metrics`.
+
+    Two levels: batch_* columns are constant per bucket row WITHIN one
+    manifest FILE, but in a routed-union read the same batch_id appears
+    in several routes' files, each slice with its OWN batch totals —
+    first() over the union would pick one arbitrary slice and the
+    accounting would silently undercount. So collapse per (batch,
+    file) first, then combine slices: totals are sums over slices, LSN
+    bounds are min/max over slices, and the table version and commit
+    time are the LAST slice's."""
+    per_slice = (
+        read_manifest(spark, manifest_dir)
+        .withColumn("_src", F.input_file_name())
+        .groupBy("batch_id", "_src")
+        .agg(
+            F.first("batch_min_lsn").alias("min_lsn"),
+            F.first("batch_max_lsn").alias("max_lsn"),
+            F.first("batch_events_in").alias("events_in"),
+            F.sum("events_distinct").alias("events_distinct"),
+            F.sum("events_new").alias("events_new"),
+            F.first("batch_events_quarantined").alias("events_quarantined"),
+            F.sum("row_count").alias("keys_resolved"),
+            F.count("*").alias("buckets_touched"),
+            F.first("table_version").alias("table_version"),
+            F.first("committed_at_us").alias("committed_at_us"),
+        )
+    )
+    sums = (
+        "events_in",
+        "events_distinct",
+        "events_new",
+        "events_quarantined",
+        "keys_resolved",
+        "buckets_touched",
+    )
+    return per_slice.groupBy("batch_id").agg(
+        F.min("min_lsn").alias("min_lsn"),
+        F.max("max_lsn").alias("max_lsn"),
+        *[F.sum(c).alias(c) for c in sums],
+        F.max("table_version").alias("table_version"),
+        F.max("committed_at_us").alias("committed_at_us"),
+    )
+
+
 def check_invariants(
     spark: SparkSession, manifest_dir: str | list[str]
 ) -> dict:
@@ -236,73 +280,36 @@ def check_invariants(
     need not arrive in LSN order (the file source may reorder ties).
     Returns summary stats; raises on gap.
 
-    `events_distinct_total` prefers the `events_new` column (distinct
-    LSNs above each batch's prior covered horizon — EXACT across
-    batches even under cross-segment re-delivery); it falls back to
-    summing per-batch `events_distinct` (which double-counts an event
-    re-delivered into a later batch) only for manifests written before
-    the column existed."""
-    df = read_manifest(spark, manifest_dir)
-    has_new = "events_new" in df.columns
-    has_q = "batch_events_quarantined" in df.columns
-    # Two-level aggregation: batch_* columns are constant per bucket
-    # row WITHIN one manifest FILE, but in a routed-union read the same
-    # batch_id appears in several routes' files, each slice with its
-    # OWN batch totals — first() there would pick one arbitrary slice
-    # and the accounting would silently undercount. Collapse per
-    # (batch, file) first, then combine slices.
-    slice_agg = [
-        F.first("batch_min_lsn").alias("lo"),
-        F.first("batch_max_lsn").alias("hi"),
-        F.sum("row_count").alias("keys_resolved"),
-        F.sum("events_distinct").alias("events_distinct"),
-    ]
-    if has_new:
-        slice_agg.append(F.sum("events_new").alias("events_new"))
-    if has_q:
-        slice_agg.append(F.first("batch_events_quarantined").alias("quarantined"))
-    per_slice = df.withColumn("_src", F.input_file_name()).groupBy(
-        "batch_id", "_src"
-    ).agg(*slice_agg)
-    agg = [
-        F.min("lo").alias("lo"),
-        F.max("hi").alias("hi"),
-        F.sum("keys_resolved").alias("keys_resolved"),
-        F.sum("events_distinct").alias("events_distinct"),
-    ]
-    if has_new:
-        agg.append(F.sum("events_new").alias("events_new"))
-    if has_q:
-        agg.append(F.sum("quarantined").alias("quarantined"))
-    per_batch = per_slice.groupBy("batch_id").agg(*agg).orderBy("lo", "batch_id").collect()
+    `events_distinct_total` sums `events_new` (distinct LSNs above
+    each batch's prior covered horizon — EXACT across batches even
+    under cross-segment re-delivery). `events_quarantined_total`
+    counts the poison events diverted to the dead-letter dir: with a
+    dense log, the two totals account for every emitted LSN exactly
+    once."""
+    per_batch = (
+        _per_batch(spark, manifest_dir)
+        .select("batch_id", "min_lsn", "max_lsn", "events_new", "events_quarantined")
+        .orderBy("min_lsn", "batch_id")
+        .collect()
+    )
     prev_hi = None
     overlapped = []
-    total_distinct = 0
-    use_new = has_new and all(r["events_new"] is not None for r in per_batch)
     for r in per_batch:
-        if prev_hi is not None and r["lo"] > prev_hi + 1:
+        if prev_hi is not None and r["min_lsn"] > prev_hi + 1:
             raise AssertionError(
-                f"batch {r['batch_id']}: LSN gap — range starts at {r['lo']} "
+                f"batch {r['batch_id']}: LSN gap — range starts at {r['min_lsn']} "
                 f"but the log is only covered through {prev_hi}"
             )
-        if prev_hi is not None and r["lo"] <= prev_hi:
+        if prev_hi is not None and r["min_lsn"] <= prev_hi:
             overlapped.append(int(r["batch_id"]))
-        prev_hi = r["hi"] if prev_hi is None else max(prev_hi, r["hi"])
-        total_distinct += (r["events_new"] if use_new else r["events_distinct"]) or 0
-    out = {
+        prev_hi = r["max_lsn"] if prev_hi is None else max(prev_hi, r["max_lsn"])
+    return {
         "batches": len(per_batch),
-        "events_distinct_total": int(total_distinct),
+        "events_distinct_total": sum(int(r["events_new"]) for r in per_batch),
         "max_lsn": int(prev_hi) if per_batch else None,
         "overlapping_batches": overlapped,
+        "events_quarantined_total": sum(int(r["events_quarantined"]) for r in per_batch),
     }
-    if has_q:
-        # poison events diverted to the dead-letter dir: with a dense
-        # log, events_distinct_total + events_quarantined_total
-        # accounts for every emitted LSN exactly once
-        out["events_quarantined_total"] = sum(
-            int(r["quarantined"] or 0) for r in per_batch
-        )
-    return out
 
 
 def batch_metrics(spark: SparkSession, manifest_dir: str | list[str]) -> DataFrame:
@@ -311,55 +318,18 @@ def batch_metrics(spark: SparkSession, manifest_dir: str | list[str]) -> DataFra
     replay, with zero instrumentation on the hot path (everything here
     is already in the manifests the engine writes anyway).
 
-    One row per batch: event counts (raw / distinct / new-this-batch /
-    quarantined), LSN range, resolved keys, touched buckets, the
-    commit-to-commit gap to the previous batch (`gap_us` — includes
-    read+parse+merge+rollup, i.e. end-to-end batch latency at steady
-    state), and `events_per_sec` over that gap. Aggregation is
-    O(batches x buckets) manifest rows — independent of table size."""
-    df = read_manifest(spark, manifest_dir)
-    # columns added over the format's life; older manifests lack them
-    opt = lambda c: (  # noqa: E731
-        F.sum(c) if c in df.columns else F.sum(F.lit(None).cast("long"))
-    )
-    # per (batch, manifest file) first — see check_invariants: in a
-    # routed-union read, batch_* columns are per-SLICE totals, so the
-    # batch totals are sums over slices, LSN bounds are min/max over
-    # slices, and the commit time is the LAST slice's commit
-    per_slice = df.withColumn("_src", F.input_file_name()).groupBy(
-        "batch_id", "_src"
-    ).agg(
-        F.first("batch_min_lsn").alias("s_min_lsn"),
-        F.first("batch_max_lsn").alias("s_max_lsn"),
-        F.first("batch_events_in").alias("s_events_in"),
-        F.sum("events_distinct").alias("s_events_distinct"),
-        opt("events_new").alias("s_events_new"),
-        (
-            F.first("batch_events_quarantined")
-            if "batch_events_quarantined" in df.columns
-            else F.max(F.lit(0)).cast("long")
-        ).alias("s_events_quarantined"),
-        F.sum("row_count").alias("s_keys_resolved"),
-        F.count("*").alias("s_buckets_touched"),
-        F.first("table_version").alias("s_table_version"),
-        F.first("committed_at_us").alias("s_committed_at_us"),
-    )
-    per_batch = per_slice.groupBy("batch_id").agg(
-        F.min("s_min_lsn").alias("min_lsn"),
-        F.max("s_max_lsn").alias("max_lsn"),
-        F.sum("s_events_in").alias("events_in"),
-        F.sum("s_events_distinct").alias("events_distinct"),
-        F.sum("s_events_new").alias("events_new"),
-        F.sum("s_events_quarantined").alias("events_quarantined"),
-        F.sum("s_keys_resolved").alias("keys_resolved"),
-        F.sum("s_buckets_touched").alias("buckets_touched"),
-        F.max("s_table_version").alias("table_version"),
-        F.max("s_committed_at_us").alias("committed_at_us"),
-    )
+    One row per batch (`_per_batch`): event counts (raw / distinct /
+    new-this-batch / quarantined), LSN range, resolved keys, touched
+    buckets, table version, plus the commit-to-commit gap to the
+    previous batch (`gap_us` — includes read+parse+merge+rollup, i.e.
+    end-to-end batch latency at steady state), and `events_per_sec`
+    over that gap. Aggregation is O(batches x buckets) manifest rows —
+    independent of table size."""
     w = Window.orderBy("committed_at_us")
     gap = F.col("committed_at_us") - F.lag("committed_at_us").over(w)
     return (
-        per_batch.withColumn("gap_us", gap)
+        _per_batch(spark, manifest_dir)
+        .withColumn("gap_us", gap)
         .withColumn(
             "events_per_sec",
             F.round(F.col("events_in") / (F.col("gap_us") / 1e6), 1),

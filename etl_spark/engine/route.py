@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from etl_spark.cdc_schema import SchemaOp, SourceSpec
 from etl_spark.config import EngineConfig
-from etl_spark.engine.apply import apply_batch
+from etl_spark.engine.apply import _EMPTY_STATS, _stats_from_agg, apply_batch
 from etl_spark.engine.indexes import refresh_derived, validate_disjoint_derived_state
 from etl_spark.engine.stream import await_bounded
 from etl_spark.lake.table import spark_type
@@ -89,11 +89,12 @@ def apply_batch_routed(
 ) -> None:
     """Split one micro-batch by route column and apply each slice to
     its entity's table. File footer stats don't apply to a filtered
-    slice of shared files, so per-entity batch stats come from ONE
-    combined aggregation over the persisted batch (grouped by the
-    route column) instead of N slim aggregation jobs — one stats job
-    per batch regardless of entity count (the reference fans out to
-    ~18 topics; N jobs/batch was the round-2 cost).
+    slice of shared files, so per-entity batch stats come from
+    `apply._stats_from_agg` grouped by the route column — the same
+    aggregation a non-streaming `apply_batch` runs, as ONE job over
+    the persisted batch rather than N (the reference fans out to ~18
+    topics; N jobs/batch was the round-2 cost). Each slice's stats
+    reach `apply_batch` as `stats_override`.
 
     The per-entity applies run CONCURRENTLY from driver threads (up
     to `ROUTE_POOL_WIDTH`; a single route applies inline): the
@@ -103,9 +104,9 @@ def apply_batch_routed(
     work instead of serializing N per-apply fixed costs per batch
     (measured: 4 sequential 1M-event applies left a ~10 s serial
     fraction per batch at 4 cores — scaling efficiency 0.776;
-    concurrent applies recover it). Any apply failure fails the whole epoch loud (the
-    others are joined first; ledger idempotency makes the replay
-    safe).
+    concurrent applies recover it). Any apply failure fails the
+    whole epoch loud (the others are joined first; ledger idempotency
+    makes the replay safe).
 
     Partitioning: footer stats don't apply to slices, so apply_batch's
     n_src_files heuristic can't see the source width — left alone,
@@ -121,34 +122,7 @@ def apply_batch_routed(
         batch_df = batch_df.repartition(width)
     batch_df = batch_df.persist()
     try:
-        stat_rows = (
-            batch_df.groupBy(entity_col)
-            .agg(
-                F.min("lsn").alias("min_lsn"),
-                F.max("lsn").alias("max_lsn"),
-                F.count("*").alias("events_in"),
-                F.min("schema_version").alias("vmin"),
-                F.max("schema_version").alias("vmax"),
-                F.count("schema_version").alias("vset"),
-            )
-            .collect()
-        )
-        by_entity = {
-            r[entity_col]: {
-                "min_lsn": int(r["min_lsn"]),
-                "max_lsn": int(r["max_lsn"]),
-                "events_in": int(r["events_in"]),
-                # min/max ignore NULLs (an all-NULL schema_version
-                # slice yields None here) and vnull counts them;
-                # apply_batch diverts such events to the DLQ
-                # (quarantine configured) or fails loud — never a
-                # TypeError before the screen runs
-                "vmin": None if r["vmin"] is None else int(r["vmin"]),
-                "vmax": None if r["vmax"] is None else int(r["vmax"]),
-                "vnull": int(r["events_in"]) - int(r["vset"]),
-            }
-            for r in stat_rows
-        }
+        by_entity = _stats_from_agg(batch_df, by=entity_col)
         # Unknown entities are DATA LOSS if silently skipped (a new
         # producer topic, or a route-name typo): the loop below only
         # visits configured routes. Fail loud by default; "ignore" is
@@ -161,8 +135,6 @@ def apply_batch_routed(
                 f"(configured: {sorted(routes)}); pass unrouted='ignore' "
                 f"to allowlist-skip them"
             )
-        empty = {"min_lsn": 0, "max_lsn": 0, "events_in": 0,
-                 "vmin": None, "vmax": None, "vnull": 0}
 
         def _apply_one(name: str) -> None:
             cfg, ops, spec = routes[name]
@@ -176,8 +148,7 @@ def apply_batch_routed(
                 batch_id,
                 source_id=f"cdc-{name}",
                 spec=spec,
-                footer_stats=False,
-                stats_override=by_entity.get(name, empty),
+                stats_override=by_entity.get(name, _EMPTY_STATS),
                 input_partitioned=True,
             )
 

@@ -176,8 +176,9 @@ def gen_schema_ops(cfg: GenConfig) -> list[SchemaOp]:
 def gen_binlog(
     cfg: GenConfig, base: pd.DataFrame, ops: list[SchemaOp]
 ) -> pd.DataFrame:
-    """Emit-ordered change events. Columns = BINLOG_SCHEMA; `ts` inside
-    the payload JSON (long epoch-sec pre-widen, ISO string post-widen).
+    """Emit-ordered change events. Columns =
+    `SourceSpec.binlog_schema()`; `ts` inside the payload JSON (long
+    epoch-sec pre-widen, ISO string post-widen).
 
     Vectorized assembly (round-4): the only genuinely sequential state
     is the per-conversation live-turn simulation (I/U/D legality), so

@@ -890,20 +890,12 @@ class LakeTable:
             out = df if out is None else out.unionByName(df)
         return out
 
-    def _patchy(self, m: Manifest, files: list[DataFile]) -> bool:
-        """True iff resolving this file set requires the per-column
-        patch fold: the table has ever appended partial images AND
-        some file in the set is patch-flagged (or predates the
-        per-file bit — unknown is treated as patchy). Compaction
+    def _patchy_buckets(self, m: Manifest, files: list[DataFile]) -> set[int]:
+        """Buckets of `files` whose delta set may contain patch rows:
+        the table has ever appended partial images AND the file's
+        `has_patches` bit is set (unknown counts as patchy). Compaction
         rewrites buckets to full images with has_patches=False, so a
         compacted bucket's reads drop back to the cheap max_by path."""
-        if not m.props.get("patch_deltas"):
-            return False
-        return any(f.has_patches is not False for f in files)
-
-    def _patchy_buckets(self, m: Manifest, files: list[DataFile]) -> set[int]:
-        """Buckets of `files` whose delta set may contain patch rows
-        (per-file `has_patches` bit; unknown counts as patchy)."""
         if not m.props.get("patch_deltas"):
             return set()
         return {f.bucket for f in files if f.has_patches is not False}
@@ -917,11 +909,12 @@ class LakeTable:
 
         When the scanned file set carries partial-image deltas
         (`patchy`; defaults to the table-wide `patch_deltas` prop —
-        callers with the file list in hand pass `_patchy(m, files)` so
-        patch-free buckets skip the fold), resolution is the READ-TIME
-        patch fold: per key, the latest full image (NULL `_patched`)
-        establishes every column and later patch rows override exactly
-        the columns their mask names — the same per-column
+        callers with the file list in hand pass whether
+        `_patchy_buckets(m, files)` is non-empty, so patch-free buckets
+        skip the fold), resolution is the READ-TIME patch fold: per
+        key, the latest full image (NULL `_patched`) establishes every
+        column and later patch rows override exactly the columns their
+        mask names — the same per-column
         `max(struct(lsn, value))` kernel as the write-side
         `resolve_patch_fold`, so MoR gets O(batch) write cost for
         partial-update streams with the fold deferred to scan and
@@ -2243,7 +2236,8 @@ class LakeTable:
             return m.version
         df = self.read_raw()
         if self.write_mode(m) == "mor":
-            df = self._resolve_versions(df, m, patchy=self._patchy(m, m.files))
+            patchy = bool(self._patchy_buckets(m, m.files))
+            df = self._resolve_versions(df, m, patchy=patchy)
         from types import SimpleNamespace
 
         relabeled = SimpleNamespace(bucket_by=m.bucket_by, num_buckets=new_num_buckets)
@@ -2360,10 +2354,38 @@ class LakeTable:
             os.rmdir(self._branches_dir)
         return self.current_version()
 
+    @staticmethod
+    def _reachable(manifests) -> tuple[set[str], set[str]]:
+        """What `manifests` keep alive on disk: (the root-relative paths
+        of their data files and of those files' Bloom sidecars, the
+        names of the group manifests their bucket pointers name). The
+        one reachability rule behind `drop_branch` and
+        `expire_snapshots`."""
+        paths: set[str] = set()
+        groups: set[str] = set()
+        for m in manifests:
+            for f in m.files:
+                paths.add(f.path)
+                if f.bloom:
+                    paths.add(f.bloom["path"])
+                paths.update(meta["path"] for meta in (f.col_blooms or {}).values())
+            groups.update(m.bucket_ptrs.values())
+        return paths, groups
+
+    def _branch_manifests(self, exclude: str | None = None) -> list[Manifest]:
+        """Every manifest of every live branch but `exclude`."""
+        out = []
+        for b in self.branches():
+            if b != exclude:
+                bt = LakeTable(self.spark, self.root, branch=b)
+                out += [bt.manifest(v) for v in self._branch_versions(b)]
+        return out
+
     def drop_branch(self, name: str, vacuum: bool = True) -> dict:
         """Abandon a branch (failed audit). With `vacuum`, physically
-        delete the data files its post-fork commits staged, unless a
-        surviving manifest (main or another branch) references them.
+        delete the data files and Bloom sidecars its post-fork commits
+        staged, unless a surviving manifest (main or another branch)
+        references them.
         Main state is untouched."""
         if self.branch:
             raise ValueError("drop_branch must be called on the main view")
@@ -2373,34 +2395,21 @@ class LakeTable:
         fork = self._branch_fork(name)
         stats = {"files_removed": 0, "bytes_removed": 0}
         if vacuum:
-            branch_files: set[str] = set()
-            branch_mfs: set[str] = set()
             bt = LakeTable(self.spark, self.root, branch=name)
-            for v in self._branch_versions(name):
-                if v > fork:
-                    bm = bt.manifest(v)
-                    branch_files |= {f.path for f in bm.files}
-                    branch_mfs |= set(bm.bucket_ptrs.values())
-            keep: set[str] = set()
-            keep_mfs: set[str] = set()
-            for v in self._branch_versions(name):
-                if v == fork:
-                    bm = bt.manifest(v)
-                    keep |= {f.path for f in bm.files}
-                    keep_mfs |= set(bm.bucket_ptrs.values())
-            for name2 in os.listdir(self._meta_dir):
-                if name2.startswith("v") and name2.endswith(".json"):
-                    mm = self.manifest(int(name2[1:-5]))
-                    keep |= {f.path for f in mm.files}
-                    keep_mfs |= set(mm.bucket_ptrs.values())
-            for other in self.branches():
-                if other == name:
-                    continue
-                ot = LakeTable(self.spark, self.root, branch=other)
-                for v in self._branch_versions(other):
-                    om = ot.manifest(v)
-                    keep |= {f.path for f in om.files}
-                    keep_mfs |= set(om.bucket_ptrs.values())
+            bvers = self._branch_versions(name)
+            branch_files, branch_mfs = self._reachable(
+                bt.manifest(v) for v in bvers if v > fork
+            )
+            main_vers = [
+                int(n[1:-5])
+                for n in os.listdir(self._meta_dir)
+                if n.startswith("v") and n.endswith(".json")
+            ]
+            keep, keep_mfs = self._reachable(
+                [bt.manifest(v) for v in bvers if v == fork]
+                + [self.manifest(v) for v in main_vers]
+                + self._branch_manifests(exclude=name)
+            )
             for rel in sorted(branch_files - keep):
                 full = os.path.join(self.root, rel)
                 if os.path.exists(full):
@@ -2674,42 +2683,19 @@ class LakeTable:
         if not vacuum:
             return stats
 
-        referenced: set[str] = set()
-        ref_mfs: set[str] = set()
-        for v in sorted(set(range(cutoff, cur + 1)) | tagged | kept_by_age):
-            path = self._manifest_path(v)
-            if os.path.exists(path):
-                mv = self.manifest(v)
-                referenced |= {f.path for f in mv.files}
-                referenced |= {
-                    f.bloom["path"] for f in mv.files if f.bloom
-                }
-                referenced |= {
-                    meta["path"]
-                    for f in mv.files if f.col_blooms
-                    for meta in f.col_blooms.values()
-                }
-                ref_mfs |= set(mv.bucket_ptrs.values())
         # live branches share the data directory: everything their
         # manifest chains reference survives, and the versions they
         # staged are skipped outright (a branch version can number at
         # or below main's head if a writer bypassed the WAP contract)
-        branch_vers: set[int] = set()
-        for b in self.branches():
-            bt = LakeTable(self.spark, self.root, branch=b)
-            for v in self._branch_versions(b):
-                branch_vers.add(v)
-                bm = bt.manifest(v)
-                referenced |= {f.path for f in bm.files}
-                referenced |= {
-                    f.bloom["path"] for f in bm.files if f.bloom
-                }
-                referenced |= {
-                    meta["path"]
-                    for f in bm.files if f.col_blooms
-                    for meta in f.col_blooms.values()
-                }
-                ref_mfs |= set(bm.bucket_ptrs.values())
+        branch_vers = {v for b in self.branches() for v in self._branch_versions(b)}
+        referenced, ref_mfs = self._reachable(
+            [
+                self.manifest(v)
+                for v in sorted(set(range(cutoff, cur + 1)) | tagged | kept_by_age)
+                if os.path.exists(self._manifest_path(v))
+            ]
+            + self._branch_manifests()
+        )
         data_dir = os.path.join(self.root, "data")
         for cdir in sorted(os.listdir(data_dir)):
             # commit dirs are data/c<version>-<token>; anything staged

@@ -413,6 +413,27 @@ def test_blooms_compose_with_branch_publish(spark, tmp_path):
     assert got_after == got_main
 
 
+def test_drop_branch_removes_its_sidecars(spark, tmp_path):
+    """Dropping a branch deletes the Bloom sidecars only its commits
+    annotated — also those of main's files, which stay — and main
+    reads on unchanged."""
+    t = _mk(spark, tmp_path, "mor", name="drop", num_buckets=2)
+    merge_into(t, _src(spark, _vrows(0, 100, 0)), batch_key="b0")
+    bt = t.create_branch("backfill")
+    merge_into(bt, _src(spark, _vrows(100, 100, 1)), batch_key="b1")
+    bt.build_blooms(columns=["v"])
+    sidecars = {
+        meta["path"]
+        for f in bt.manifest().files
+        for meta in (f.col_blooms or {}).values()
+    }
+    assert len(sidecars) == len(bt.manifest().files) > len(t.manifest().files)
+    t.drop_branch("backfill")
+    assert [p for p in sidecars if os.path.exists(os.path.join(t.root, p))] == []
+    assert all(os.path.exists(os.path.join(t.root, f.path)) for f in t.manifest().files)
+    assert t.read().count() == 100
+
+
 def test_where_in_after_erase(spark, tmp_path):
     """GDPR composition: erasing a key physically rewrites its bucket;
     a where_in probe for the erased row's value finds nothing, and

@@ -4,6 +4,8 @@ oracle's pure-Python normalization."""
 
 from __future__ import annotations
 
+import json
+import os
 import random
 import re
 import sys
@@ -14,7 +16,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.cdc_schema import TRANSCRIPTS
-from etl_spark.engine.apply import _stats_from_footers, apply_batch, parse_batch
+from etl_spark.engine.apply import (
+    _batch_files_from_checkpoint,
+    _stats_from_footers,
+    apply_batch,
+    parse_batch,
+)
 from etl_spark.engine.normalize import normalize_text, normalize_text_py
 from etl_spark.engine.quarantine import read_quarantine
 from etl_spark.gen.binlog import (
@@ -93,19 +100,34 @@ def _with_versions(binlog, picks: slice, version) -> tuple[pd.DataFrame, set[int
     return out, set(out.loc[upd, "lsn"].astype(int))
 
 
+def write_offset_log(checkpoint_dir: str, batch_id: int, files: list[str]) -> None:
+    """Record `files` as micro-batch `batch_id` in a file-source offset
+    log (`<checkpoint_dir>/sources/0/<batch_id>`), the way a streaming
+    query does."""
+    d = os.path.join(checkpoint_dir, "sources", "0")
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, str(batch_id)), "w") as fh:
+        fh.write("v1\n")
+        for f in files:
+            fh.write(json.dumps({"path": f, "timestamp": 1, "batchId": batch_id}) + "\n")
+
+
 @pytest.mark.parametrize("footer_stats", [True, False])
 def test_null_schema_version_fails_loud(spark, tmp_path, footer_stats):
     """Without a quarantine_dir, NULL-version events must fail the
     batch — the parse filter would otherwise drop them silently — from
-    footer stats and from the aggregation fallback alike."""
+    footer stats (the frame's file is in the offset log) and from the
+    aggregation (it is not) alike."""
     base, ops, binlog = _corpus()
     poisoned, _ = _with_versions(binlog, slice(3, 6), None)
     cfg, frame = _apply_frame(spark, tmp_path, poisoned)
     if footer_stats:
-        assert _stats_from_footers(frame)["vnull"] == 3
+        write_offset_log(cfg.checkpoint_dir, 0, frame.inputFiles())
+        files = _batch_files_from_checkpoint(cfg.checkpoint_dir, 0)
+        assert _stats_from_footers(files)["vnull"] == 3
     bootstrap(spark, cfg, base)
     with pytest.raises(ValueError, match="3 of 100 events have NULL schema_version"):
-        apply_batch(spark, cfg, ops, frame, 0, footer_stats=footer_stats)
+        apply_batch(spark, cfg, ops, frame, 0)
 
 
 def test_out_of_range_schema_version_fails_loud(spark, tmp_path):

@@ -113,7 +113,7 @@ def test_quarantine_idempotent_on_replayed_batch(spark, tmp_path):
         str(p) for p in (tmp_path / "segments").glob("*.parquet")
     )[0]
     frame = spark.read.parquet(seg0)
-    apply_batch(spark, cfg, ops, frame, 0, footer_stats=False)
+    apply_batch(spark, cfg, ops, frame, 0)
 
     state2 = final_state(spark, cfg).toPandas()
     dlq2 = read_quarantine(spark, qdir).toPandas().sort_values("lsn")

@@ -169,6 +169,29 @@ def test_batch_files_from_compacted_offset_log(tmp_path):
     assert _batch_files_from_checkpoint(str(tmp_path / "ckpt"), 5) == []
 
 
+def test_direct_apply_ledger_describes_the_frame(spark, tmp_path):
+    """A direct `apply_batch` on a file-backed frame that the offset log
+    does not list (here filtered to half its LSNs) must take its batch
+    stats from the frame's rows, not from its files' footers: the
+    ledger claims exactly the LSNs that were applied."""
+    from etl_spark.engine import lineage
+    from tests.test_parse import _apply_frame, _corpus
+
+    base, ops, binlog = _corpus()
+    cfg, frame = _apply_frame(spark, tmp_path, binlog)
+    half = frame.filter(F.col("lsn") <= 50)
+    want = half.agg(F.count("*").alias("n"), F.max("lsn").alias("hi")).collect()[0]
+    assert (want["n"], want["hi"]) == (50, 50)
+    bootstrap(spark, cfg, base)
+    apply_batch(spark, cfg, ops, half, 0)
+
+    ledger = lineage.read_manifest(spark, cfg.manifest_dir).toPandas()
+    assert set(ledger["batch_events_in"]) == {50}
+    assert set(ledger["batch_max_lsn"]) == {50}
+    inv = lineage.check_invariants(spark, cfg.manifest_dir)
+    assert (inv["events_distinct_total"], inv["max_lsn"]) == (50, 50)
+
+
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 

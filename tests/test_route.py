@@ -354,3 +354,9 @@ def test_routed_union_audit_sums_slices(spark, tmp_path):
         combined.groupby("_seg")["lsn"].count().sort_index().tolist()
     )
     assert m.sort_values("batch_id")["events_in"].tolist() == per_batch_expected
+    # both audit views read the same rollup, so they agree on the union
+    assert (
+        inv["batches"],
+        inv["events_distinct_total"],
+        inv["events_quarantined_total"],
+    ) == (len(m), int(m["events_new"].sum()), int(m["events_quarantined"].sum()))

@@ -411,9 +411,8 @@ def test_rebucket_between_resumes_preserves_exactly_once(spark, tmp_path):
 
 
 def test_ledger_schema_is_one_schema(spark, tmp_path):
-    """A normal batch manifest (with and without the resolve's lineage
-    counts), a poison-batch manifest and the empty ledger all read back
-    with the one `LEDGER_COLUMNS` schema."""
+    """A normal batch manifest, a poison-batch manifest and the empty
+    ledger all read back with the one `LEDGER_COLUMNS` schema."""
     from etl_spark.lake.table import LakeTable
 
     table = LakeTable.create(
@@ -425,13 +424,10 @@ def test_ledger_schema_is_one_schema(spark, tmp_path):
         [("a", 1, 1, 1, 1), ("b", 3, 2, 2, 1)],
         "k string, lsn long, _nev long, _nlsn long, _nnew long",
     )
-    m_counts, m_plain, m_poison, m_empty = (
-        str(tmp_path / d) for d in ("counts", "plain", "poison", "empty")
+    m_counts, m_poison, m_empty = (
+        str(tmp_path / d) for d in ("counts", "poison", "empty")
     )
     lineage.write_batch_manifest(spark, m_counts, table, resolved, 0, stats, 1)
-    lineage.write_batch_manifest(
-        spark, m_plain, table, resolved.select("k", "lsn"), 0, stats, 1
-    )
     lineage.write_poison_batch_manifest(
         m_poison, 0, {**stats, "events_quarantined": 3}, 1
     )
@@ -440,8 +436,6 @@ def test_ledger_schema_is_one_schema(spark, tmp_path):
     assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
         (c, {"long": "bigint"}.get(t, t)) for c, t in lineage.LEDGER_COLUMNS
     ]
-    for d in (m_counts, m_plain, m_poison):
+    for d in (m_counts, m_poison):
         assert lineage.read_manifest(spark, d).schema == empty.schema, d
-    assert lineage.read_manifest(
-        spark, [m_counts, m_plain, m_poison]
-    ).schema == empty.schema
+    assert lineage.read_manifest(spark, [m_counts, m_poison]).schema == empty.schema
