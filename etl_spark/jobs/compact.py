@@ -126,8 +126,9 @@ def main() -> None:
     p.add_argument(
         "--build-blooms", nargs="*", metavar="COLUMN", default=None,
         help="after compacting, (re)build Bloom sidecars for files "
-        "that lack them: no COLUMN = the bucket key (lookup path); "
-        "named columns get where_in equality-skipping filters "
+        "that lack them: one field-ID-keyed filter per named column, "
+        "probed by where_in; no COLUMN = the bucket key, which "
+        "lookup() probes as where_in on that column "
         "(Iceberg compute-stats analog; run it here because "
         "compaction replaces files and resets their filters)",
     )

@@ -1,27 +1,35 @@
-"""Per-file key Bloom filters for point-lookup file skipping — the
-Iceberg Puffin blob / Delta bloom-filter-index analog. Zone maps
+"""Per-file Bloom filters for equality file skipping — the Iceberg
+Puffin blob / Delta bloom-filter-index analog. Zone maps
 (`DataFile.ranges`) prune files for RANGE predicates; hash-bucketed
 keys are uniform across a bucket's files, so they never help a point
-lookup inside a bucket. A per-file Bloom filter over the `bucket_by`
-column does: `LakeTable.lookup(values)` drops every file whose filter
-proves none of the probed keys is present (false positives keep the
+lookup inside a bucket, and unsorted columns give no useful
+[min, max] either. A per-file Bloom filter over a column does:
+`LakeTable.read(where_in={col: values})` drops every file whose filter
+proves none of the probed values is present (false positives keep the
 file — pruning is only ever an optimization, never the semantics).
+`LakeTable.lookup(values)` is `read(where_in={bucket_by: values})`.
+
+Like a Puffin blob, every filter is addressed by the FIELD ID of the
+column it covers: the manifest records `DataFile.col_blooms[fid]`,
+and the bucket key's filter is just the entry under its own field ID.
 
 The reference has no file statistics of any kind (full scans per
 query: /root/reference/src/pipeline/core/spark.py:87 reads whole
 buckets); this module is new-engine surface for the 10^10-row point-
 lookup path.
 
-Why this is sound under merge-on-read without the zone-map
-bucket-granularity rule: range pruning can drop a file that CONTAINS
-the key (holding its max-LSN image whose value is out of range),
-resurrecting a stale in-range image — hence the single-commit rule.
-Bloom pruning only drops files that contain NO row of any probed key,
-so a probed key's LSN contest sees exactly its full row set; other
-keys' resolutions may run over partial file sets but are filtered out
-by the lookup's equality predicate before anyone sees them. Delete
-tombstones and patch deltas carry the key column, so they are always
-in their file's filter.
+Why a BUCKET-KEY probe is sound under merge-on-read without the
+zone-map bucket-granularity rule: range pruning can drop a file that
+CONTAINS the key (holding its max-LSN image whose value is out of
+range), resurrecting a stale in-range image — hence the single-commit
+rule. Bloom pruning on the key only drops files that contain NO row
+of any probed key, so a probed key's LSN contest sees exactly its
+full row set; other keys' resolutions may run over partial file sets
+but are filtered out by the equality predicate before anyone sees
+them. Delete tombstones and patch deltas carry the key column, so
+they are always in their file's filter. Any other column gives no
+such completeness guarantee, so its probe follows the zone-map rule
+(per-file only within single-commit buckets).
 
 Hashing: classic double hashing (Kirsch-Mitzenmacher) over the JVM's
 `xxhash64` — bit_i = (h1 + i*h2) mod m with h1 = xxhash64(v),
@@ -35,18 +43,18 @@ pre-widen file's int column, and renames don't matter because the
 value, not the name, is hashed.
 
 Sidecar format: raw little-endian packed bit array of ceil(m/8)
-bytes next to the data file (`<file>.bloom-<m>-<k>`), written
-executor-side tmp+rename; the manifest's `DataFile.bloom` records
-{path, m, k}. The parameters are part of the FILENAME so two
-maintenance builders racing with different (m, k) configs can never
-leave the manifest's recorded parameters disagreeing with the bytes
-on disk (same-path replacement would: k=7 positions probed against a
-k=5 bit pattern "proves" present keys absent and silently drops
-rows) — each config writes its own sidecar, the annotation commit
-points at the file its own build wrote, and the loser's sidecars are
-orphans the vacuum reclaims. Probing seeks to the k byte offsets
-instead of reading the whole filter — O(k) byte reads per
-(file, value).
+bytes next to the data file, written executor-side tmp+rename. One
+naming rule covers every column: `<file>.bloom<fid>-<m>-<k>`. The
+manifest's `DataFile.col_blooms[fid]` records {path, m, k, t}. The
+parameters are part of the FILENAME so two maintenance builders
+racing with different (m, k) configs can never leave the manifest's
+recorded parameters disagreeing with the bytes on disk (same-path
+replacement would: k=7 positions probed against a k=5 bit pattern
+"proves" present keys absent and silently drops rows) — each config
+writes its own sidecar, the annotation commit points at the file its
+own build wrote, and the loser's sidecars are orphans the vacuum
+reclaims. Probing seeks to the k byte offsets instead of reading the
+whole filter — O(k) byte reads per (file, value).
 """
 from __future__ import annotations
 
@@ -94,20 +102,16 @@ def position_columns(col: Column, m_bits: int, k: int) -> Column:
     )
 
 
-def sidecar_name(
-    data_path: str, m_bits: int, k: int, fid: int | None = None
-) -> str:
-    """Sidecar path for a data file under a (m, k) config — the
-    parameters ride the name (see module docstring). `fid` scopes a
-    NON-key column's filter (field id), so one data file can carry one
-    sidecar per bloomed column without collisions."""
-    col = "" if fid is None else str(int(fid))
-    return f"{data_path}.bloom{col}-{m_bits}-{k}"
+def sidecar_name(data_path: str, m_bits: int, k: int, fid: int) -> str:
+    """Sidecar path for a data file's filter over field `fid` under a
+    (m, k) config — the parameters ride the name (see module
+    docstring), and the field id lets one data file carry one sidecar
+    per bloomed column without collisions."""
+    return f"{data_path}.bloom{int(fid)}-{m_bits}-{k}"
 
 
 def pack_and_write_sidecars(
-    positions: DataFrame, root: str, m_bits: int, k: int,
-    fid: int | None = None,
+    positions: DataFrame, root: str, m_bits: int, k: int, fid: int,
 ) -> list[tuple[str, int]]:
     """Consume a distinct (_f: file URI, _p: bit position) frame and
     write one packed-bit sidecar per file, executor-side (tmp+rename so

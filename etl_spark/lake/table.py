@@ -40,6 +40,7 @@ import json
 import os
 import re
 import shutil
+import time
 import uuid
 from dataclasses import dataclass, field as dc_field
 
@@ -320,19 +321,14 @@ class DataFile:
     # them stays sound. None = file predates the feature or stats
     # were unavailable (never pruned).
     ranges: dict[int, list] | None = None
-    # Point-lookup Bloom filter over the bucket_by column:
-    # {"path": sidecar rel path, "m": bits, "k": hashes, "t": type the
-    # values were hashed under} or None (no filter — never pruned).
-    # Built by `build_blooms()` maintenance (Iceberg Puffin-stats
-    # analog); see lake/bloom.py for soundness.
-    bloom: dict | None = None
-    # Equality-skipping Bloom filters over NON-key columns, keyed by
-    # FIELD ID (rename-proof), same meta shape as `bloom`. Probed by
-    # `read(where_in=...)` under the zone-map merge-on-read rule
-    # (per-file only within single-commit buckets) — unlike the
-    # bucket-key filter, a non-key column gives no completeness
-    # guarantee for the probed rows' LSN contests.
-    col_blooms: dict[int, dict] | None = None
+    # Bloom filters for equality file skipping, keyed by FIELD ID
+    # (rename-proof; the bucket key's filter is the entry under its own
+    # field id): {"path": sidecar rel path, "m": bits, "k": hashes,
+    # "t": type the values were hashed under}. A column without an
+    # entry is never pruned. Built by `build_blooms()` maintenance or
+    # at write time (`set_bloom_on_write`), probed by
+    # `read(where_in=...)`; see lake/bloom.py for soundness.
+    col_blooms: dict[int, dict] = dc_field(default_factory=dict)
 
     def to_json(self) -> dict:
         d = {"path": self.path, "bucket": self.bucket,
@@ -341,9 +337,7 @@ class DataFile:
             d["has_patches"] = self.has_patches
         if self.ranges is not None:
             d["ranges"] = {str(k): v for k, v in sorted(self.ranges.items())}
-        if self.bloom is not None:
-            d["bloom"] = self.bloom
-        if self.col_blooms is not None:
+        if self.col_blooms:
             d["col_blooms"] = {
                 str(k): v for k, v in sorted(self.col_blooms.items())
             }
@@ -352,13 +346,11 @@ class DataFile:
     @staticmethod
     def from_json(d: dict) -> "DataFile":
         r = d.get("ranges")
-        cb = d.get("col_blooms")
         return DataFile(
             d["path"], d["bucket"], d["schema_id"], d.get("rows", -1),
             d.get("has_patches"),
             {int(k): v for k, v in r.items()} if r is not None else None,
-            d.get("bloom"),
-            {int(k): v for k, v in cb.items()} if cb is not None else None,
+            {int(k): v for k, v in d.get("col_blooms", {}).items()},
         )
 
 
@@ -536,6 +528,27 @@ def _group_files(files: list[DataFile]) -> dict[int, list[DataFile]]:
     return out
 
 
+def _keep_files(files: list[DataFile], may_hold, per_file: bool) -> list[DataFile]:
+    """The one prune-soundness rule for file skipping: keep the files
+    that `may_hold(file)` rows matching the predicate. `per_file`
+    drops files independently (copy-on-write, or a bucket-key probe);
+    otherwise (merge-on-read) a single-commit bucket prunes per file
+    and a multi-commit bucket drops only when EVERY file in it proves
+    absence — commit dir = data/c<version>-<token>/..., and one
+    commit holds at most one version of any key in a bucket
+    (`LakeTable._prune_files` gives the argument)."""
+    if per_file:
+        return [f for f in files if may_hold(f)]
+    out: list[DataFile] = []
+    for _b, fs in sorted(_group_files(files).items()):
+        commits = {_commit_dir(f.path) for f in fs}
+        if len(commits) == 1:
+            out.extend(f for f in fs if may_hold(f))
+        elif any(may_hold(f) for f in fs):
+            out.extend(fs)
+    return out
+
+
 class LakeTable:
     """A versioned parquet table keyed on `key`, hash-bucketed on
     `bucket_by` (the key prefix, e.g. conv_id) into `num_buckets`.
@@ -573,15 +586,22 @@ class LakeTable:
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self._meta_dir, f"v{version:010d}.json")
 
-    def current_version(self) -> int:
-        vs = [
+    @staticmethod
+    def _versions(meta_dir: str) -> list[int]:
+        """Snapshot versions present in `meta_dir` (`v<N>.json` names),
+        ascending — the one listing rule; callers decide how to treat a
+        snapshot that is torn, vanishes or is too young."""
+        return sorted(
             int(n[1:-5])
-            for n in os.listdir(self._meta_dir)
+            for n in os.listdir(meta_dir)
             if n.startswith("v") and n.endswith(".json")
-        ]
+        )
+
+    def current_version(self) -> int:
+        vs = self._versions(self._meta_dir)
         if not vs:
             raise FileNotFoundError(f"no manifests under {self._meta_dir}")
-        return max(vs)
+        return vs[-1]
 
     def history(self) -> DataFrame:
         """Snapshot history (Iceberg `<table>.snapshots` metadata-table
@@ -589,10 +609,8 @@ class LakeTable:
         id, file/batch counts, and deltas vs the parent. Driver-side
         manifest walk — O(retained versions), no data scan."""
         rows = []
-        for name in sorted(os.listdir(self._meta_dir)):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            m = self.manifest(int(name[1:-5]))
+        for v in self._versions(self._meta_dir):
+            m = self.manifest(v)
             parent_batches = None
             if m.parent is not None:
                 try:
@@ -652,11 +670,7 @@ class LakeTable:
                 for fid in sorted(f.ranges or {})
             )
             bloom_cols = ",".join(
-                ([m.bucket_by] if f.bloom else [])
-                + [
-                    id_name.get(fid, f"fid:{fid}")
-                    for fid in sorted(f.col_blooms or {})
-                ]
+                id_name.get(fid, f"fid:{fid}") for fid in sorted(f.col_blooms)
             )
             rows.append((
                 f.path, f.bucket, _commit_dir(f.path), f.schema_id,
@@ -687,15 +701,12 @@ class LakeTable:
             # loses sub-microsecond precision near current epochs)
             ts = _encode_stat(ts, "timestamp")
         best = None
-        for name in sorted(os.listdir(self._meta_dir)):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            v = int(name[1:-5])
+        for v in self._versions(self._meta_dir):
             try:  # racing expire_snapshots may remove it between;
                 # a torn/empty file cannot occur under the tmp+link
                 # publish but is skipped defensively (an in-flight
                 # newest manifest is never the as-of answer anyway)
-                with open(os.path.join(self._meta_dir, name)) as fh:
+                with open(self._manifest_path(v)) as fh:
                     stamp = json.load(fh).get("props", {}).get(
                         "committed_at_us"
                     )
@@ -756,9 +767,7 @@ class LakeTable:
         # powering as-of-timestamp time travel and the history() view.
         # Retries restamp; publish_branch's renames keep the branch
         # commit's original time, as Iceberg fast-forward does.
-        import time as _time
-
-        m.props = {**m.props, "committed_at_us": _time.time_ns() // 1_000}
+        m.props = {**m.props, "committed_at_us": time.time_ns() // 1_000}
         path = self._manifest_path(m.version)
         payload = json.dumps(m.to_json(), indent=1).encode()
         # Publish atomically: write + fsync a uniquely-named tmp file,
@@ -1068,22 +1077,7 @@ class LakeTable:
                     return False
             return True
 
-        if not resolve:
-            return [f for f in files if overlaps(f)]
-        by_bucket: dict[int, list[DataFile]] = {}
-        for f in files:
-            by_bucket.setdefault(f.bucket, []).append(f)
-        out: list[DataFile] = []
-        for b in sorted(by_bucket):
-            fs = by_bucket[b]
-            # commit dir = data/c<version>-<token>/... ; one commit =
-            # at most one version of any key in this bucket
-            commits = {_commit_dir(f.path) for f in fs}
-            if len(commits) == 1:
-                out.extend(f for f in fs if overlaps(f))
-            elif any(overlaps(f) for f in fs):
-                out.extend(fs)
-        return out
+        return _keep_files(files, overlaps, per_file=not resolve)
 
     def _live_from_files(self, m: Manifest, files: list[DataFile]) -> DataFrame:
         """Scan an already-pruned file list to live rows: merge-on-read
@@ -1130,9 +1124,9 @@ class LakeTable:
         filters prove none of the values present — the path for
         multi-value point predicates on columns where neither hash
         bucketing nor a sorted layout helps. On the bucket column it
-        also prunes whole buckets (lookup()'s path). Exact `IN`
-        residual applied to the result; pruning is never the
-        semantics."""
+        also prunes whole buckets; `lookup()` is exactly this path.
+        Exact `IN` residual applied to the result; pruning is never
+        the semantics."""
         import datetime as _dt
 
         m = self.manifest(version)
@@ -1210,57 +1204,23 @@ class LakeTable:
         )
 
     def lookup(self, values: list, version: int | None = None) -> DataFrame:
-        """Point/point-set lookup with manifest bucket pruning
-        (Iceberg's bucket-transform partition pruning analog): scan
-        only the buckets the requested `bucket_by` values hash into,
-        then filter exactly. At 10^10 rows this reads
-        |distinct buckets| / num_buckets of the table's files instead
-        of all of them — the difference between a point query and a
-        full scan.
-
-        Bucket ids come from `_buckets_for_values` (the writer's own
-        JVM hash expression), one job over |values| literal rows
-        transferring <= num_buckets ints back.
-
-        Within the selected buckets, files carrying a Bloom filter
-        (`build_blooms()`) are additionally skipped when the filter
-        proves none of the probed values is present — the prune hash
-        bucketing can't give, because keys are uniform across a
-        bucket's files (lake/bloom.py documents the merge-on-read
-        soundness argument: only files with NO row of any probed key
-        are dropped, so the probed keys' LSN contests are unaffected
-        and other keys never survive the equality filter)."""
+        """Point/point-set lookup on the `bucket_by` column:
+        `read(where_in={bucket_by: values})` at one pinned snapshot.
+        The scan opens only the buckets the values hash into
+        (Iceberg's bucket-transform partition pruning analog) and,
+        within them, only files whose bucket-key Bloom filter
+        (`build_blooms()`) may hold a probed value — at 10^10 rows the
+        difference between a point query and a full scan. Empty
+        `values` returns an empty frame without touching any file."""
         m = self.manifest(version)
         if not values:
-            return self.read(buckets=[], version=version)
-        buckets = self._buckets_for_values(m, values)
-        files = m.files_for(buckets)
-        files = self._prune_files_bloom(m, files, values)
-        return (
-            self._live_from_files(m, files)
-            .filter(F.col(m.bucket_by).isin(values))
-            .drop(SYS_PATCHED, SYS_LSN, SYS_DELETED)
-        )
-
-    def _prune_files_bloom(
-        self, m: Manifest, files: list[DataFile], values: list
-    ) -> list[DataFile]:
-        """Drop files whose Bloom sidecar proves none of the probed
-        BUCKET-KEY `values` is present (lookup()'s prune). Thin alias
-        of the generic-column path: the key column always prunes
-        per-file (`resolve=False`) because probed keys' LSN contests
-        are complete regardless — see lake/bloom.py."""
-        return self._prune_files_bloom_col(
-            m, files, m.bucket_by, values, resolve=False
-        )
+            return self.read(buckets=[], version=m.version)
+        return self.read(version=m.version, where_in={m.bucket_by: list(values)})
 
     @staticmethod
-    def _bloom_cfg(meta: dict, fld: Field) -> tuple[int, int, str]:
-        """(m, k, hash type) of a filter. Filters built before the
-        "t" stamp hashed under the then-current type; the bucket key
-        can never widen (refused), so its current type is correct for
-        them."""
-        return (meta["m"], meta["k"], meta.get("t", fld.type))
+    def _bloom_cfg(meta: dict) -> tuple[int, int, str]:
+        """(m, k, hash type) of a filter."""
+        return (meta["m"], meta["k"], meta["t"])
 
     def _bloom_positions(
         self, cur_type_name: str, vals: list, cfgs: set
@@ -1300,15 +1260,13 @@ class LakeTable:
         values: list,
         resolve: bool,
     ) -> list[DataFile]:
-        """Equality file skipping on an arbitrary column via its
-        per-field-ID Bloom sidecars (`build_blooms(columns=[...])`).
-        Unlike the bucket-key path, a non-key column gives NO
-        completeness guarantee for a probed row's LSN contest, so the
-        zone-map merge-on-read rule applies: per-file pruning only
-        within single-commit buckets; a multi-commit bucket drops only
-        when EVERY file in it proves absence (dropping just one could
+        """Equality file skipping on a column via its per-field-ID
+        Bloom sidecars (`DataFile.col_blooms`). A non-key column gives
+        NO completeness guarantee for a probed row's LSN contest, so
+        the zone-map merge-on-read rule applies (`_keep_files`):
+        dropping just one file of a multi-commit bucket could
         resurrect a stale version of a key whose latest image lacks
-        the probed value). The BUCKET KEY is the exception: a probed
+        the probed value. The BUCKET KEY is the exception: a probed
         key's rows never leave its files' bucket and tombstones/
         patches carry the key, so its LSN contest is complete under
         any per-file drop (lake/bloom.py) — key probes always prune
@@ -1319,50 +1277,31 @@ class LakeTable:
         (file, value) — no filter bodies are read whole."""
         from etl_spark.lake.bloom import probe_sidecar
 
-        if col == m.bucket_by:
-            resolve = False
         fld = next(f for f in m.schema.fields if f.name == col)
         vals = [v for v in values if v is not None]
         if not vals:
             return files
-
-        def _meta(f: DataFile):
-            if col == m.bucket_by:
-                return f.bloom
-            return (f.col_blooms or {}).get(fld.id)
-
         cfgs = {
-            self._bloom_cfg(mt, fld)
-            for mt in (_meta(f) for f in files)
-            if mt is not None
+            self._bloom_cfg(f.col_blooms[fld.id])
+            for f in files
+            if fld.id in f.col_blooms
         }
         if not cfgs:
             return files
         pos_by_cfg = self._bloom_positions(fld.type, vals, cfgs)
 
         def may_contain(f: DataFile) -> bool:
-            mt = _meta(f)
+            mt = f.col_blooms.get(fld.id)
             if mt is None:
                 return True
             return probe_sidecar(
                 os.path.join(self.root, mt["path"]),
-                pos_by_cfg[self._bloom_cfg(mt, fld)],
+                pos_by_cfg[self._bloom_cfg(mt)],
             )
 
-        if not resolve:
-            return [f for f in files if may_contain(f)]
-        by_bucket: dict[int, list[DataFile]] = {}
-        for f in files:
-            by_bucket.setdefault(f.bucket, []).append(f)
-        out: list[DataFile] = []
-        for b in sorted(by_bucket):
-            fs = by_bucket[b]
-            commits = {_commit_dir(f.path) for f in fs}
-            if len(commits) == 1:
-                out.extend(f for f in fs if may_contain(f))
-            elif any(may_contain(f) for f in fs):
-                out.extend(fs)
-        return out
+        return _keep_files(
+            files, may_contain, per_file=not resolve or col == m.bucket_by
+        )
 
     def build_blooms(
         self,
@@ -1378,21 +1317,21 @@ class LakeTable:
         merges rebase over it.
 
         `columns` defaults to [bucket_by] — the `lookup()` point-read
-        path. Non-key columns get per-field-ID filters probed by
-        `read(where_in=...)` (equality skipping where zone maps need a
-        sorted layout and hash buckets never help); their metas record
-        the TYPE the values were hashed under ("t"), because xxhash64
-        is type-sensitive and a later widen changes the probe's cast —
-        the probe re-encodes under each filter's own build type.
+        path. Every column's filter, the bucket key's included, lands
+        in `DataFile.col_blooms` under its field ID and is probed by
+        `read(where_in=...)` (`lookup(values)` is
+        `read(where_in={bucket_by: values})`): equality skipping where
+        zone maps need a sorted layout and hash buckets never help.
+        Metas record the TYPE the values were hashed under ("t"),
+        because xxhash64 is type-sensitive and a later widen changes
+        the probe's cast — the probe re-encodes under each filter's
+        own build type.
 
-        The build is one distributed job per column: each target
-        file's column is read with its own write-time schema (field-ID
-        name lookup, so pre-rename files resolve) and CAST to the
-        current type, bit positions come from the shared JVM
-        expression, and sidecars are packed and written executor-side.
-        Commit-loop retries re-derive the annotation from the fresh
-        manifest, so racing a compaction simply annotates whatever
-        files survive.
+        The build is one distributed job per column
+        (`_write_sidecars`), sized from the targets' recorded row
+        counts. Commit-loop retries re-derive the annotation from the
+        fresh manifest, so racing a compaction simply annotates
+        whatever files survive.
 
         Returns {"files_bloomed", "m_bits", "version", "columns"}."""
         from etl_spark.lake import bloom as _bl
@@ -1412,96 +1351,24 @@ class LakeTable:
                 raise ValueError(
                     f"column {c!r} ({fld.type}) has no Bloom support"
                 )
-
-        def _has(f: DataFile, c: str) -> bool:
-            if c == m.bucket_by:
-                return f.bloom is not None
-            return (f.col_blooms or {}).get(by_name[c].id) is not None
-
-        targets_by_col = {
-            c: [f for f in m.files if not _has(f, c)] for c in cols
+        files = m.files
+        targets = {
+            c: [f for f in files if by_name[c].id not in f.col_blooms]
+            for c in cols
         }
-        all_targets = {
-            f.path: f for fs in targets_by_col.values() for f in fs
-        }
+        all_targets = [f for fs in targets.values() for f in fs]
         if not all_targets:
             return {"files_bloomed": 0, "m_bits": 0, "version": m.version,
                     "columns": cols}
-        # width from the largest target file's row count — from the
-        # manifest when the writer recorded it, else the footer
-        from concurrent.futures import ThreadPoolExecutor
-        import pyarrow.parquet as pq
-
-        def _rows(f: DataFile) -> int:
-            if f.rows >= 0:
-                return f.rows
-            try:
-                return pq.ParquetFile(
-                    os.path.join(self.root, f.path)
-                ).metadata.num_rows
-            except Exception:
-                return 0
-
-        with ThreadPoolExecutor(
-            max_workers=min(16, len(all_targets))
-        ) as ex:
-            max_rows = max(ex.map(_rows, all_targets.values()))
-        m_bits = _bl.size_bits(max_rows, bits_per_row)
-
-        # per column: one distributed positions job + sidecar write
-        key_meta_by_path: dict[str, dict] = {}
-        col_meta_by_path: dict[str, dict[int, dict]] = {}
+        # width from the largest target file's recorded row count
+        m_bits = _bl.size_bits(max(f.rows for f in all_targets), bits_per_row)
+        metas: dict[str, dict[int, dict]] = {}
         for c in cols:
             fld = by_name[c]
-            fid = fld.id
-            cur_type = spark_type(fld.type)
-            by_sid: dict[int, list[str]] = {}
-            for f in targets_by_col[c]:
-                by_sid.setdefault(f.schema_id, []).append(
-                    os.path.join(self.root, f.path)
-                )
-            parts = []
-            for sid, paths in sorted(by_sid.items()):
-                wf = m.schemas[sid].by_id().get(fid)
-                if wf is None:
-                    continue  # column postdates these files: no filter
-                df = self.spark.read.schema(
-                    T.StructType([T.StructField(wf.name, spark_type(wf.type))])
-                ).parquet(*paths)
-                parts.append(
-                    df.select(
-                        F.input_file_name().alias("_f"),
-                        F.col(wf.name).cast(cur_type).alias("_kv"),
-                    ).filter(F.col(wf.name).isNotNull())
-                )
-            if not parts:
-                continue
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-            positions = (
-                u.select(
-                    "_f",
-                    F.explode(
-                        _bl.position_columns(F.col("_kv"), m_bits, k)
-                    ).alias("_p"),
-                )
-                .distinct()
-            )
-            name_fid = None if c == m.bucket_by else fid
-            written = _bl.pack_and_write_sidecars(
-                positions, self.root, m_bits, k, name_fid
-            )
-            for rel, _n in written:
-                meta = {
-                    "path": _bl.sidecar_name(rel, m_bits, k, name_fid),
-                    "m": m_bits, "k": k, "t": fld.type,
-                }
-                if c == m.bucket_by:
-                    key_meta_by_path[rel] = meta
-                else:
-                    col_meta_by_path.setdefault(rel, {})[fid] = meta
-        if not key_meta_by_path and not col_meta_by_path:
+            written = self._write_sidecars(m, targets[c], fld, m_bits, k)
+            for rel, meta in written.items():
+                metas.setdefault(rel, {})[fld.id] = meta
+        if not metas:
             return {"files_bloomed": 0, "m_bits": m_bits,
                     "version": m.version, "columns": cols}
 
@@ -1522,26 +1389,18 @@ class LakeTable:
                 new_group = []
                 changed = False
                 for f in cur.group(b):
-                    repl = {}
-                    km = key_meta_by_path.get(f.path)
-                    if km is not None and f.bloom is None:
-                        repl["bloom"] = km
-                    cm = col_meta_by_path.get(f.path)
-                    if cm:
-                        merged = dict(f.col_blooms or {})
-                        fresh = {
-                            fid: meta for fid, meta in cm.items()
-                            if fid not in merged
-                        }
-                        if fresh:
-                            merged.update(fresh)
-                            repl["col_blooms"] = merged
-                    if repl:
-                        new_group.append(dataclasses.replace(f, **repl))
+                    fresh = {
+                        fid: meta
+                        for fid, meta in metas.get(f.path, {}).items()
+                        if fid not in f.col_blooms
+                    }
+                    if fresh:
+                        f = dataclasses.replace(
+                            f, col_blooms={**f.col_blooms, **fresh}
+                        )
                         changed = True
                         n_annotated += 1
-                    else:
-                        new_group.append(f)
+                    new_group.append(f)
                 if changed:
                     groups[b] = new_group
             if not groups:
@@ -1745,55 +1604,78 @@ class LakeTable:
         the pending DataFile entries, so the annotations publish
         atomically WITH the files in the same manifest commit — a
         point lookup right after the merge prunes these files too.
-        Staged files always carry the current schema (writer-side
-        cast enforcement above), so no field-ID alignment is needed;
-        row counts for sizing come from the footer stats already in
-        hand, and the staged parquet is page-cache warm. Policy
-        columns resolve by FIELD ID; ids dropped from the schema are
-        skipped."""
+        Sidecars come from `_write_sidecars`, the same builder
+        `build_blooms` uses; row counts for sizing come from the
+        footer stats already in hand, and the staged parquet is
+        page-cache warm. Policy columns resolve by FIELD ID; ids
+        dropped from the schema are skipped."""
         from etl_spark.lake import bloom as _bl
 
         k = int(policy.get("k", _bl.DEFAULT_K))
         bpr = int(policy.get("bits_per_row", _bl.DEFAULT_BITS_PER_ROW))
-        m_bits = _bl.size_bits(
-            max(max((e.rows for e in entries), default=0), 1), bpr
-        )
+        m_bits = _bl.size_bits(max(e.rows for e in entries), bpr)
         by_id = {f.id: f for f in m.schema.fields}
         by_path = {e.path: e for e in entries}
-        paths = [os.path.join(self.root, e.path) for e in entries]
         for fid in policy.get("fids", []):
             fld = by_id.get(fid)
             if fld is None or fld.type not in _STAT_TYPES:
                 continue
+            written = self._write_sidecars(m, entries, fld, m_bits, k)
+            for rel, meta in written.items():
+                if rel in by_path:
+                    by_path[rel].col_blooms[fid] = meta
+
+    def _write_sidecars(
+        self, m: Manifest, files: list[DataFile], fld: Field, m_bits: int,
+        k: int,
+    ) -> dict[str, dict]:
+        """Build one (m_bits, k) Bloom sidecar over field `fld` for each
+        of `files` — the one sidecar builder behind `build_blooms` and
+        write-time blooms. One distributed job: each file's column is
+        read under its WRITER name (field-ID lookup in its own schema,
+        so pre-rename files resolve) and CAST to the current type,
+        NULLs dropped, bit positions from the shared JVM expression,
+        sidecars packed and written executor-side. Files whose schema
+        predates the column get no filter. Returns {data path: meta}
+        for `DataFile.col_blooms[fld.id]`."""
+        from etl_spark.lake import bloom as _bl
+
+        by_sid: dict[int, list[str]] = {}
+        for f in files:
+            by_sid.setdefault(f.schema_id, []).append(
+                os.path.join(self.root, f.path)
+            )
+        parts = []
+        for sid, paths in sorted(by_sid.items()):
+            wf = m.schemas[sid].by_id().get(fld.id)
+            if wf is None:
+                continue  # column postdates these files: no filter
             df = self.spark.read.schema(
-                T.StructType([T.StructField(fld.name, spark_type(fld.type))])
+                T.StructType([T.StructField(wf.name, spark_type(wf.type))])
             ).parquet(*paths)
-            positions = (
-                df.filter(F.col(fld.name).isNotNull())
-                .select(
+            parts.append(
+                df.filter(F.col(wf.name).isNotNull()).select(
                     F.input_file_name().alias("_f"),
-                    F.explode(
-                        _bl.position_columns(F.col(fld.name), m_bits, k)
-                    ).alias("_p"),
+                    F.col(wf.name).cast(spark_type(fld.type)).alias("_v"),
                 )
-                .distinct()
             )
-            name_fid = None if fld.name == m.bucket_by else fid
-            written = _bl.pack_and_write_sidecars(
-                positions, self.root, m_bits, k, name_fid
-            )
-            for rel, _n in written:
-                e = by_path.get(rel)
-                if e is None:
-                    continue
-                meta = {
-                    "path": _bl.sidecar_name(rel, m_bits, k, name_fid),
-                    "m": m_bits, "k": k, "t": fld.type,
-                }
-                if name_fid is None:
-                    e.bloom = meta
-                else:
-                    e.col_blooms = {**(e.col_blooms or {}), fid: meta}
+        if not parts:
+            return {}
+        u = parts[0]
+        for p in parts[1:]:
+            u = u.unionByName(p)
+        positions = u.select(
+            "_f",
+            F.explode(_bl.position_columns(F.col("_v"), m_bits, k)).alias("_p"),
+        ).distinct()
+        written = _bl.pack_and_write_sidecars(positions, self.root, m_bits, k, fld.id)
+        return {
+            rel: {
+                "path": _bl.sidecar_name(rel, m_bits, k, fld.id),
+                "m": m_bits, "k": k, "t": fld.type,
+            }
+            for rel, _n in written
+        }
 
     def _rebase_safe(self, base_version: int, base: Manifest, fresh: Manifest) -> bool:
         """True iff a rewrite computed from `base_version` may be
@@ -2034,9 +1916,12 @@ class LakeTable:
         the new files too, with no separate `build_blooms` pass to
         schedule (the Iceberg write.metadata/Puffin-on-write analog).
 
-        `columns` defaults to [bucket_by] (the lookup path); non-key
-        columns get the `read(where_in=...)` equality filters. The
-        policy stores FIELD IDS, so renames keep it attached to the
+        `columns` defaults to [bucket_by] (the lookup path). Every
+        column's filter, the bucket key's included, lands in
+        `DataFile.col_blooms` under its field id, where
+        `read(where_in=...)` probes it — `lookup(values)` is
+        `read(where_in={bucket_by: values})`. The policy stores FIELD
+        IDS, so renames keep it attached to the
         same columns; a later drop simply stops matching. Incremental
         cost per commit: one distributed positions job + sidecar
         writes over the just-staged (page-cache-warm) files — the
@@ -2299,12 +2184,7 @@ class LakeTable:
             return int(json.load(fh)["fork"])
 
     def _branch_versions(self, name: str) -> list[int]:
-        bdir = os.path.join(self._branches_dir, name)
-        return sorted(
-            int(n[1:-5])
-            for n in os.listdir(bdir)
-            if n.startswith("v") and n.endswith(".json")
-        )
+        return self._versions(os.path.join(self._branches_dir, name))
 
     def publish_branch(self, name: str) -> int:
         """Fast-forward main to the branch head: move the branch's
@@ -2366,9 +2246,7 @@ class LakeTable:
         for m in manifests:
             for f in m.files:
                 paths.add(f.path)
-                if f.bloom:
-                    paths.add(f.bloom["path"])
-                paths.update(meta["path"] for meta in (f.col_blooms or {}).values())
+                paths.update(meta["path"] for meta in f.col_blooms.values())
             groups.update(m.bucket_ptrs.values())
         return paths, groups
 
@@ -2400,14 +2278,9 @@ class LakeTable:
             branch_files, branch_mfs = self._reachable(
                 bt.manifest(v) for v in bvers if v > fork
             )
-            main_vers = [
-                int(n[1:-5])
-                for n in os.listdir(self._meta_dir)
-                if n.startswith("v") and n.endswith(".json")
-            ]
             keep, keep_mfs = self._reachable(
                 [bt.manifest(v) for v in bvers if v == fork]
-                + [self.manifest(v) for v in main_vers]
+                + [self.manifest(v) for v in self._versions(self._meta_dir)]
                 + self._branch_manifests(exclude=name)
             )
             for rel in sorted(branch_files - keep):
@@ -2652,15 +2525,12 @@ class LakeTable:
             "kept_from_version": cutoff,
         }
         kept_by_age: set[int] = set()
-        for name in sorted(os.listdir(self._meta_dir)):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            v = int(name[1:-5])
+        for v in self._versions(self._meta_dir):
             if v >= cutoff or v in tagged:
                 continue
             if older_than is not None:
                 try:  # torn/vanished file: age unknown, keep it
-                    with open(os.path.join(self._meta_dir, name)) as fh:
+                    with open(self._manifest_path(v)) as fh:
                         stamp = json.load(fh).get("props", {}).get(
                             "committed_at_us"
                         )
@@ -2675,7 +2545,7 @@ class LakeTable:
                     # survive the vacuum like any retained snapshot's
                     kept_by_age.add(v)
                     continue
-            os.remove(os.path.join(self._meta_dir, name))
+            os.remove(self._manifest_path(v))
             stats["manifests_removed"] += 1
         if kept_by_age:
             stats["kept_by_age"] = len(kept_by_age)
@@ -2688,6 +2558,19 @@ class LakeTable:
         # staged are skipped outright (a branch version can number at
         # or below main's head if a writer bypassed the WAP contract)
         branch_vers = {v for b in self.branches() for v in self._branch_versions(b)}
+
+        def too_young(full: str) -> bool:
+            # `orphan_grace_seconds` (Iceberg remove_orphan_files
+            # `older_than` analog) protects a writer mid-commit whose
+            # staged version is no longer above `cur` — possible under
+            # the rebase commit loop, where the final version lands
+            # past the staging version. Young unreferenced files are
+            # left for the next run.
+            return (
+                orphan_grace_seconds > 0
+                and time.time() - os.path.getmtime(full) < orphan_grace_seconds
+            )
+
         referenced, ref_mfs = self._reachable(
             [
                 self.manifest(v)
@@ -2717,25 +2600,15 @@ class LakeTable:
                     # and deleting one in that window would leave the
                     # landed annotation pointing at nothing (pruning
                     # silently disabled forever: the file is never
-                    # re-targeted once f.bloom is set). Final sidecar
-                    # names only; .tmp-* leftovers of crashed builds
-                    # stay reclaimable.
-                    sc = re.fullmatch(r"(?P<data>.+)\.bloom\d*(-\d+-\d+)?", rel)
+                    # re-targeted once its column has an entry). Final
+                    # sidecar names only; .tmp-* leftovers of crashed
+                    # builds stay reclaimable.
+                    sc = re.fullmatch(r"(?P<data>.+)\.bloom\d+-\d+-\d+", rel)
                     if sc is not None and sc.group("data") in referenced:
                         continue
                     if rel not in referenced:
-                        # `orphan_grace_seconds` (Iceberg
-                        # remove_orphan_files `older_than` analog)
-                        # protects a writer mid-commit whose staged dir
-                        # version is no longer above `cur` — possible
-                        # under the rebase commit loop, where the final
-                        # version lands past the staging version. Young
-                        # unreferenced files are left for the next run.
-                        if orphan_grace_seconds > 0:
-                            import time as _time
-
-                            if _time.time() - os.path.getmtime(full) < orphan_grace_seconds:
-                                continue
+                        if too_young(full):
+                            continue
                         stats["bytes_removed"] += os.path.getsize(full)
                         os.remove(full)
                         stats["files_removed"] += 1
@@ -2755,11 +2628,8 @@ class LakeTable:
                 if mver > cur or mver in branch_vers:
                     continue
                 full = os.path.join(self._manifests_dir, name)
-                if orphan_grace_seconds > 0:
-                    import time as _time
-
-                    if _time.time() - os.path.getmtime(full) < orphan_grace_seconds:
-                        continue
+                if too_young(full):
+                    continue
                 os.remove(full)
                 stats["groups_removed"] += 1
         return stats

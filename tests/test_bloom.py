@@ -30,6 +30,12 @@ def _mk(spark, tmp_path, mode, name="t", num_buckets=2):
     )
 
 
+def _key_fid(m):
+    """Field id of the bucket key — the key of its Bloom filter entry
+    in `DataFile.col_blooms`."""
+    return next(f.id for f in m.schema.fields if f.name == m.bucket_by)
+
+
 def _src(spark, rows):
     return spark.createDataFrame(pd.DataFrame(rows))
 
@@ -153,17 +159,22 @@ def test_build_annotates_only_surviving_files_after_compaction(spark, tmp_path):
     for b in range(3):
         merge_into(t, _src(spark, _rows(b * 10, 10, b)), batch_key=f"b{b}")
     t.build_blooms()
+    kf = _key_fid(t.manifest())
     old_sidecars = {
-        f.bloom["path"] for f in t.manifest().files if f.bloom
+        f.col_blooms.get(kf)["path"] for f in t.manifest().files
+        if f.col_blooms.get(kf)
     }
     assert old_sidecars
     t.compact(max_files_per_bucket=1)
-    assert all(f.bloom is None for f in t.manifest().files)
+    assert all(f.col_blooms.get(kf) is None for f in t.manifest().files)
     res = t.build_blooms()
     assert res["files_bloomed"] > 0
     assert [r["v"] for r in t.lookup([15]).collect()] == [151]
     t.expire_snapshots(keep_last=1)
-    live = {f.bloom["path"] for f in t.manifest().files if f.bloom}
+    live = {
+        f.col_blooms.get(kf)["path"] for f in t.manifest().files
+        if f.col_blooms.get(kf)
+    }
     for rel in live:
         assert os.path.exists(os.path.join(t.root, rel))
     for rel in old_sidecars:
@@ -195,12 +206,12 @@ def test_false_positive_rate_bounded(spark, tmp_path):
     merge_into(t, _src(spark, _rows(0, 2000, 0)), batch_key="b0")
     t.build_blooms()
     m = t.manifest()
-    f = next(f for f in m.files if f.bloom)
+    f = next(f for f in m.files if f.col_blooms.get(_key_fid(m)))
     fp = 0
     trials = 200
     for i in range(trials):
         probe = [1_000_000 + i]
-        if t._prune_files_bloom(m, [f], probe):
+        if t._prune_files_bloom_col(m, [f], m.bucket_by, probe, resolve=False):
             fp += 1
     assert fp / trials < 0.10, f"fp rate {fp/trials}"
 
@@ -212,8 +223,9 @@ def test_truncated_sidecar_keeps_file(spark, tmp_path):
     t = _mk(spark, tmp_path, "mor", name="trunc", num_buckets=1)
     merge_into(t, _src(spark, _rows(0, 50, 0)), batch_key="b0")
     t.build_blooms()
-    f = next(f for f in t.manifest().files if f.bloom)
-    sc = os.path.join(t.root, f.bloom["path"])
+    kf = _key_fid(t.manifest())
+    f = next(f for f in t.manifest().files if f.col_blooms.get(kf))
+    sc = os.path.join(t.root, f.col_blooms.get(kf)["path"])
     with open(sc, "r+b") as fh:
         fh.truncate(1)  # nearly everything now reads past EOF
     assert [r["v"] for r in t.lookup([7]).collect()] == [70]
@@ -224,15 +236,23 @@ def test_sidecar_name_carries_params(spark, tmp_path):
     with a different config can never leave the manifest's recorded
     parameters disagreeing with the bytes on disk (same-path
     replacement would prune present keys). Non-default params build,
-    annotate their own path, and probe exactly."""
+    annotate their own path, and probe exactly. One naming rule covers
+    every column: the bucket key's filter is keyed and named by its
+    field id like any other column's."""
+    from etl_spark.lake.bloom import sidecar_name
+
     t = _mk(spark, tmp_path, "mor", name="params", num_buckets=1)
     merge_into(t, _src(spark, _rows(0, 200, 0)), batch_key="b0")
-    res = t.build_blooms(bits_per_row=12, k=5)
+    res = t.build_blooms(columns=["user_id", "v"], bits_per_row=12, k=5)
     assert res["files_bloomed"] > 0
-    for f in t.manifest().files:
-        assert f.bloom["k"] == 5
-        assert f.bloom["path"].endswith(f".bloom-{f.bloom['m']}-5")
-        assert os.path.exists(os.path.join(t.root, f.bloom["path"]))
+    m = t.manifest()
+    fids = {f.name: f.id for f in m.schema.fields}
+    for f in m.files:
+        assert set(f.col_blooms) == {fids["user_id"], fids["v"]}
+        for fid, meta in f.col_blooms.items():
+            assert meta["k"] == 5
+            assert meta["path"] == sidecar_name(f.path, meta["m"], 5, fid)
+            assert os.path.exists(os.path.join(t.root, meta["path"]))
     assert [r["v"] for r in t.lookup([7]).collect()] == [70]
     assert t.lookup([999_999]).count() == 0
 
@@ -247,9 +267,12 @@ def test_vacuum_keeps_unannotated_sidecar_of_live_file(spark, tmp_path):
     t = _mk(spark, tmp_path, "cow", name="vac", num_buckets=1)
     merge_into(t, _src(spark, _rows(0, 20, 0)), batch_key="b0")
     merge_into(t, _src(spark, _rows(0, 20, 1)), batch_key="b1")
-    live = next(f for f in t.manifest().files if f.bloom is None)
-    side = os.path.join(t.root, live.path + ".bloom-8192-7")
-    tmp = os.path.join(t.root, live.path + ".bloom-8192-7.tmp-deadbeef")
+    from etl_spark.lake.bloom import sidecar_name
+
+    kf = _key_fid(t.manifest())
+    live = next(f for f in t.manifest().files if f.col_blooms.get(kf) is None)
+    side = os.path.join(t.root, sidecar_name(live.path, 8192, 7, kf))
+    tmp = side + ".tmp-deadbeef"
     for p in (side, tmp):
         with open(p, "wb") as fh:
             fh.write(b"\xff" * 1024)
@@ -548,8 +571,9 @@ def test_write_time_bloom_policy(spark, tmp_path, mode):
     for b in range(3):
         merge_into(t, _src(spark, _rows(b * 50, 50, b)), batch_key=f"b{b}")
     m = t.manifest()
-    assert all(f.bloom is not None for f in m.files), [
-        f.path for f in m.files if f.bloom is None
+    kf = _key_fid(m)
+    assert all(f.col_blooms.get(kf) is not None for f in m.files), [
+        f.path for f in m.files if f.col_blooms.get(kf) is None
     ]
     got = {r["user_id"]: r["v"] for r in t.lookup([5, 75, 125]).collect()}
     assert set(got) == {5, 75, 125}
@@ -564,8 +588,9 @@ def test_write_time_bloom_generic_column_and_disable(spark, tmp_path):
     merge_into(t, _src(spark, _rows(0, 40, 1)), batch_key="b0")
     m = t.manifest()
     vid = {f.name: f.id for f in m.schema.fields}["v"]
+    kf = _key_fid(m)
     assert all(
-        f.bloom is not None and vid in (f.col_blooms or {})
+        f.col_blooms.get(kf) is not None and vid in f.col_blooms
         for f in m.files
     )
     # where_in on the non-key column uses the write-time filter
@@ -576,7 +601,7 @@ def test_write_time_bloom_generic_column_and_disable(spark, tmp_path):
     merge_into(t, _src(spark, _rows(100, 10, 2)), batch_key="b1")
     m2 = t.manifest()
     newly = [f for f in m2.files if f.path not in {f.path for f in m.files}]
-    assert newly and all(f.bloom is None for f in newly)
+    assert newly and all(f.col_blooms.get(kf) is None for f in newly)
 
 
 def test_write_time_bloom_policy_survives_rename(spark, tmp_path):
@@ -595,6 +620,6 @@ def test_write_time_bloom_policy_survives_rename(spark, tmp_path):
         batch_key="b1",
     )
     m = t.manifest()
-    assert all(f.bloom is not None for f in m.files)
+    assert all(f.col_blooms.get(_key_fid(m)) is not None for f in m.files)
     assert t.lookup([7, 45]).count() == 2
     assert len(t.lookup([10_000_000]).inputFiles()) == 0

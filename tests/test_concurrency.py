@@ -354,8 +354,9 @@ def test_build_blooms_retries_after_race(spark, tmp_path):
     assert m.props["maintenance_commit"] == v
     assert f"race:{lsn}" in m.committed_batches
     assert out["files_bloomed"] == len(before)
-    assert all(f.bloom is not None for f in m.files if f.path in before)
-    assert any(f.path not in before and f.bloom is None for f in m.files)
+    kf = next(f.id for f in m.schema.fields if f.name == m.bucket_by)
+    assert all(f.col_blooms.get(kf) is not None for f in m.files if f.path in before)
+    assert any(f.path not in before and f.col_blooms.get(kf) is None for f in m.files)
     for conv in (other, oracle["conv_id"].iloc[0]):
         got = sorted(
             (r["turn_idx"], r["text"])
