@@ -65,19 +65,25 @@ class SourceSpec:
         the key columns (payload carries the non-key fields)."""
         from etl_spark.lake.table import spark_type
 
-        fields = [
+        types = dict(self.base_fields)
+        return binlog_envelope(
+            [T.StructField(k, spark_type(types[k]), False) for k in self.key]
+        )
+
+
+def binlog_envelope(keys: list[T.StructField]) -> T.StructType:
+    """The one binlog envelope, wrapped around `keys` (an entity's key
+    columns, or a shared log's route column plus its key union)."""
+    return T.StructType(
+        [
             T.StructField("lsn", T.LongType(), False),
             T.StructField("op", T.StringType(), False),  # I | U | D
-        ]
-        types = dict(self.base_fields)
-        for k in self.key:
-            fields.append(T.StructField(k, spark_type(types[k]), False))
-        fields += [
+            *keys,
             T.StructField("op_ts", T.TimestampType(), False),
             T.StructField("schema_version", T.IntegerType(), False),
             T.StructField("payload", T.StringType(), True),  # JSON; null for D
         ]
-        return T.StructType(fields)
+    )
 
 
 TRANSCRIPTS = SourceSpec(

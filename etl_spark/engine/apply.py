@@ -23,9 +23,11 @@ normalize -> resolve pipeline over a single scan of the batch, plus
 one small aggregation over the persisted resolved set (lineage
 rollup, <= num_buckets result rows, written driver-side). Adaptive
 execution submits each shuffle-map stage as a job of its own, so the
-traced `replay_bulk` benchmark run (perfbench/) counts 7 Spark jobs
-per MoR batch: 5 under the MERGE, ending with the staging write, and
-2 for the lineage rollup. (A per-version Union parse counted 10 there:
+traced `replay_bulk` benchmark run (perfbench/) counts 6 Spark jobs
+per MoR batch: 4 under the MERGE, ending with the staging write, and
+2 for the lineage rollup. Parse and normalize run in the source's
+partitioning, so the resolve aggregation's own exchange is the
+batch's one shuffle. (A per-version Union parse counted 10 there:
 every schema version in the batch added its own raw-exchange job.)
 Batch stats have two producers: the parquet footers of the files the
 checkpoint offset log lists for the batch (driver-side, no job), and
@@ -387,7 +389,6 @@ def apply_batch(
     source_id: str = "cdc",
     spec: SourceSpec = TRANSCRIPTS,
     stats_override: dict | None = None,
-    input_partitioned: bool = False,
 ) -> None:
     table = LakeTable(spark, cfg.table_root, branch=cfg.branch)
     batch_key = f"{source_id}:{batch_id}"
@@ -407,12 +408,10 @@ def apply_batch(
     # direct call, a routed slice), or a stream transformed upstream
     # (watermark dedup drops rows the footers would still count)
     stats_src = stats_override
-    n_src_files = None
     if stats_src is None and not cfg.use_watermark_dedup:
-        files = _batch_files_from_checkpoint(cfg.checkpoint_dir, batch_id)
-        stats_src = _stats_from_footers(files)
-        if stats_src is not None:
-            n_src_files = len(files)
+        stats_src = _stats_from_footers(
+            _batch_files_from_checkpoint(cfg.checkpoint_dir, batch_id)
+        )
     stats_src = stats_src or _stats_from_agg(batch_df)
     if stats_src["events_in"] == 0:
         return
@@ -489,29 +488,12 @@ def apply_batch(
         )
     versions = list(range(lo, hi + 1))
 
-    # 2. ensure the narrow parse/normalize stages have enough map-side
-    #    parallelism. A micro-batch of >= `width` source files already
-    #    has it (one task per file): skip the explicit repartition and
-    #    let the resolve aggregation's OWN exchange distribute by key —
-    #    that exchange carries parsed, typed, partial-agg-collapsed
-    #    rows, strictly smaller than the raw payload rows an up-front
-    #    repartition would shuffle (on a multi-executor cluster this is
-    #    the difference between one cross-JVM shuffle of raw JSON and
-    #    one of resolved rows). Only a batch of FEWER files than cores
-    #    (unsplittable row groups) pays the up-front repartition,
-    #    partitioned on the resolve key so Catalyst can elide the
-    #    exchange under the max-LSN aggregation (it does only without
-    #    the normalize UDF: ArrowEvalPython does not pass the child's
-    #    partitioning on, so a normalized batch shuffles twice).
-    #    Callers that already distributed the input (the routed path
-    #    widens the SHARED batch once before fan-out) pass
-    #    input_partitioned=True so each slice skips its own raw
-    #    shuffle — N raw repartitions per batch was the routed cost.
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if not input_partitioned and (n_src_files is None or n_src_files < width):
-        batch_df = batch_df.repartition(width, *[F.col(k) for k in spec.key])
-
-    # 3-4. parse by version -> current schema, then normalize text
+    # 2-3. parse by version -> current schema, then normalize text, in
+    #    the source's own partitioning (one task per file split): parse,
+    #    normalize and the resolve's partial aggregation share one map
+    #    stage, and the resolve's hash exchange — of partially
+    #    aggregated rows, not raw payloads — is the batch's only
+    #    shuffle before the MERGE
     parsed = parse_batch(
         batch_df,
         ops,
@@ -521,7 +503,7 @@ def apply_batch(
         with_set_flags=cfg.patch_ops,
     )
 
-    # 5. max-LSN resolution per key (out-of-order within the batch).
+    # 4. max-LSN resolution per key (out-of-order within the batch).
     #    Exact-duplicate re-emits (same key AND lsn) carry identical
     #    payloads by construction, so max_by collapses them too — no
     #    separate dropDuplicates shuffle needed. with_counts piggybacks
@@ -559,9 +541,9 @@ def apply_batch(
         "events_quarantined": n_quarantined,
     }
 
-    # 6. MERGE into the lake (bucket-pruned CoW / O(batch) MoR append;
+    # 5. MERGE into the lake (bucket-pruned CoW / O(batch) MoR append;
     #    atomic ledgered commit) — the batch's one full-pipeline job —
-    # 7. then the per-partition lineage manifest (idempotent per
+    # 6. then the per-partition lineage manifest (idempotent per
     #    batch_id), a small rollup over the persisted resolved set
     try:
         version = merge_into(table, resolved, batch_key=batch_key, batch_stats=stats)
@@ -580,13 +562,13 @@ def apply_batch(
     finally:
         resolved.unpersist()
 
-    # 8. merge-on-read maintenance: compaction commits a table
+    # 7. merge-on-read maintenance: compaction commits a table
     # version, so it must serialize with the merges (which it does here
     # by construction).
     if cfg.compact_max_files_per_bucket:
         table.compact(cfg.compact_max_files_per_bucket)
 
-    # 9. stream-maintained persisted indexes and MVs (engine/
+    # 8. stream-maintained persisted indexes and MVs (engine/
     # indexes.py): fold this batch's change feed into each spec'd
     # dedup/near-dup/ANN index and MV. Serialized with the merges for
     # the same reason as compaction — index refreshes commit versions

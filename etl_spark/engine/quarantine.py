@@ -58,6 +58,7 @@ import os
 from pyspark.sql import Column, DataFrame, functions as F
 
 from etl_spark.cdc_schema import BASE_VERSION, SchemaOp, SourceSpec, TRANSCRIPTS
+from etl_spark.util import footer_row_count
 
 
 def max_known_version(ops: list[SchemaOp]) -> int:
@@ -96,12 +97,6 @@ def quarantine_reason(ops: list[SchemaOp]) -> Column:
     )
 
 
-def _footer_row_count(path: str) -> int:
-    from etl_spark.util import footer_row_count
-
-    return footer_row_count(path)
-
-
 def quarantine_split(
     batch_df: DataFrame,
     quarantine_dir: str,
@@ -126,7 +121,7 @@ def quarantine_split(
         .write.mode("overwrite")
         .parquet(out)
     )
-    n_bad = _footer_row_count(out)
+    n_bad = footer_row_count(out)
     good = batch_df.filter(reason.isNull())
     return good, n_bad
 

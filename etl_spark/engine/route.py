@@ -10,10 +10,11 @@ each entity's table through the identical `apply_batch` path (ledger
 key is per-entity, so a crash replay is idempotent per table).
 
 Scale note: the split is a column filter per entity over one shared
-scan (the batch is persisted once); each entity's merge then shuffles
-only its own rows. A hot entity dominating the log behaves exactly
-like a hot key family — its merge is the one that fans out, the
-others stay small.
+scan (the batch is persisted once, in the source's partitioning);
+each entity's merge then shuffles only its own rows, once, in its
+resolve aggregation's exchange. A hot entity dominating the log
+behaves exactly like a hot key family — its merge is the one that
+fans out, the others stay small.
 
 LSN-density contract: `lineage.check_invariants` gap detection assumes
 a dense LSN sequence. With ONE shared changelog carrying a single
@@ -31,12 +32,11 @@ import concurrent.futures
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from etl_spark.cdc_schema import SchemaOp, SourceSpec
+from etl_spark.cdc_schema import SchemaOp, SourceSpec, binlog_envelope
 from etl_spark.config import EngineConfig
 from etl_spark.engine.apply import _EMPTY_STATS, _stats_from_agg, apply_batch
 from etl_spark.engine.indexes import refresh_derived, validate_disjoint_derived_state
 from etl_spark.engine.stream import await_bounded
-from etl_spark.lake.table import spark_type
 
 # driver threads applying one batch's routes concurrently
 ROUTE_POOL_WIDTH = 4
@@ -49,34 +49,23 @@ ENTITY_COL = "entity"
 def routed_binlog_schema(
     routes: dict[str, Route], entity_col: str = ENTITY_COL
 ) -> T.StructType:
-    """Physical schema of the shared log: envelope + route column +
-    the union of every entity's key columns (nullable — an event
-    carries only its own entity's keys). Colliding key names must
-    agree on type."""
-    fields = [
-        T.StructField("lsn", T.LongType(), False),
-        T.StructField("op", T.StringType(), False),
-        T.StructField(entity_col, T.StringType(), False),
-    ]
-    seen: dict[str, str] = {}
+    """Physical schema of the shared log: the `SourceSpec` binlog
+    envelope around the route column and the union of every entity's
+    key columns (nullable — an event carries only its own entity's
+    keys). Colliding key names must agree on type."""
+    keys: dict[str, T.StructField] = {}
     for _, (_, _, spec) in sorted(routes.items()):
-        types = dict(spec.base_fields)
-        for k in spec.key:
-            if k in seen:
-                if seen[k] != types[k]:
-                    raise ValueError(
-                        f"key column {k!r} has conflicting types across routes: "
-                        f"{seen[k]} vs {types[k]}"
-                    )
+        for f in spec.binlog_schema():
+            if f.name not in spec.key:
                 continue
-            seen[k] = types[k]
-            fields.append(T.StructField(k, spark_type(types[k]), True))
-    fields += [
-        T.StructField("op_ts", T.TimestampType(), False),
-        T.StructField("schema_version", T.IntegerType(), False),
-        T.StructField("payload", T.StringType(), True),
-    ]
-    return T.StructType(fields)
+            seen = keys.setdefault(f.name, T.StructField(f.name, f.dataType, True))
+            if seen.dataType != f.dataType:
+                raise ValueError(
+                    f"key column {f.name!r} has conflicting types across routes: "
+                    f"{seen.dataType.simpleString()} vs {f.dataType.simpleString()}"
+                )
+    route = T.StructField(entity_col, T.StringType(), False)
+    return binlog_envelope([route, *keys.values()])
 
 
 def apply_batch_routed(
@@ -108,18 +97,9 @@ def apply_batch_routed(
     whole epoch loud (the others are joined first; ledger idempotency
     makes the replay safe).
 
-    Partitioning: footer stats don't apply to slices, so apply_batch's
-    n_src_files heuristic can't see the source width — left alone,
-    EVERY entity slice would pay a raw-payload repartition (N raw
-    shuffles per batch). Instead the SHARED batch is widened ONCE
-    (round-robin, only when the source delivered fewer partitions than
-    shuffle width) before the persist, and each apply gets
-    input_partitioned=True: the per-entity resolve aggregation's own
-    exchange then moves parsed, partial-agg-collapsed rows — strictly
-    smaller than raw JSON payloads."""
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if batch_df.rdd.getNumPartitions() < width:
-        batch_df = batch_df.repartition(width)
+    Each slice keeps the source's partitioning: its resolve
+    aggregation's own exchange is its only shuffle, and it moves
+    parsed, partially aggregated rows rather than raw payloads."""
     batch_df = batch_df.persist()
     try:
         by_entity = _stats_from_agg(batch_df, by=entity_col)
@@ -149,7 +129,6 @@ def apply_batch_routed(
                 source_id=f"cdc-{name}",
                 spec=spec,
                 stats_override=by_entity.get(name, _EMPTY_STATS),
-                input_partitioned=True,
             )
 
         names = sorted(routes)

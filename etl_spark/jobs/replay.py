@@ -140,21 +140,28 @@ def run(args) -> dict:
 
     run_dir = os.path.join(args.work_dir, f"run_p{args.parallelism}")
     shutil.rmtree(run_dir, ignore_errors=True)
-    cfg = EngineConfig(
-        table_root=os.path.join(run_dir, "tbl"),
-        manifest_dir=os.path.join(run_dir, "manifest"),
-        checkpoint_dir=os.path.join(run_dir, "ckpt"),
-        num_buckets=args.num_buckets,
-        max_files_per_trigger=args.max_files_per_trigger,
-        # partial-image corpora fold patches in the resolve; CoW
-        # coalesces in the MERGE, MoR defers the fold to read
-        patch_ops=bool(patch_rate),
-        write_mode=(
-            getattr(args, "write_mode", "auto")
-            if getattr(args, "write_mode", "auto") != "auto"
-            else ("cow" if patch_rate else "mor")
-        ),
-    )
+    write_mode = getattr(args, "write_mode", "auto")
+    if write_mode == "auto":
+        write_mode = "cow" if patch_rate else "mor"
+
+    def _cfg(d: str) -> EngineConfig:
+        # one config rule for the single table and every route: a
+        # partial-image corpus folds patches in the resolve (CoW
+        # coalesces in the MERGE, MoR defers the fold to read); a
+        # route without patch_ops would parse op='P' partial images as
+        # FULL images (uncarried fields nulled) — deterministically
+        # wrong on both levels, invisible to the checksum assert
+        return EngineConfig(
+            table_root=os.path.join(d, "tbl"),
+            manifest_dir=os.path.join(d, "manifest"),
+            checkpoint_dir=os.path.join(d, "ckpt"),
+            num_buckets=args.num_buckets,
+            max_files_per_trigger=args.max_files_per_trigger,
+            patch_ops=bool(patch_rate),
+            write_mode=write_mode,
+        )
+
+    cfg = _cfg(run_dir)
     spark = get_spark(
         f"cdc_replay_p{args.parallelism}",
         parallelism=args.parallelism,
@@ -203,24 +210,7 @@ def run(args) -> dict:
         t0 = time.time()
         for i in range(routes_n):
             name = f"e{i}"
-            rcfg = EngineConfig(
-                table_root=os.path.join(run_dir, name, "tbl"),
-                manifest_dir=os.path.join(run_dir, name, "manifest"),
-                checkpoint_dir=os.path.join(run_dir, name, "ckpt"),
-                num_buckets=args.num_buckets,
-                max_files_per_trigger=args.max_files_per_trigger,
-                # same patch/write-mode resolution as the single-table
-                # path: without patch_ops a routed --patch-rate corpus
-                # would parse op='P' partial images as FULL images
-                # (uncarried fields nulled) — deterministically wrong
-                # on both levels, invisible to the checksum assert
-                patch_ops=bool(patch_rate),
-                write_mode=(
-                    getattr(args, "write_mode", "auto")
-                    if getattr(args, "write_mode", "auto") != "auto"
-                    else ("cow" if patch_rate else "mor")
-                ),
-            )
+            rcfg = _cfg(os.path.join(run_dir, name))
             bootstrap(spark, rcfg, base[ent_of == i])
             routes[name] = (rcfg, ops, TRANSCRIPTS)
         t_boot = time.time() - t0

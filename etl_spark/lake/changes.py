@@ -93,18 +93,9 @@ def _commit_changes(
     if not buckets:
         return None
 
-    mor = table.write_mode(m_new) == "mor"
-
     def side(m_side, alias: str) -> DataFrame:
-        files = m_side.files_for(buckets)
-        if mor:
-            df = table._scan_resolved(m_new, files)
-        else:
-            df = table._read_files(m_new, files)
-        if df is None:
-            df = table.spark.createDataFrame(
-                [], m_new.schema.struct(with_system=True)
-            )
+        # both sides read under m_new's schema and write mode
+        df = table._scan(m_new, m_side.files_for(buckets))
         non_key = [c for c in df.columns if c not in m_new.key]
         return df.select(
             *m_new.key, F.struct(*[F.col(c) for c in non_key]).alias(alias)

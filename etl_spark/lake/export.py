@@ -51,14 +51,6 @@ from etl_spark.lake.table import LakeTable
 from etl_spark.util import footer_row_count, read_cursor, write_cursor
 
 
-def _read_cursor(path: str) -> int:
-    return read_cursor(path, "exported_version")
-
-
-def _write_cursor(path: str, version: int) -> None:
-    write_cursor(path, "exported_version", version)
-
-
 def export_changes(
     table: LakeTable,
     out_dir: str,
@@ -70,7 +62,7 @@ def export_changes(
     {"from_version", "to_version", "rows_exported"} (a no-op export
     when the cursor is already current reports rows_exported=0)."""
     cursor_path = cursor_path or os.path.join(out_dir, "_cursor.json")
-    frm = _read_cursor(cursor_path)
+    frm = read_cursor(cursor_path, "exported_version")
     cur = table.current_version()
     if cur <= frm:
         return {"from_version": frm, "to_version": cur, "rows_exported": 0}
@@ -102,7 +94,7 @@ def export_changes(
         )
     # exact count from the written footers (no extra job)
     rows = footer_row_count(dest)
-    _write_cursor(cursor_path, cur)
+    write_cursor(cursor_path, "exported_version", cur)
     return {"from_version": frm, "to_version": cur, "rows_exported": rows}
 
 

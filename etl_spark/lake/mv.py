@@ -37,7 +37,6 @@ it incrementally would silently keep the undone state.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, functions as F
@@ -45,14 +44,6 @@ from pyspark.sql import DataFrame, functions as F
 from etl_spark.lake.changes import read_changes, signed_deltas
 from etl_spark.lake.table import LakeTable
 from etl_spark.util import read_cursor, write_cursor
-
-
-def _read_cursor(path: str) -> int:
-    return read_cursor(path, "refreshed_version")
-
-
-def _write_cursor(path: str, version: int) -> None:
-    write_cursor(path, "refreshed_version", version)
 
 
 def _state_path(mv_dir: str, version: int) -> str:
@@ -79,7 +70,7 @@ def refresh(
     sums = sums or {}
     os.makedirs(mv_dir, exist_ok=True)
     cursor_path = os.path.join(mv_dir, "_cursor.json")
-    frm = _read_cursor(cursor_path)
+    frm = read_cursor(cursor_path, "refreshed_version")
     cur = table.current_version()
     if cur <= frm and frm != 0:
         return {"from_version": frm, "to_version": cur, "mode": "noop"}
@@ -122,7 +113,7 @@ def refresh(
         mode = "incremental"
 
     state.write.mode("overwrite").parquet(_state_path(mv_dir, cur))
-    _write_cursor(cursor_path, cur)
+    write_cursor(cursor_path, "refreshed_version", cur)
     for name in os.listdir(mv_dir):  # sweep superseded state files
         if name.startswith("state-v") and name != f"state-v{cur:010d}.parquet":
             import shutil
@@ -133,5 +124,5 @@ def refresh(
 
 def read_mv(spark, mv_dir: str) -> DataFrame:
     """The maintained aggregate as of its cursor version."""
-    version = _read_cursor(os.path.join(mv_dir, "_cursor.json"))
+    version = read_cursor(os.path.join(mv_dir, "_cursor.json"), "refreshed_version")
     return spark.read.parquet(_state_path(mv_dir, version))

@@ -1083,13 +1083,7 @@ class LakeTable:
         """Scan an already-pruned file list to live rows: merge-on-read
         LSN resolution (patch fold where flagged), tombstones filtered.
         System columns are kept — callers drop them."""
-        if self.write_mode(m) == "mor":
-            df = self._scan_resolved(m, files)
-        else:
-            df = self._read_files(m, files)
-        if df is None:
-            df = self.spark.createDataFrame([], m.schema.struct(with_system=True))
-        return df.filter(~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
+        return self._scan(m, files).filter(~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
 
     def read(
         self,
@@ -1419,6 +1413,19 @@ class LakeTable:
         """Scan including tombstones and system columns (merge input)."""
         m = self.manifest(version)
         df = self._read_files(m, m.files_for(buckets))
+        if df is None:
+            df = self.spark.createDataFrame([], m.schema.struct(with_system=True))
+        return df
+
+    def _scan(self, m: Manifest, files: list[DataFile]) -> DataFrame:
+        """The one scan rule: a file set read under `m`'s schema and
+        write mode — merge-on-read resolved (`_scan_resolved`) for MoR,
+        raw rows (`_read_files`) for CoW. Tombstones and system columns
+        are kept; an empty file set yields an empty frame."""
+        if self.write_mode(m) == "mor":
+            df = self._scan_resolved(m, files)
+        else:
+            df = self._read_files(m, files)
         if df is None:
             df = self.spark.createDataFrame([], m.schema.struct(with_system=True))
         return df
@@ -2119,10 +2126,7 @@ class LakeTable:
         m = self.manifest()
         if new_num_buckets == m.num_buckets:
             return m.version
-        df = self.read_raw()
-        if self.write_mode(m) == "mor":
-            patchy = bool(self._patchy_buckets(m, m.files))
-            df = self._resolve_versions(df, m, patchy=patchy)
+        df = self._scan(m, m.files)
         from types import SimpleNamespace
 
         relabeled = SimpleNamespace(bucket_by=m.bucket_by, num_buckets=new_num_buckets)
@@ -2444,13 +2448,7 @@ class LakeTable:
     def _erase_buckets(
         self, m: Manifest, cond, touched: list[int], batch_key: str | None
     ) -> int:
-        files = m.files_for(touched)
-        if self.write_mode(m) == "mor":
-            df = self._scan_resolved(m, files)
-        else:
-            df = self._read_files(m, files)
-        if df is None:
-            df = self.spark.createDataFrame([], m.schema.struct(with_system=True))
+        df = self._scan(m, m.files_for(touched))
         alive = ~F.coalesce(F.col(SYS_DELETED), F.lit(False))
         hit = cond & alive
         payload = [f.name for f in m.schema.fields if f.name not in m.key]
@@ -2758,18 +2756,12 @@ class LakeTable:
             todo = sorted(set(todo) | set(qualifying))
         if not todo:
             return m.version
-        todo_files = m.files_for(todo)
-        if self.write_mode(m) == "mor":
-            # collapse delta versions; tombstone winners are KEPT so
-            # later-arriving stale events with lower LSN stay dead.
-            # The compacted output is all full images, so the staged
-            # files get has_patches=False and later reads of these
-            # buckets skip the patch fold (the has_patches payoff).
-            df = self._scan_resolved(m, todo_files)
-        else:
-            df = self._read_files(m, todo_files)
-        if df is None:
-            return m.version
+        # MoR collapses delta versions; tombstone winners are KEPT so
+        # later-arriving stale events with lower LSN stay dead. The
+        # compacted output is all full images, so the staged files get
+        # has_patches=False and later reads of these buckets skip the
+        # patch fold (the has_patches payoff).
+        df = self._scan(m, m.files_for(todo))
         if purge_below:
             is_dead = F.coalesce(F.col(SYS_DELETED), F.lit(False))
             df = df.filter(~(is_dead & (F.col(SYS_LSN) < F.lit(purge_below))))

@@ -161,9 +161,10 @@ def main() -> None:
     checks.append(("patch fold map-side partial agg", p.count("Aggregate") >= 2))
 
     # micro-batch parse over all four schema versions: one pass — one
-    # scan, no per-version Union, one raw exchange, one normalize UDF
-    # stage, and exactly one from_json per version (CollapseProject
-    # must not inline a version's decode into each routed column)
+    # scan, no per-version Union, no exchange (parse runs in the
+    # source's partitioning), one normalize UDF stage, and exactly one
+    # from_json per version (CollapseProject must not inline a
+    # version's decode into each routed column)
     import re as _re
     import tempfile
     from collections import Counter
@@ -178,9 +179,10 @@ def main() -> None:
                   segment_size=200, schema_op_fracs=(0.2, 0.5, 0.8))
     ops = gen_schema_ops(g)
     seg_dir = tempfile.mkdtemp(prefix="plan_parse_")
-    write_segments(gen_binlog(g, gen_base(g), ops), seg_dir)
+    base = gen_base(g)
+    write_segments(gen_binlog(g, base, ops), seg_dir)
     raw = spark.read.schema(TRANSCRIPTS.binlog_schema()).parquet(seg_dir)
-    p = plan_of(parse_batch(raw.repartition(4, *TRANSCRIPTS.key), ops, 4, [1, 2, 3, 4]))
+    p = plan_of(parse_batch(raw, ops, 4, [1, 2, 3, 4]))
 
     def n_nodes(name):
         # formatted explain lists each node twice (tree line + detail
@@ -190,11 +192,50 @@ def main() -> None:
     decodes = Counter(_re.findall(r"schema_version#\d+ = (\d+)\) THEN from_json\(", p))
     checks.append(("parse scans the batch once, no Union",
                    n_nodes("Scan parquet") == 1 and "Union" not in p))
-    checks.append(("parse has one exchange and one ArrowEvalPython",
-                   n_nodes("Exchange") == 1 and n_nodes("ArrowEvalPython") == 1))
+    checks.append(("parse has no exchange and one ArrowEvalPython",
+                   n_nodes("Exchange") == 0 and n_nodes("ArrowEvalPython") == 1))
     checks.append(("parse decodes each version with exactly one from_json",
                    decodes == {"1": 1, "2": 1, "3": 1, "4": 1}
                    and p.count("from_json(") == 4))
+
+    # a direct apply_batch on that one-file batch: the resolved frame
+    # the MERGE receives holds the batch's only shuffle — one hash
+    # exchange on the key, over partially aggregated rows (no
+    # round-robin or raw-payload exchange ahead of parse)
+    from etl_spark.config import EngineConfig
+    from etl_spark.engine import apply as apply_mod
+    from etl_spark.pipeline import bootstrap
+
+    adir = tempfile.mkdtemp(prefix="plan_apply_")
+    acfg = EngineConfig(
+        table_root=os.path.join(adir, "tbl"),
+        manifest_dir=os.path.join(adir, "manifest"),
+        checkpoint_dir=os.path.join(adir, "ckpt"),
+        num_buckets=8,
+    )
+    bootstrap(spark, acfg, base)
+    merge_plans = []
+    real_merge = apply_mod.merge_into
+
+    def spy_merge(table, resolved, **kw):
+        merge_plans.append(plan_of(resolved))
+        return real_merge(table, resolved, **kw)
+
+    apply_mod.merge_into = spy_merge
+    try:
+        apply_mod.apply_batch(spark, acfg, ops, raw, 0)
+    finally:
+        apply_mod.merge_into = real_merge
+    p = merge_plans[0]
+    exch = _re.findall(r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]\nArguments: (.*)$",
+                       p, _re.M)
+    checks.append(("apply_batch shuffles a one-file batch once, on the key",
+                   len(raw.inputFiles()) == 1 and n_nodes("Exchange") == 1
+                   and len(exch) == 1
+                   and _re.match(r"hashpartitioning\(conv_id#\d+, turn_idx#\d+, \d+\)",
+                                 exch[0][1]) is not None
+                   and "payload" not in exch[0][0]
+                   and "roundrobin" not in p.lower()))
 
     # bucket-pruned point lookup: the scan must read strictly fewer
     # files than the full table (manifest pruning, not a post-filter)

@@ -32,6 +32,7 @@ from etl_spark.gen.binlog import (
     write_segments,
 )
 from etl_spark.gen.oracle import replay_oracle
+from etl_spark.lake.merge import merge_into
 from etl_spark.pipeline import bootstrap, final_state
 from tests.test_streaming import make_cfg
 from tests.util import assert_frames_equal
@@ -60,22 +61,22 @@ def _corpus(n_events=100):
 
 def test_parse_plan_is_one_pass(spark, tmp_path):
     """A batch spanning all four schema versions parses in one pass:
-    one scan, no Union, one raw exchange, one normalize UDF stage and
-    exactly one from_json per version (CollapseProject must not inline
-    a version's decode into each routed column)."""
+    one scan, no Union, no exchange (parse runs in the source's
+    partitioning), one normalize UDF stage and exactly one from_json
+    per version (CollapseProject must not inline a version's decode
+    into each routed column)."""
     _, ops, binlog = _corpus(n_events=200)
     assert sorted(binlog["schema_version"].unique()) == [1, 2, 3, 4]
     seg_dir = str(tmp_path / "segments")
     write_segments(binlog, seg_dir)
     batch_df = spark.read.schema(TRANSCRIPTS.binlog_schema()).parquet(seg_dir)
-    batch_df = batch_df.repartition(4, *TRANSCRIPTS.key)
     parsed = parse_batch(batch_df, ops, 4, [1, 2, 3, 4])
 
     p = _plan(parsed)
     assert _nodes(p, "Scan parquet") == 1
     assert "Union" not in p
     assert _nodes(p, "ArrowEvalPython") == 1
-    assert _nodes(p, "Exchange") == 1
+    assert _nodes(p, "Exchange") == 0
     decodes = Counter(re.findall(r"schema_version#\d+ = (\d+)\) THEN from_json\(", p))
     assert decodes == {"1": 1, "2": 1, "3": 1, "4": 1}
     assert p.count("from_json(") == 4
@@ -88,6 +89,38 @@ def _apply_frame(spark, tmp_path, binlog, **cfg_kw):
     write_segments(binlog, seg_dir)
     cfg = make_cfg(tmp_path, **cfg_kw)
     return cfg, spark.read.schema(TRANSCRIPTS.binlog_schema()).parquet(seg_dir)
+
+
+def test_batch_shuffles_once(spark, tmp_path, monkeypatch):
+    """The resolved frame `apply_batch` hands to the MERGE carries the
+    batch's only shuffle: one hash exchange on the key, fed by the
+    resolve's partial aggregation — no round-robin or raw-payload
+    exchange ahead of parse, even for a one-file batch."""
+    from etl_spark.engine import apply as apply_mod
+
+    base, ops, binlog = _corpus()
+    cfg, frame = _apply_frame(spark, tmp_path, binlog)
+    assert len(frame.inputFiles()) == 1
+    bootstrap(spark, cfg, base)
+    plans = []
+
+    def spy(table, resolved, **kw):
+        plans.append(_plan(resolved))
+        return merge_into(table, resolved, **kw)
+
+    monkeypatch.setattr(apply_mod, "merge_into", spy)
+    apply_batch(spark, cfg, ops, frame, 0)
+
+    (p,) = plans
+    assert _nodes(p, "Exchange") == 1
+    # the exchange's detail block: its input columns, then partitioning
+    ((cols, how),) = re.findall(
+        r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]\nArguments: (.*)$", p, re.M
+    )
+    assert re.match(r"hashpartitioning\(conv_id#\d+, turn_idx#\d+, \d+\)", how)
+    assert "payload" not in cols and "valueWithExtremumOrdering" in cols
+    assert "roundrobin" not in p.lower()
+    assert_frames_equal(final_state(spark, cfg), replay_oracle(base, binlog, ops))
 
 
 def _with_versions(binlog, picks: slice, version) -> tuple[pd.DataFrame, set[int]]:

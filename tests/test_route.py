@@ -360,3 +360,28 @@ def test_routed_union_audit_sums_slices(spark, tmp_path):
         inv["events_distinct_total"],
         inv["events_quarantined_total"],
     ) == (len(m), int(m["events_new"].sum()), int(m["events_quarantined"].sum()))
+
+
+def test_routed_binlog_schema_wraps_spec_envelope():
+    """The shared log's schema is the entity binlog envelope around the
+    route column and the nullable key union; a key name whose type
+    differs across routes is refused."""
+    import dataclasses
+
+    import pytest
+
+    from etl_spark.engine.route import routed_binlog_schema
+
+    other = dataclasses.replace(
+        TRANSCRIPTS, name="users", base_fields=(("user_id", "long"),),
+        key=("user_id",), bucket_by="user_id", normalize_field_id=None,
+    )
+    got = routed_binlog_schema({"a": (None, [], TRANSCRIPTS), "b": (None, [], other)})
+    keys = [*TRANSCRIPTS.key, "user_id"]
+    spec_fields = [f for f in TRANSCRIPTS.binlog_schema() if f.name not in TRANSCRIPTS.key]
+    assert [f for f in got if f.name not in keys and f.name != "entity"] == spec_fields
+    assert [(f.name, f.nullable) for f in got if f.name in keys] == [(k, True) for k in keys]
+
+    clash = dataclasses.replace(other, base_fields=(("conv_id", "long"),), key=("conv_id",))
+    with pytest.raises(ValueError, match="'conv_id' has conflicting types"):
+        routed_binlog_schema({"a": (None, [], TRANSCRIPTS), "b": (None, [], clash)})
