@@ -858,8 +858,7 @@ FROM embeddings
 def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (10-minute inactivity gap) of the
     events stream per user: session summaries with event counts and
-    bounds — the window-function form whose streaming twin is the
-    applyInPandasWithState operator (engine/sessions.py)."""
+    bounds — the window-function form (operators/sessions.py)."""
     from etl_spark.operators.sessions import session_summaries
 
     ev = _t(spark, sf_dir, "events")

@@ -139,7 +139,7 @@ def validate_disjoint_derived_state(cfgs) -> None:
 def refresh_mvs(table: LakeTable, specs) -> list[dict]:
     """Bring every spec'd materialized aggregate up to `table`'s
     current version — one incremental signed-delta fold each (full
-    recompute on first refresh or rollback-in-window, per lake/mv.py).
+    recompute on first refresh, per lake/mv.py).
     Same main-thread placement and crash composition as
     refresh_indexes."""
     from etl_spark.lake import mv as _mv
@@ -162,7 +162,7 @@ def refresh_mvs(table: LakeTable, specs) -> list[dict]:
 def refresh_indexes(spark, table: LakeTable, specs) -> list[dict]:
     """Bring every spec'd index up to `table`'s current version (one
     incremental change-feed fold each; see the index modules for the
-    full/incremental/rollback contract). Runs in the apply loop's MAIN
+    full/incremental contract). Runs in the apply loop's MAIN
     thread: refreshes commit versions on the INDEX tables only, so
     they serialize naturally with each other and can never race the
     target table's merges."""

@@ -125,52 +125,3 @@ def run_replay(
         # derived-state refresh after q.stop())
         q = writer.trigger(processingTime=processing_time).start()
         return q
-
-
-def streaming_window_metrics(
-    stream: DataFrame,
-    window: str = "1 day",
-    watermark: str = "10 minutes",
-    by_op: bool = True,
-) -> DataFrame:
-    """Tumbling-window operational metrics over the binlog stream:
-    change-event counts (and per-op splits) per `window` of commit
-    time, with a watermark so the state store finalizes and evicts
-    windows once `op_ts` passes window_end + watermark. Append output
-    mode: a window row is emitted exactly once, when it finalizes —
-    the shape a metrics sink (dashboard table, alerting topic) wants.
-
-    This is the §2.8 'windows' cell as a real streaming aggregation
-    (the reference precomputes daily grains upstream of its pipeline,
-    /root/reference/src/pipeline/README.md "Metrics Events" — there is
-    no windowing operator at all in its engine). State is O(open
-    windows x ops): the watermark bounds it regardless of stream
-    length, and a late event below the watermark is DROPPED from the
-    aggregation by design — metrics tolerate bounded loss; the exact
-    path for late data is the lineage ledger, which counts every
-    applied LSN exactly once however late it arrives. (Drop timing
-    follows Spark's two-watermark semantics, SPARK-40925: the late
-    filter uses the PREVIOUS batch's watermark, eviction the current
-    one — so a late row landing in the same batch as its window's
-    eviction still merges, and only strictly later arrivals drop;
-    tests/test_window_metrics.py pins both cases.)
-    """
-    keys = [F.window(F.col("op_ts"), window).alias("w")]
-    if by_op:
-        keys.append(F.col("op"))
-    agg = (
-        stream.withWatermark("op_ts", watermark)
-        .groupBy(*keys)
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("lsn").alias("min_lsn"),
-            F.max("lsn").alias("max_lsn"),
-        )
-    )
-    cols = [
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-    ]
-    if by_op:
-        cols.append(F.col("op"))
-    return agg.select(*cols, "n_events", "min_lsn", "max_lsn")

@@ -86,15 +86,3 @@ def fingerprint(col: Column) -> Column:
     """Deterministic 128-bit document fingerprint (hex md5 of the
     normalized text) — the exact-dedup and golden-diff key."""
     return F.md5(normalized_text(col))
-
-
-def quality_metrics(col: Column) -> dict[str, Column]:
-    """Integer-valued quality signals (exact across engines; ratios are
-    derived downstream where tolerance is controlled)."""
-    return {
-        "n_chars": char_count(col),
-        "n_tokens": token_count(col),
-        "n_punct": punct_count(col),
-        "n_digits": digit_count(col),
-        "n_stopwords": stopword_count(col),
-    }

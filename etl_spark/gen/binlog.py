@@ -404,8 +404,3 @@ def write_segments(
                        row_group_size=20_000, compression="zstd", compression_level=3)
         paths.append(p)
     return paths
-
-
-def expected_event_count(binlog: pd.DataFrame) -> int:
-    """Distinct LSNs (dedup-adjusted event count)."""
-    return int(binlog["lsn"].nunique())

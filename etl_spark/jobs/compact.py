@@ -38,8 +38,8 @@ def plan_auto(
     include_patches: bool = True,
 ) -> dict[int, list[str]]:
     """Maintenance POLICY: select compaction targets from the
-    snapshot's file inventory (the same metadata `files()` exposes —
-    a driver-side manifest walk, no data scan), so that at 10^5-file
+    snapshot's file inventory (`Manifest.files` — a driver-side
+    manifest walk, no data scan), so that at 10^5-file
     scale maintenance is a policy loop over table state rather than
     an operator someone has to aim (VERDICT r4 next-round #6).
 

@@ -34,9 +34,8 @@ results.
   in the same cell nets 0 and touches nothing. Assignment is the
   literal-centroid projection (`similarity._kmeans_assign`): zero
   join operators, scores bit-identical to `ivf_assign` and to the SQL
-  oracle. Rollback-in-window forces a full resync; refresh MERGEs are
-  ledgered under a window-derived batch_key — identical crash/rewind
-  posture to the sibling indexes.
+  oracle. Refresh MERGEs are ledgered under a window-derived
+  batch_key — identical crash posture to the sibling indexes.
 - `ann_batch` is the search: assign each query to its `n_probe`
   nearest cells (sort/slice of the SAME literal struct array the
   argmax assignment uses), read ONLY those cells' index buckets, then
@@ -183,8 +182,7 @@ def refresh_ann_index(
     lake/index_common.refresh_derived_index; `persist=True` because
     the k*dim centroid scoring is the expensive derivation). Returns
     {"from_version", "to_version", "mode"} with mode in
-    noop | full | incremental (full on first refresh and after a
-    rollback inside the window)."""
+    noop | full | incremental (full on first refresh)."""
     cents = _centroids(index)
     return refresh_derived_index(
         emb, index,

@@ -69,17 +69,16 @@ def _commit_changes(
 ) -> DataFrame | None:
     """Diff version v against v-1, restricted to the buckets v touched;
     None when the commit changed no data files — or when the commit is
-    a self-declared maintenance reorganization (compaction, bucket
-    evolution: version-stamped `maintenance_commit` prop), whose file
-    churn is 100% carried-over rows. The LSN guard would classify all
-    of them as unchanged anyway; the marker saves the full two-sided
+    a self-declared maintenance reorganization (compaction:
+    version-stamped `maintenance_commit` prop), whose file churn is
+    100% carried-over rows. The LSN guard would classify all of them
+    as unchanged anyway; the marker saves the full two-sided
     diff scan, which otherwise makes the feed's cost grow with
     maintenance frequency instead of change volume."""
     mf = _manifest or table.manifest
     m_new = mf(v)
     if m_new.props.get("maintenance_commit") == v:
         return None
-    is_erase = m_new.props.get("erase_commit") == v
     m_old = mf(v - 1)
     # touched-bucket discovery is pure POINTER comparison: a bucket's
     # group pointer changes iff the commit touched it (group files are
@@ -140,17 +139,9 @@ def _commit_changes(
         # pre-image/delete carry the OLD values (tombstone payloads are
         # null); the delete's LSN is the tombstone's (the change event),
         # falling back to the old row's if the row was physically
-        # dropped rather than tombstoned. Erase commits
-        # (`LakeTable.erase_where`) waive the `newer` guard: they
-        # tombstone while KEEPING the row's own LSN — so future
-        # higher-LSN events stay applicable — and that equal-LSN
-        # live->dead transition must still reach downstream as a
-        # delete. Everywhere else the guard stands: a rollback commit
-        # in the window stays silent (restored rows carry OLDER LSNs;
-        # presenting them as new changes would corrupt consumers —
-        # rollback() documents the required downstream resync).
+        # dropped rather than tombstoned
         change(
-            o_live & ~n_live & (newer | F.lit(is_erase)), DELETE, "_o",
+            o_live & ~n_live & newer, DELETE, "_o",
             F.coalesce(n_lsn, o_lsn),
         ),
     ]
@@ -209,7 +200,6 @@ def read_changes(
     from_version,
     to_version=None,
     include_pre_images: bool = False,
-    manifest_cache: dict | None = None,
 ) -> DataFrame:
     """All logical changes committed in versions (from_version,
     to_version] (to_version defaults to the current version), in the
@@ -241,12 +231,8 @@ def read_changes(
     # one driver-side parse per manifest in the window (each pins the
     # FULL file list; re-parsing it ~3x per version — as m_new, as the
     # next commit's m_old, and again in align — is real driver cost at
-    # large-table scale). A caller that already parsed some of the
-    # window (e.g. an index refresh's rollback probe) shares its cache
-    # via `manifest_cache` instead of re-parsing.
-    _cache: dict[int, object] = (
-        manifest_cache if manifest_cache is not None else {}
-    )
+    # large-table scale)
+    _cache: dict[int, object] = {}
 
     def mf(v: int):
         if v not in _cache:

@@ -20,10 +20,8 @@ probing O(touched buckets):
   A text update that CHANGES the fingerprint is naturally a delete
   in the old fp's bucket plus an insert in the new fp's bucket —
   secondary-index maintenance, routed by the index's own bucketing.
-  Erase commits emit feed deletes (the erase waiver in
-  `lake/changes.py:173`), so erased docs leave the index through the
-  same path. A rollback inside the window forces a full resync,
-  exactly as `lake/mv.py` does — the feed is silent across a rewind.
+  Deleted docs leave the index through the same path: the feed
+  emits their `D` events as deletes.
 - Merge LSNs are the refresh window's end version (strictly
   increasing across refreshes, uniform within one): feed `_change_lsn`
   values are unusable here because a pre-image carries the OLD row's
@@ -95,8 +93,7 @@ def refresh_index(
     """Bring the membership index up to the documents table's current
     version (shared scaffold: lake/index_common.refresh_derived_index).
     Returns {"from_version", "to_version", "mode"} with mode in
-    noop | full | incremental (full on first refresh and after a
-    rollback inside the window)."""
+    noop | full | incremental (full on first refresh)."""
     return refresh_derived_index(
         docs, index,
         id_col=id_col, value_col=text_col,

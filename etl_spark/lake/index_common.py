@@ -4,13 +4,11 @@
 All three indexes maintain "derived rows keyed by a pure function of
 one source column" and share the exact same subtle invariants:
 
-- cursor read -> noop short-circuit -> rollback-in-window probe
-  (a rollback rewinds history the change feed is silent across, so
-  the window is untrustworthy and the refresh falls back to a full
-  resync — same rule as lake/mv.py);
-- full resync = derive fresh rows from the source's CURRENT version,
-  anti-join the stored rows to find stale ones, upsert + delete in
-  one ledgered MERGE;
+- cursor read -> noop short-circuit;
+- first refresh = full resync: derive fresh rows from the source's
+  CURRENT version, anti-join the stored rows to find stale ones (a
+  first refresh that crashed before its cursor write left some),
+  upsert + delete in one ledgered MERGE;
 - incremental = DOUBLE signed collapse over the change feed: first
   per (id, value) so only window-net added/removed values are ever
   run through the (possibly expensive) derivation, then per index
@@ -28,9 +26,7 @@ These lived as three near-identical copies; a fix to any one of them
 had to be applied in three places in lockstep (the drift class the
 round-4 review passes kept finding), so the scaffold is single-sourced
 here and each index supplies only its derivation (`row_fn`), key list,
-and cursor location. The rollback probe's manifest parses are shared
-with `read_changes` via its `manifest_cache` parameter — one
-driver-side parse per window version total, not two.
+and cursor location.
 """
 
 from __future__ import annotations
@@ -73,19 +69,8 @@ def refresh_derived_index(
     if cur <= frm and frm != 0:
         return {"from_version": frm, "to_version": cur, "mode": "noop"}
 
-    mcache: dict[int, object] = {}
-
-    def mf(v: int):
-        if v not in mcache:
-            mcache[v] = src.manifest(v)
-        return mcache[v]
-
-    rolled_back = frm != 0 and any(
-        mf(v).props.get("rollback_commit") == v
-        for v in range(frm + 1, cur + 1)
-    )
     to_release = []
-    if frm == 0 or rolled_back:
+    if frm == 0:
         base = src.read(version=cur).select(
             F.col(id_col).cast("long").alias("id"),
             F.col(value_col).alias("val"),
@@ -112,9 +97,7 @@ def refresh_derived_index(
         mode = "full"
         batch_key = f"{prefix}-full-v{cur}"
     else:
-        feed = read_changes(
-            src, frm, cur, include_pre_images=True, manifest_cache=mcache
-        )
+        feed = read_changes(src, frm, cur, include_pre_images=True)
         # signed_deltas owns the feed's +1/-1 algebra (provenance is
         # known — the feed was just read with pre-images — so skip its
         # validation scan); first collapse per (id, value): only

@@ -184,11 +184,10 @@ def merge_into(
         if set_flags:
             # A patch-only change set (op='P', no full image in the
             # batch) cannot apply onto a DEAD key: its base image was
-            # deleted or erased, and coalescing the unset columns from
-            # a tombstone would fabricate a mostly-NULL live row —
-            # the erase/patch interaction hazard. The key stays dead;
-            # only a full image (higher-LSN I/U) resurrects it. The
-            # tombstone's LSN is intentionally NOT advanced: dropping
+            # deleted, and coalescing the unset columns from a
+            # tombstone would fabricate a mostly-NULL live row. The
+            # key stays dead; only a full image (higher-LSN I/U)
+            # resurrects it. The tombstone's LSN is intentionally NOT advanced: dropping
             # the patch must not fence off the full image that follows.
             tgt_dead = F.coalesce(F.col(SYS_DELETED), F.lit(False))
             take_src = take_src & ~((F.col("_s_op") == F.lit("P")) & tgt_dead)
@@ -227,9 +226,10 @@ def merge_into(
             batch_stats=batch_stats,
             bucket_counts=bucket_counts,
             # optimistic concurrency: this rewrite was computed from
-            # `m`; if out-of-band maintenance (erase) advanced the
-            # table meanwhile, committing would resurrect pre-erase
-            # rows carried over from the stale target scan. Raise
+            # `m`; if a racing writer's merge or a publish_branch
+            # fast-forward advanced the table meanwhile, committing
+            # would drop the winner's rows in these buckets (the stale
+            # target scan carries the pre-race rows over). Raise
             # CommitConflict instead — the streaming engine fails the
             # batch and the checkpoint replay re-plans it against the
             # fresh snapshot (idempotent via the ledger).

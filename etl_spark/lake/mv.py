@@ -29,10 +29,7 @@ Refresh protocol (same two-phase shape as export/ingest):
 Groups whose count folds to zero are dropped (the group no longer
 exists in the base). Metrics must be ADDITIVE (counts, integer sums);
 averages derive downstream as sum/count. Maintenance commits emit no
-feed rows (inherited from read_changes semantics); a rollback commit
-inside the refresh window is detected from its manifest prop and
-forces mode='full' — the feed is silent across a rewind, so folding
-it incrementally would silently keep the undone state.
+feed rows (inherited from read_changes semantics).
 """
 
 from __future__ import annotations
@@ -75,17 +72,7 @@ def refresh(
     if cur <= frm and frm != 0:
         return {"from_version": frm, "to_version": cur, "mode": "noop"}
 
-    # A rollback commit inside the window makes the change feed silent
-    # while the base state rewinds — folding "no deltas" would leave
-    # the aggregate reflecting the undone commits with no error
-    # signal. Detect it and force a full recompute (the documented
-    # resync) instead of relying on operators to remember the
-    # contract.
-    rolled_back = frm != 0 and any(
-        table.manifest(v).props.get("rollback_commit") == v
-        for v in range(frm + 1, cur + 1)
-    )
-    if frm == 0 or rolled_back:
+    if frm == 0:
         state = _aggregate(table.read(version=cur), dims, sums)
         mode = "full"
     else:

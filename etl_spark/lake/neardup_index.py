@@ -34,10 +34,9 @@ instead of the shingle frequency.
   corpus. Band rows from the added and removed texts are then
   collapsed AGAIN per (bkey, band, doc_id): an update whose old and
   new text agree on some band nets 0 there and touches nothing.
-- Merge LSNs are the refresh window's end version, rollbacks inside
-  the window force a full resync, and the MERGE is ledgered under a
-  window-derived batch_key — identical crash/rewind posture to
-  `dedup_index.refresh_index` (see that module's docstring).
+- Merge LSNs are the refresh window's end version and the MERGE is
+  ledgered under a window-derived batch_key — identical crash posture
+  to `dedup_index.refresh_index` (see that module's docstring).
 - `neardup_batch` is the daily probe: band-key the incoming batch,
   read ONLY the probed keys' buckets, collide, then verify by EXACT
   Jaccard — reading only the candidate corpus docs' buckets from the
@@ -153,11 +152,11 @@ def refresh_neardup_index(
 ) -> dict:
     """Bring the band-key index up to the documents table's current
     version. Returns {"from_version", "to_version", "mode"} with mode
-    in noop | full | incremental (full on first refresh and after a
-    rollback inside the window). The (n, num_hashes, bands) signature
-    parameters must be held constant across a given index's lifetime —
-    they define the stored keys (enforced via the manifest-props
-    stamp: a mismatch raises). Shared scaffold:
+    in noop | full | incremental (full on first refresh). The
+    (n, num_hashes, bands) signature parameters must be held constant
+    across a given index's lifetime — they define the stored keys
+    (enforced via the manifest-props stamp: a mismatch raises). Shared
+    scaffold:
     lake/index_common.refresh_derived_index; `persist=True` because
     the signature pipeline is expensive (the duplicated-subtree cost
     the band_keys docstring measured at 4x+). Per doc at most one

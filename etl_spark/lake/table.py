@@ -68,9 +68,9 @@ class CommitConflict(RuntimeError):
     race in the final instant; this check catches the WIDE window — a
     competing commit landing during the expensive read+rewrite —
     which would otherwise silently overwrite the winner's rows in the
-    replaced buckets (lost update). Callers retry from the fresh
-    snapshot (erase), skip the cycle (compaction), or let the
-    streaming engine replay the batch (merge)."""
+    replaced buckets (lost update). Callers skip the cycle
+    (compaction) or let the streaming engine replay the batch
+    (merge)."""
 
 _TYPE_MAP: dict[str, T.DataType] = {
     "string": T.StringType(),
@@ -603,87 +603,6 @@ class LakeTable:
             raise FileNotFoundError(f"no manifests under {self._meta_dir}")
         return vs[-1]
 
-    def history(self) -> DataFrame:
-        """Snapshot history (Iceberg `<table>.snapshots` metadata-table
-        analog): one row per retained version with commit kind, schema
-        id, file/batch counts, and deltas vs the parent. Driver-side
-        manifest walk — O(retained versions), no data scan."""
-        rows = []
-        for v in self._versions(self._meta_dir):
-            m = self.manifest(v)
-            parent_batches = None
-            if m.parent is not None:
-                try:
-                    parent_batches = set(self.manifest(m.parent).committed_batches)
-                except FileNotFoundError:
-                    pass  # parent expired
-            new_batches = (
-                sorted(set(m.committed_batches) - parent_batches)
-                if parent_batches is not None
-                else sorted(m.committed_batches)
-            )
-            if m.props.get("maintenance_commit") == m.version:
-                kind = "maintenance"
-            elif m.props.get("rollback_commit") == m.version:
-                kind = "rollback"
-            elif m.props.get("erase_commit") == m.version:
-                kind = "erase"
-            elif new_batches:
-                kind = "merge"
-            else:
-                kind = "schema"
-            rows.append(
-                (
-                    m.version,
-                    m.parent,
-                    kind,
-                    m.schema.schema_id,
-                    m.num_buckets,
-                    len(m.files),
-                    len(m.committed_batches),
-                    ",".join(new_batches),
-                    m.props.get("committed_at_us"),
-                )
-            )
-        return self.spark.createDataFrame(
-            rows,
-            "version long, parent long, kind string, schema_id int, "
-            "num_buckets int, n_files int, n_batches int, "
-            "new_batches string, committed_at_us long",
-        )
-
-    def files(
-        self, version: int | str | _dtm.datetime | None = None
-    ) -> DataFrame:
-        """Data-file inventory (Iceberg `<table>.files` metadata-table
-        analog): one row per live data file of a snapshot — path,
-        bucket, staging commit, writer schema id, row count, patch
-        bit, zone-mapped columns, and Bloom coverage. Driver-side
-        manifest walk, no data scan; the operator's view for layout
-        decisions (compaction targets, skew, stats coverage)."""
-        m = self.manifest(version)
-        id_name = {f.id: f.name for f in m.schema.fields}
-        rows = []
-        for f in m.files:
-            range_cols = ",".join(
-                id_name.get(fid, f"fid:{fid}")
-                for fid in sorted(f.ranges or {})
-            )
-            bloom_cols = ",".join(
-                id_name.get(fid, f"fid:{fid}") for fid in sorted(f.col_blooms)
-            )
-            rows.append((
-                f.path, f.bucket, _commit_dir(f.path), f.schema_id,
-                f.rows if f.rows >= 0 else None, f.has_patches,
-                range_cols, bloom_cols,
-            ))
-        return self.spark.createDataFrame(
-            rows,
-            "path string, bucket int, commit string, schema_id int, "
-            "rows long, has_patches boolean, range_cols string, "
-            "bloom_cols string",
-        )
-
     def version_at(self, ts) -> int:
         """Greatest retained version committed at or before `ts`
         (datetime — naive = UTC, same convention as `_encode_stat` —
@@ -723,14 +642,12 @@ class LakeTable:
         return best
 
     def manifest(
-        self, version: int | str | _dtm.datetime | None = None
+        self, version: int | _dtm.datetime | None = None
     ) -> Manifest:
-        """`version` may be an int, None (current), a tag name, or a
-        datetime (as-of-timestamp time travel via `version_at`)."""
+        """`version` may be an int, None (current), or a datetime
+        (as-of-timestamp time travel via `version_at`)."""
         if isinstance(version, _dtm.datetime):
             version = self.version_at(version)
-        if isinstance(version, str):
-            version = self.tag_version(version)
         v = version if version is not None else self.current_version()
         with open(self._manifest_path(v)) as fh:
             m = Manifest.from_json(json.load(fh))
@@ -764,7 +681,7 @@ class LakeTable:
             m._groups = {}
         # commit wall time (Iceberg snapshot timestamp-ms analog):
         # metadata only — never part of data, checksums, or plans —
-        # powering as-of-timestamp time travel and the history() view.
+        # powering as-of-timestamp time travel and age-based retention.
         # Retries restamp; publish_branch's renames keep the branch
         # commit's original time, as Iceberg fast-forward does.
         m.props = {**m.props, "committed_at_us": time.time_ns() // 1_000}
@@ -1089,15 +1006,14 @@ class LakeTable:
         self,
         buckets: list[int] | None = None,
         include_system: bool = False,
-        version: int | str | _dtm.datetime | None = None,
+        version: int | _dtm.datetime | None = None,
         where_ranges: dict[str, tuple] | None = None,
         where_in: dict[str, list] | None = None,
     ) -> DataFrame:
         """Scan live rows (max-LSN resolved under merge-on-read,
         tombstones filtered). `buckets` prunes the file list — the
         partition-pruning path MERGE relies on. `version` may be a
-        snapshot number, a tag name, or a datetime (as-of-timestamp
-        time travel).
+        snapshot number or a datetime (as-of-timestamp time travel).
 
         `where_ranges` ({column: (lo, hi)}, either bound None) adds
         zone-map data skipping (Iceberg metadata-pruning analog): the
@@ -1368,9 +1284,10 @@ class LakeTable:
 
         # metadata-only commit loop: annotate whichever of the bloomed
         # files still exist in the manifest that wins. Losing a race
-        # never conflicts — the annotation carries no logical state, a
-        # rebucket re-groups the same paths, and files a winner removed
-        # simply drop out (their sidecars become vacuum-able orphans).
+        # never conflicts — the annotation carries no logical state,
+        # the bucket layout is fixed at `create` so a path keeps its
+        # bucket, and files a winner removed simply drop out (their
+        # sidecars become vacuum-able orphans).
         import dataclasses
 
         n_annotated = 0
@@ -1689,12 +1606,12 @@ class LakeTable:
         rebased onto `fresh`: every intervening commit is maintenance
         (compaction/tombstone GC — logical state of live rows
         unchanged; a purged tombstone re-staged by the stale rewrite
-        is harmless) AND the bucket layout is unchanged. The layout
-        check is what makes REBUCKET a real conflict despite its
-        maintenance marker: staged files carry the OLD hash-mod bucket
-        ids, which would silently misplace rows under a new
-        num_buckets. Missing intervening manifests (expired) resolve
-        to conflict."""
+        is harmless) AND the bucket layout is unchanged. The layout is
+        fixed at `create`; the check guards against a racing manifest
+        that disagrees anyway, whatever props it carries: staged files
+        carry the hash-mod bucket ids of `base`, which would silently
+        misplace rows under another num_buckets. Missing intervening
+        manifests (expired) resolve to conflict."""
         if (
             fresh.num_buckets != base.num_buckets
             or fresh.bucket_by != base.bucket_by
@@ -1735,11 +1652,12 @@ class LakeTable:
         winner's rows in the replaced buckets.
 
         `stamp_props`: prop names set to the version this commit
-        ACTUALLY lands at (e.g. `erase_commit`) — computed inside the
-        commit loop, because a rebase can move the final version past
-        the one the caller saw, and a stale version stamp would break
-        every consumer that matches `props[k] == version` (the change
-        feed's erase waiver, history classification)."""
+        ACTUALLY lands at (compaction's `maintenance_commit`) —
+        computed inside the commit loop, because a rebase can move the
+        final version past the one the caller saw, and a stale version
+        stamp would break every consumer that matches
+        `props[k] == version` (the change feed's maintenance skip,
+        `_rebase_safe`)."""
         m = self.manifest()
         if batch_key is not None and batch_key in m.committed_batches:
             return m.version  # idempotent replay of a committed batch
@@ -1808,10 +1726,11 @@ class LakeTable:
 
         Concurrency: a pure append never loses an update, so losing
         the O_EXCL race is resolved by re-appending to the fresh file
-        list — UNLESS the winner changed the bucket layout (rebucket):
-        the staged deltas carry old bucket ids and would misplace
-        rows, so that raises `CommitConflict` (the stream replays the
-        batch against the new layout)."""
+        list — UNLESS the winner's bucket layout differs. The layout
+        is fixed at `create`, so this guards against a racing manifest
+        that disagrees: the staged deltas carry the old bucket ids and
+        would misplace rows, so that raises `CommitConflict` (the
+        stream replays the batch against the fresh layout)."""
         m = self.manifest()
         if batch_key is not None and batch_key in m.committed_batches:
             return m.version
@@ -1967,10 +1886,11 @@ class LakeTable:
         store their own values (including explicit NULLs), and
         rewrites materialize the default physically."""
         # allocate the id above every field EVER used (all historical
-        # schemas), not just the live ones: after a drop_column,
-        # max(live)+1 would recycle the dropped field's id and the
-        # field-ID read path would resurrect its old data under the
-        # new column's name
+        # schemas), not just the live ones: a table written by an
+        # older version of this format may have dropped a column, and
+        # max(live)+1 would recycle that field's id so the field-ID
+        # read path would resurrect its old data under the new
+        # column's name
         m = self.manifest()
         next_id = 1 + max(
             f.id for s in m.schemas.values() for f in s.fields
@@ -1999,22 +1919,6 @@ class LakeTable:
             if any(f.name == name for f in fields):
                 raise ValueError(f"column {name} exists")
             return fields + [Field(next_id, name, type_, default)]
-
-        return self._evolve(mut)
-
-    def drop_column(self, name: str) -> int:
-        """Metadata-only column drop (field-ID model: old data files
-        keep the bytes; the read projection simply stops mapping the
-        id, and `expire_snapshots` + compaction eventually rewrite
-        them away). Key and bucket columns cannot be dropped."""
-        m = self.manifest()
-        if name in m.key or name == m.bucket_by:
-            raise ValueError(f"cannot drop key/bucket column {name}")
-
-        def mut(fields: list[Field]) -> list[Field]:
-            if not any(f.name == name for f in fields):
-                raise ValueError(f"no column {name}")
-            return [f for f in fields if f.name != name]
 
         return self._evolve(mut)
 
@@ -2047,8 +1951,9 @@ class LakeTable:
                         # key would route new events to different
                         # buckets than the same keys' existing rows —
                         # the MERGE would silently duplicate keys.
-                        # Changing the bucket key's type is a rebucket
-                        # migration, not a metadata flip.
+                        # Changing the bucket key's type is a
+                        # migration to a new table, not a metadata
+                        # flip.
                         raise ValueError(
                             f"cannot widen bucket column {name!r}: "
                             "bucket routing hashes by type; migrate "
@@ -2063,88 +1968,6 @@ class LakeTable:
             return out
 
         return self._evolve(mut)
-
-    # -------------------------------------------------------- maintain
-    def rollback(self, version: int) -> int:
-        """Restore the table to snapshot `version` as a NEW commit
-        (Iceberg `rollback_to_snapshot` analog). Metadata-only: the
-        new manifest re-points to the old snapshot's exact file list,
-        schema history, and committed-batch ledger — no data moves,
-        and the undone versions stay time-travel-readable until
-        `expire_snapshots` reclaims them.
-
-        Restoring the LEDGER is the reprocessing contract after a bad
-        deploy: batches committed up to `version` stay no-ops, while
-        the undone batches' keys are forgotten — re-running the replay
-        over corrected source segments (fresh checkpoint) re-applies
-        exactly the undone span. Note the change feed stays silent
-        across a rollback commit (restored rows carry OLDER LSNs, and
-        the feed's monotonicity guard rightly refuses to present stale
-        values as new changes) — downstream consumers of `lake/export`
-        need a resync from the restored version, same as Delta/Iceberg
-        RESTORE."""
-        cur = self.current_version()
-        if not 0 <= version <= cur:
-            raise ValueError(f"version {version} not in [0, {cur}]")
-        old = self.manifest(version)
-        m2 = old.child(  # metadata-only: pointers copy
-            version=cur + 1,
-            parent=cur,
-            # version-stamped (inherited copies point at an old
-            # version and never match — same trick as maintenance)
-            props={
-                **old.props,
-                "rolled_back_to": version,
-                "rollback_commit": cur + 1,
-            },
-        )
-        self._commit_manifest(m2)
-        return m2.version
-
-    def rebucket(self, new_num_buckets: int) -> int:
-        """Bucket-layout evolution (Iceberg partition-spec evolution,
-        restricted to the hash-bucket transform this format uses):
-        rewrite the table into a different bucket count and commit the
-        new layout atomically.
-
-        Why it exists at 10^10-row scale: `num_buckets` bounds MERGE
-        parallelism, bucket-pruning selectivity, and per-bucket file
-        sizes — a table that grew 100x since creation needs more
-        buckets or every micro-batch serializes behind oversized
-        bucket rewrites. The rewrite is one full-table job (partition
-        evolution is O(table) in any format that hash-distributes
-        data); readers keep the old layout until the O_EXCL manifest
-        swap, every post-swap reader/writer derives the bucket
-        expression from the CURRENT manifest, and the committed-batch
-        ledger carries over so replayed epochs stay no-ops. Run it
-        from the maintenance window like `compact`. Under
-        merge-on-read the rewrite collapses delta chains but KEEPS
-        tombstone winners, so later-arriving stale events with lower
-        LSNs stay dead across the migration."""
-        if new_num_buckets < 1:
-            raise ValueError("new_num_buckets must be >= 1")
-        m = self.manifest()
-        if new_num_buckets == m.num_buckets:
-            return m.version
-        df = self._scan(m, m.files)
-        from types import SimpleNamespace
-
-        relabeled = SimpleNamespace(bucket_by=m.bucket_by, num_buckets=new_num_buckets)
-        df = df.withColumn(BUCKET_COL, self.bucket_expr(relabeled))
-        new_version = m.version + 1
-        staged = self._stage_dataframe(df, m, new_version, patch_buckets=set())
-        m2 = m.child(
-            {b: [] for b in m.buckets()} | _group_files(staged),
-            num_buckets=new_num_buckets,
-            props={
-                **m.props,
-                "rebucketed_from": m.num_buckets,
-                # logical no-op for the change feed (see compact)
-                "maintenance_commit": new_version,
-            },
-        )
-        self._commit_manifest(m2)
-        return new_version
 
     # -------------------------------------------------------- branches
     # Write-audit-publish (Iceberg branching / WAP analog): a branch is
@@ -2307,169 +2130,7 @@ class LakeTable:
             os.rmdir(self._branches_dir)
         return stats
 
-    # ------------------------------------------------------------- tags
-    # Immutable named snapshot refs (Iceberg tag analog): a tag pins a
-    # version for reproducible reads — "the corpus train run X was
-    # built from" — and retention keeps the pinned manifest and its
-    # files alive however old they get.
-
-    @property
-    def _tags_dir(self) -> str:
-        return os.path.join(self.root, "_meta", "tags")
-
-    def tag(self, name: str, version: int | None = None) -> int:
-        """Pin `version` (default: current) under an immutable name.
-        O_EXCL create — re-tagging an existing name is an error
-        (drop_tag first); tags are main-namespace refs."""
-        if self.branch:
-            raise ValueError("tags pin main versions; call on the main view")
-        if not re.fullmatch(r"[A-Za-z0-9_\-.]{1,64}", name):
-            raise ValueError(f"bad tag name: {name!r}")
-        v = version if version is not None else self.current_version()
-        if not os.path.exists(self._manifest_path(v)):
-            raise FileNotFoundError(f"no manifest for version {v}")
-        os.makedirs(self._tags_dir, exist_ok=True)
-        path = os.path.join(self._tags_dir, f"{name}.json")
-        payload = json.dumps({"version": v}).encode()
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            os.write(fd, payload)
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        return v
-
-    def tags(self) -> dict[str, int]:
-        if not os.path.isdir(self._tags_dir):
-            return {}
-        out = {}
-        for n in sorted(os.listdir(self._tags_dir)):
-            if n.endswith(".json"):
-                with open(os.path.join(self._tags_dir, n)) as fh:
-                    out[n[:-5]] = int(json.load(fh)["version"])
-        return out
-
-    def tag_version(self, name: str) -> int:
-        path = os.path.join(self._tags_dir, f"{name}.json")
-        if not os.path.exists(path):
-            raise FileNotFoundError(f"no such tag: {name}")
-        with open(path) as fh:
-            return int(json.load(fh)["version"])
-
-    def drop_tag(self, name: str) -> None:
-        path = os.path.join(self._tags_dir, f"{name}.json")
-        if not os.path.exists(path):
-            raise FileNotFoundError(f"no such tag: {name}")
-        os.remove(path)
-
-    # ------------------------------------------------------------ erase
-    def erase_where(self, cond, batch_key: str | None = None) -> int:
-        """Out-of-band predicate erase (GDPR right-to-be-forgotten over
-        a transcripts lake): matching LIVE rows become tombstones —
-        payload columns nulled, key and `_lsn` kept, `_deleted` set —
-        rather than being physically dropped, so a late stale change
-        event (lower LSN) can never resurrect erased content through
-        the MERGE guard. A later legitimate FULL image (higher-LSN
-        I/U) re-creates the key; a later PARTIAL image (op='P' patch)
-        does NOT — its base image was erased, so coalescing from the
-        tombstone would fabricate a mostly-NULL row; the merge keeps
-        the key dead until a full image arrives (lake/merge.py). The
-        content itself is gone from the new files; run
-        `expire_snapshots` to age out the pre-erase snapshots that
-        still hold it, completing the physical erasure.
-
-        Cost: one slim job to find the touched buckets (bounded driver
-        transfer, <= num_buckets ids), then a rewrite of exactly those
-        buckets. Use `erase_keys` for the key-based form, which skips
-        the discovery scan entirely. Commits a normal version: the
-        change feed emits the erasures as deletes downstream. The
-        reference has no erase path at all — its deletes are per-row
-        ALTER ... DELETE mutations (/root/reference/src/pipeline/core/
-        spark.py:157-177 analog surface)."""
-        def discover(fresh: Manifest) -> list[int]:
-            live = self.read(include_system=True)
-            return sorted(
-                r[0]
-                for r in live.filter(cond)
-                .select(self.bucket_expr(fresh).alias("b"))
-                .distinct()
-                .collect()
-            )
-
-        return self._erase_with_retry(cond, discover, batch_key)
-
-    def erase_keys(self, values: list, batch_key: str | None = None) -> int:
-        """Erase all turns of the given `bucket_by` values (e.g. every
-        row of a set of conv_ids) — the common erasure-request shape.
-        Bucket-pruned end-to-end: no discovery scan, the rewrite reads
-        only the buckets the values hash into."""
-        m = self.manifest()
-        if batch_key is not None and batch_key in m.committed_batches:
-            return m.version
-        if not values:
-            return m.version
-        return self._erase_with_retry(
-            F.col(m.bucket_by).isin(values),
-            lambda fresh: self._buckets_for_values(fresh, values),
-            batch_key,
-        )
-
-    def _erase_with_retry(
-        self, cond, discover, batch_key: str | None, attempts: int = 5
-    ) -> int:
-        """Optimistic-concurrency wrapper for erase commits racing a
-        live stream's merges: unlike compaction (advisory — skips a
-        lost cycle), an erase MUST land, so on a `CommitConflict`
-        (the rewrite could not rebase onto a racing commit) it
-        re-reads the fresh manifest and re-runs the bucket rewrite
-        against it (the rewritten content is recomputed
-        from the fresh snapshot, so a merge that won the race is
-        preserved). `discover(manifest) -> buckets` re-runs PER
-        ATTEMPT: a concurrent merge can land predicate-matching rows
-        in buckets the pre-race snapshot never touched, so pinning the
-        initial bucket set would let those rows survive an erase that
-        reports success (for the key-based form discovery is just the
-        hash of the values — stable, but recomputing is free). Bounded
-        retries, then the conflict propagates."""
-        last: Exception | None = None
-        for _ in range(attempts):
-            m = self.manifest()
-            if batch_key is not None and batch_key in m.committed_batches:
-                return m.version
-            touched = discover(m)
-            if not touched:
-                return m.version
-            try:
-                return self._erase_buckets(m, cond, touched, batch_key)
-            except CommitConflict as e:
-                last = e
-        raise last  # type: ignore[misc]
-
-    def _erase_buckets(
-        self, m: Manifest, cond, touched: list[int], batch_key: str | None
-    ) -> int:
-        df = self._scan(m, m.files_for(touched))
-        alive = ~F.coalesce(F.col(SYS_DELETED), F.lit(False))
-        hit = cond & alive
-        payload = [f.name for f in m.schema.fields if f.name not in m.key]
-        out = df.select(
-            *[F.col(k) for k in m.key],
-            *[F.when(hit, F.lit(None)).otherwise(F.col(c)).alias(c) for c in payload],
-            F.col(SYS_LSN),
-            (
-                F.coalesce(F.col(SYS_DELETED), F.lit(False))
-                | F.coalesce(cond, F.lit(False))  # NULL predicate = no match
-            ).alias(SYS_DELETED),
-        ).withColumn(BUCKET_COL, self.bucket_expr(m))
-        return self.overwrite_buckets(
-            out,
-            touched,
-            batch_key=batch_key,
-            stamp_props=("erase_commit",),
-            expected_version=m.version,
-            patch_buckets=set(),  # erase rewrite emits full images
-        )
-
+    # -------------------------------------------------------- maintain
     def expire_snapshots(
         self,
         keep_last: int = 2,
@@ -2514,7 +2175,6 @@ class LakeTable:
             older_than = _encode_stat(older_than, "timestamp")
         cur = self.current_version()
         cutoff = max(0, cur - keep_last + 1)  # keep [cutoff .. cur]
-        tagged = set(self.tags().values())  # pinned versions never expire
         stats = {
             "manifests_removed": 0,
             "groups_removed": 0,  # bucket-manifest (file-group) GC
@@ -2524,7 +2184,7 @@ class LakeTable:
         }
         kept_by_age: set[int] = set()
         for v in self._versions(self._meta_dir):
-            if v >= cutoff or v in tagged:
+            if v >= cutoff:
                 continue
             if older_than is not None:
                 try:  # torn/vanished file: age unknown, keep it
@@ -2572,7 +2232,7 @@ class LakeTable:
         referenced, ref_mfs = self._reachable(
             [
                 self.manifest(v)
-                for v in sorted(set(range(cutoff, cur + 1)) | tagged | kept_by_age)
+                for v in sorted(set(range(cutoff, cur + 1)) | kept_by_age)
                 if os.path.exists(self._manifest_path(v))
             ]
             + self._branch_manifests()
@@ -2612,8 +2272,8 @@ class LakeTable:
                         stats["files_removed"] += 1
                 if not os.listdir(root):
                     os.rmdir(root)
-        # bucket-manifest GC: group files no retained snapshot (main,
-        # tag, branch) points at are metadata orphans — expired
+        # bucket-manifest GC: group files no retained snapshot (main
+        # or branch) points at are metadata orphans — expired
         # versions or lost commit races. Names embed their staging
         # version, so the same future-version + grace guards protect
         # an in-flight writer between group write and snapshot create.

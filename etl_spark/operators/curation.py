@@ -1,11 +1,11 @@
-"""Dataset-curation operators: deterministic sampling / train-val-test
+"""Dataset-curation operators: deterministic train-val-test
 splitting and token-budget shard packing over a documents table — the
 two bookend operations of a training-data pipeline (what rows go into
 the run, and how the survivors are physically laid out for the
 trainer).
 
 Scale design (100 TB corpus, 10^9+ docs):
-- sampling/splitting is a PURE per-row function of (seed, key): a
+- splitting is a PURE per-row function of (seed, key): a
   32-bit md5-prefix uniform compared against integer thresholds. No
   shuffle, no state, no RNG stream — the assignment is reproducible
   from the key alone, stable under any repartitioning or re-run, and
@@ -15,8 +15,7 @@ Scale design (100 TB corpus, 10^9+ docs):
   which makes splits silently unstable under AQE/repartition — the
   hash split is the production-correct tool. NULL keys have no
   identity to hash, so they fail LOUDLY (a row-level raise_error)
-  instead of silently pooling into one split or vanishing from every
-  sample;
+  instead of silently pooling into one split;
 - shard packing needs a GLOBAL exclusive prefix sum of token counts in
   a deterministic key order. A bare `Window.orderBy(key)` with no
   partitionBy collapses the whole table into ONE task — the classic
@@ -67,17 +66,6 @@ def hash_uniform(key: Column, seed: int) -> Column:
 def _pct_threshold(pct: int) -> int:
     # integer threshold so both engines compare exactly (no float)
     return (pct * _U32) // 100
-
-
-def hash_sample(df: DataFrame, key_col: str, pct: int, seed: int) -> DataFrame:
-    """Keep ~pct% of rows, chosen deterministically by key: a row is
-    in or out of the sample forever, independent of partitioning,
-    cluster size, or what other rows exist (unlike df.sample, whose
-    draw stream depends on the physical partitioning). Samples nest:
-    the 10% sample is a subset of the 20% sample at the same seed."""
-    if not 0 <= pct <= 100:
-        raise ValueError(f"pct must be 0..100, got {pct}")
-    return df.filter(hash_uniform(F.col(key_col), seed) < _pct_threshold(pct))
 
 
 def hash_split(

@@ -59,14 +59,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep exactly one row (min id) per distinct fingerprint."""
-    keep = exact_dedup_groups(df, id_col, text_col).select(
-        F.col("keeper_id").alias(id_col)
-    )
-    return df.join(keep, on=id_col, how="left_semi")
-
-
 # ------------------------------------------------------------ shingles
 def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle).

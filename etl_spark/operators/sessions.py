@@ -1,14 +1,9 @@
 """Sessionization — gap-based session assignment over an event stream.
 
-Two forms with identical semantics:
-- `sessionize` (here): the batch/window-function form — a lag-gap
-  indicator cumulatively summed per key. One shuffle on the key; the
-  window never materializes the pair space. SQL-expressible, so the
-  driver contract checks it hash-exact against DuckDB.
-- `engine.sessions.streaming_sessionize`: the streaming form of the
-  same semantics as a custom stateful operator
-  (`applyInPandasWithState` — Arrow-batched per-group state), golden-
-  tested against this batch form.
+`sessionize` is the window-function form: a lag-gap indicator
+cumulatively summed per key. One shuffle on the key; the window never
+materializes the pair space. SQL-expressible, so the contract checks
+it hash-exact against DuckDB.
 
 The reference has no sessionization; this is training-pipeline
 surface (conversation/agent-trace segmentation before packing).
@@ -35,9 +30,8 @@ def sessionize(
     instead of re-joining the event stream afterwards (a second full
     shuffle at 10^10-event scale).
     """
-    # NULL event times are excluded up front, matching the streaming
-    # twin (engine/sessions.py): a null gap would otherwise silently
-    # classify as same-session here while killing the stream there
+    # NULL event times are excluded up front: a null gap would
+    # otherwise silently classify as same-session
     df = df.filter(F.col(ts_col).isNotNull())
     w = Window.partitionBy(key_col).orderBy(order_col)
     epoch = F.col(ts_col).cast("timestamp_ltz").cast("long")

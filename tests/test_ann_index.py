@@ -1,7 +1,7 @@
 """Incremental IVF ANN index maintenance: the posting-list index
 refreshed from the change feed must always drive the exact same top-k
 as a from-scratch `ivf_topk` recompute (n_probe=1) — across inserts,
-cell-moving updates, same-cell updates, deletes, a rollback, and a
+cell-moving updates, same-cell updates, deletes, and a
 crash-replayed refresh — and a full-width probe (n_probe = #cells)
 must equal exact brute-force `cosine_topk`. All vector coordinates
 are dyadic (exact in float32 AND float64) so the float-stored lake
@@ -138,29 +138,6 @@ def test_index_tracks_base_through_change_kinds(spark, tmp_path, mode):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
     assert refresh_ann_index(emb, index)["mode"] == "noop"
-
-
-def test_index_rollback_forces_full_resync(spark, tmp_path):
-    emb = _mk_emb(spark, tmp_path, "cow")
-    index = create_ann_index(spark, str(tmp_path / "idx"), CENTS, num_buckets=4)
-    merge_into(emb, _src(spark, [
-        dict(vec_id=1, embedding=_vec(0, 1), lsn=1, op="U"),
-        dict(vec_id=2, embedding=_vec(1, 2), lsn=2, op="U"),
-    ]), batch_key="c1")
-    refresh_ann_index(emb, index)
-    v_good = emb.current_version()
-    merge_into(emb, _src(spark, [
-        dict(vec_id=3, embedding=_vec(2, 3), lsn=10, op="U"),
-    ]), batch_key="c2")
-    refresh_ann_index(emb, index)
-    emb.rollback(v_good)
-    s = refresh_ann_index(emb, index)
-    assert s["mode"] == "full"
-    assert 3 not in {
-        r["vec_id"] for r in index.read().select("vec_id").collect()
-    }
-    queries = _queries(spark, [dict(vec_id=100, embedding=_vec(0, 9))])
-    _assert_probe_equals_recompute(spark, emb, index, queries, k=2)
 
 
 def test_crash_replayed_refresh_is_idempotent(spark, tmp_path):

@@ -458,21 +458,23 @@ def test_drop_branch_removes_its_sidecars(spark, tmp_path):
 
 
 def test_where_in_after_erase(spark, tmp_path):
-    """GDPR composition: erasing a key physically rewrites its bucket;
-    a where_in probe for the erased row's value finds nothing, and
-    stale sidecars of the rewritten files are never consulted (the
-    erase commit reset the annotations with the files)."""
+    """Deleting a key under copy-on-write physically rewrites its
+    bucket; a where_in probe for the deleted row's value finds
+    nothing, and stale sidecars of the rewritten files are never
+    consulted (the rewrite reset the annotations with the files)."""
     t = _mk(spark, tmp_path, "cow", name="er", num_buckets=2)
     merge_into(t, _src(spark, _vrows(0, 100, 0)), batch_key="b0")
     t.build_blooms(columns=["v"])
     v7 = (7 * 37) % 1000
     assert t.read(where_in={"v": [v7]}).count() == 1
-    t.erase_keys([7])
-    # the erase rewrote key 7's bucket: those fresh files carry no
+    merge_into(t, spark.createDataFrame(
+        [(7, None, "D", 100_007)], "user_id long, v long, op string, lsn long"
+    ), batch_key="d7")
+    # the delete rewrote key 7's bucket: those fresh files carry no
     # stale annotations (reset with the rewrite), others keep theirs
-    erased_bucket = t._buckets_for_values(t.manifest(), [7])[0]
+    deleted_bucket = t._buckets_for_values(t.manifest(), [7])[0]
     for f in t.manifest().files:
-        if f.bucket == erased_bucket:
+        if f.bucket == deleted_bucket:
             assert not (f.col_blooms or {})
     assert t.read(where_in={"v": [v7]}).count() == 0
     # untouched keys still probe exactly after a fresh build

@@ -170,10 +170,11 @@ def test_signed_deltas_maintenance(spark, tmp_path):
 
 
 def test_maintenance_commits_skip_the_feed_diff(spark, tmp_path):
-    """Compaction and rebucket commits are version-stamp-marked as
-    maintenance: the feed window spanning them emits the same logical
-    changes, and the per-commit diff short-circuits to None (no scan)
-    instead of relying on the LSN guard to discard carried-over rows."""
+    """Compaction commits are version-stamp-marked as maintenance: the
+    feed window spanning them emits the same logical changes, and the
+    per-commit diff short-circuits to None (no scan) instead of
+    relying on the LSN guard to discard carried-over rows. The next
+    real commit inherits the stale marker and is still diffed."""
     from etl_spark.lake.changes import _commit_changes
 
     t = _mk(spark, tmp_path, "mor")
@@ -191,13 +192,8 @@ def test_maintenance_commits_skip_the_feed_diff(spark, tmp_path):
 
     v_compact = t.compact(max_files_per_bucket=1)
     assert v_compact > v_pre  # compaction really committed
-    v_rebucket = t.rebucket(t.manifest().num_buckets * 2)
-
-    for v in (v_compact, v_rebucket):
-        assert t.manifest(v).props.get("maintenance_commit") == v
-        assert _commit_changes(t, v, include_pre_images=True) is None
-    # a stale inherited marker must NOT silence later real commits
-    assert t.manifest(v_rebucket).props["maintenance_commit"] != v_rebucket + 1
+    assert t.manifest(v_compact).props.get("maintenance_commit") == v_compact
+    assert _commit_changes(t, v_compact, include_pre_images=True) is None
 
     feed_after = read_changes(t, v0).toPandas()
     pd.testing.assert_frame_equal(
@@ -206,6 +202,16 @@ def test_maintenance_commits_skip_the_feed_diff(spark, tmp_path):
         feed_after.sort_values(["_commit_version", "conv_id", "turn_idx",
                                 "_change_type"]).reset_index(drop=True),
     )
+
+    # a stale inherited marker must NOT silence the next real commit
+    v_real = merge_into(t, _src(spark, [
+        dict(conv_id="a", turn_idx=0, text="a0v3", lsn=20, op="U"),
+    ]), batch_key="b2")
+    assert t.manifest(v_real).props["maintenance_commit"] == v_compact
+    real = _commit_changes(t, v_real, include_pre_images=False).collect()
+    assert [(r["conv_id"], r["text"], r["_change_type"]) for r in real] == [
+        ("a", "a0v3", "update_postimage")
+    ]
 
 
 def test_read_changes_datetime_bounds(spark, tmp_path):

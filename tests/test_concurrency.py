@@ -1,5 +1,5 @@
-"""Optimistic concurrency for out-of-band maintenance racing the
-stream's merges: the O_EXCL manifest create alone only catches the
+"""Optimistic concurrency for maintenance and other writers racing
+the stream's merges: the O_EXCL manifest create alone only catches the
 final instant; `expected_version`/`CommitConflict` closes the WIDE
 window where a competing commit lands during an expensive bucket
 rewrite and a stale commit would silently drop the winner's rows
@@ -117,54 +117,40 @@ def test_compact_loses_race_gracefully(spark, tmp_path):
     assert row[0]["text"] == f"winner-{max_lsn + 1}"
 
 
-def test_erase_retries_and_lands_after_race(spark, tmp_path):
-    """An erase racing a live merge must LAND (GDPR): it retries from
-    the fresh snapshot, preserving the winner's rows in other keys."""
-    g, base, binlog, cfg, table = _table(spark, tmp_path)
-    oracle = replay_oracle(base, binlog, [])
-    victim = oracle["conv_id"].iloc[0]
-    other = oracle["conv_id"].iloc[-1]
-    assert victim != other
-    max_lsn = int(binlog["lsn"].max())
-    racer = LakeTable(spark, cfg.table_root)
-
-    with _inject_between_stage_and_commit(
-        table, lambda: _racing_merge(spark, racer, other, max_lsn + 1)
-    ):
-        table.erase_keys([victim], batch_key="erase:raced")
-    # the erase landed AND the racing merge's row survived
-    assert table.read().filter(F.col("conv_id") == victim).count() == 0
-    row = table.read().filter(
-        (F.col("conv_id") == other) & (F.col("turn_idx") == 0)
-    ).collect()
-    assert len(row) == 1 and row[0]["text"] == f"winner-{max_lsn + 1}"
-
-
-def test_merge_conflicts_when_erase_wins_race(spark, tmp_path):
-    """A CoW merge whose target scan predates a winning erase must
-    NOT commit (it would resurrect pre-erase rows it carried over):
-    CommitConflict propagates so the streaming engine replays the
-    batch against the fresh snapshot."""
+def test_merge_conflicts_when_racing_merge_wins(spark, tmp_path):
+    """A CoW merge whose target scan predates a winning merge into the
+    same bucket must NOT commit (its rewrite carries the pre-race rows
+    over and would drop the winner's row): CommitConflict propagates
+    so the streaming engine replays the batch against the fresh
+    snapshot."""
     g, base, binlog, cfg, table = _table(spark, tmp_path, write_mode="cow")
     oracle = replay_oracle(base, binlog, [])
-    victim = oracle["conv_id"].iloc[0]
-    other = oracle["conv_id"].iloc[-1]
+    conv = oracle["conv_id"].iloc[-1]
     max_lsn = int(binlog["lsn"].max())
+    winner = spark.createDataFrame(
+        [(conv, 999, "user", "racing-winner", None, 1, "U", max_lsn + 1)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts long, op string, lsn long",
+    )
 
-    eraser = LakeTable(spark, cfg.table_root)
+    racer = LakeTable(spark, cfg.table_root)
     with _inject_between_stage_and_commit(
-        table, lambda: eraser.erase_keys([victim], batch_key="erase:winner")
+        table, lambda: merge_into(racer, winner, batch_key="race:winner")
     ):
         with pytest.raises(CommitConflict):
-            _racing_merge(spark, table, other, max_lsn + 1)
-    # the erase held; replaying the merge against the fresh snapshot works
-    assert table.read().filter(F.col("conv_id") == victim).count() == 0
-    _racing_merge(spark, table, other, max_lsn + 1)
-    assert table.read().filter(F.col("conv_id") == victim).count() == 0
-    row = table.read().filter(
-        (F.col("conv_id") == other) & (F.col("turn_idx") == 0)
-    ).collect()
-    assert len(row) == 1 and row[0]["text"] == f"winner-{max_lsn + 1}"
+            _racing_merge(spark, table, conv, max_lsn + 2)
+
+    def turn(i):
+        return table.read().filter(
+            (F.col("conv_id") == conv) & (F.col("turn_idx") == i)
+        ).collect()
+
+    # the winner held; replaying the merge against the fresh snapshot
+    # keeps both rows
+    assert [r["text"] for r in turn(999)] == ["racing-winner"]
+    _racing_merge(spark, table, conv, max_lsn + 2)
+    assert [r["text"] for r in turn(999)] == ["racing-winner"]
+    assert [r["text"] for r in turn(0)] == [f"winner-{max_lsn + 2}"]
 
 
 def test_merge_rebases_over_maintenance_race(spark, tmp_path):
@@ -194,62 +180,72 @@ def test_merge_rebases_over_maintenance_race(spark, tmp_path):
     assert assert_equalish == table.read().count()
 
 
-def test_erase_rebased_over_maintenance_keeps_feed_visibility(spark, tmp_path):
+def test_compaction_rebased_over_compaction_stamps_landed_version(
+    spark, tmp_path
+):
     """Version-stamped props must be stamped with the version the
-    commit ACTUALLY lands at: an erase that rebases over a winning
-    compaction still needs `erase_commit == version`, or the change
-    feed's erase waiver misses it and downstream silently retains
-    GDPR-erased rows."""
+    commit ACTUALLY lands at: a compaction that rebases over a racing
+    compaction lands one version later than it planned, and its
+    `maintenance_commit` must name that landed version, or the change
+    feed would diff it and `_rebase_safe` would treat it as a real
+    commit. The next real merge still reaches the feed."""
     from etl_spark.lake.changes import read_changes
 
     g, base, binlog, cfg, table = _table(spark, tmp_path)
     oracle = replay_oracle(base, binlog, [])
-    victim = oracle["conv_id"].iloc[0]
-    n_victim = int((oracle["conv_id"] == victim).sum())
+    conv = oracle["conv_id"].iloc[0]
+    max_lsn = int(binlog["lsn"].max())
     compactor = LakeTable(spark, cfg.table_root)
     v0 = table.current_version()
 
     with _inject_between_stage_and_commit(
         table, lambda: compactor.compact(max_files_per_bucket=1)
     ):
-        table.erase_keys([victim], batch_key="erase:rebased")
-    v1 = table.current_version()
-    assert table.read().filter(F.col("conv_id") == victim).count() == 0
-    m = table.manifest()
-    assert m.props.get("erase_commit") == v1, "stamp must match landed version"
-    deletes = read_changes(table, from_version=v0, to_version=v1).filter(
-        F.col("_change_type") == "delete"
+        v1 = table.compact(max_files_per_bucket=1)
+    assert v1 == table.current_version() == v0 + 2, "rebased, not skipped"
+    assert table.manifest(v0 + 1).props["maintenance_commit"] == v0 + 1
+    assert table.manifest(v1).props["maintenance_commit"] == v1, (
+        "stamp must match landed version"
     )
-    assert deletes.count() == n_victim
+    assert read_changes(table, from_version=v0, to_version=v1).count() == 0
+
+    v2 = _racing_merge(spark, table, conv, max_lsn + 1)
+    assert table.manifest(v2).props["maintenance_commit"] != v2
+    feed = read_changes(table, from_version=v1, to_version=v2).collect()
+    assert [(r["conv_id"], r["turn_idx"], r["text"]) for r in feed
+            if r["_change_type"] != "delete"] == [
+        (conv, 0, f"winner-{max_lsn + 1}")
+    ]
 
 
 @pytest.mark.parametrize("write_mode", ["cow", "mor"])
 def test_merge_conflicts_when_rebucket_wins(spark, tmp_path, write_mode):
-    """Rebucket carries the maintenance marker but CHANGES the bucket
-    layout: a stale rewrite (CoW) or delta append (MoR) must NOT rebase
-    over it (its staged files carry old hash-mod bucket ids),
-    regardless of the marker."""
+    """A racing commit that carries the maintenance marker but CHANGES
+    the bucket layout: a stale rewrite (CoW) or delta append (MoR)
+    must NOT rebase over it (its staged files carry the old hash-mod
+    bucket ids), regardless of the marker. The layout is fixed at
+    `create`, so the racer is a hand-built manifest."""
     g, base, binlog, cfg, table = _table(spark, tmp_path, write_mode=write_mode)
     oracle = replay_oracle(base, binlog, [])
     other = oracle["conv_id"].iloc[-1]
     max_lsn = int(binlog["lsn"].max())
-    rebucketer = LakeTable(spark, cfg.table_root)
-    fired = {"done": False}
+    racer = LakeTable(spark, cfg.table_root)
 
-    def rebucket_once():
-        if not fired["done"]:
-            fired["done"] = True
-            rebucketer.rebucket(8)
+    def relayout():
+        m = racer.manifest()
+        racer._commit_manifest(m.child(
+            num_buckets=2 * m.num_buckets,
+            props={**m.props, "maintenance_commit": m.version + 1},
+        ))
 
-    with _inject_between_stage_and_commit(table, rebucket_once):
+    v0 = table.current_version()
+    with _inject_between_stage_and_commit(table, relayout):
         with pytest.raises(CommitConflict):
             _racing_merge(spark, table, other, max_lsn + 1)
-    # replay against the new layout succeeds and state is consistent
-    _racing_merge(spark, table, other, max_lsn + 1)
-    row = table.read().filter(
-        (F.col("conv_id") == other) & (F.col("turn_idx") == 0)
-    ).collect()
-    assert len(row) == 1 and row[0]["text"] == f"winner-{max_lsn + 1}"
+    # only the racer landed; the loser's batch is not in the ledger
+    m = table.manifest()
+    assert m.version == v0 + 1 and m.num_buckets == 2 * cfg.num_buckets
+    assert f"race:{max_lsn + 1}" not in m.committed_batches
 
 
 def test_mor_append_rebases_over_compaction(spark, tmp_path):

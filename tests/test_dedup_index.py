@@ -1,7 +1,7 @@
 """Incremental dedup-index maintenance: the index refreshed from the
 change feed must always equal `exact_dedup_groups` recomputed on the
 full base table — across inserts, updates that move fingerprints,
-deletes, erases, a schema-evolution window, a rollback, and a
+deletes, a schema-evolution window, and a
 crash-replayed refresh. Also the batch probe path."""
 
 from __future__ import annotations
@@ -115,34 +115,14 @@ def test_index_across_schema_evolution_and_erase(spark, tmp_path, mode):
     assert s["mode"] == "incremental"
     _assert_index_equals_recompute(docs, index)
 
-    # erase (GDPR path) emits feed deletes: erased docs leave the index
-    docs.erase_where(F.col("doc_id") == 1, batch_key="erase1")
+    # a D event emits a feed delete: the deleted doc leaves the index
+    merge_into(docs, _src(spark, [
+        dict(doc_id=1, text="", lsn=20, op="D"),
+    ]).withColumn("lang", F.lit("en")), batch_key="c3")
     s = refresh_index(docs, index)
     assert s["mode"] == "incremental"
     _assert_index_equals_recompute(docs, index)
     assert 1 not in {
-        r["doc_id"] for r in index.read().select("doc_id").collect()
-    }
-
-
-def test_index_rollback_forces_full_resync(spark, tmp_path):
-    docs = _mk_docs(spark, tmp_path, "cow")
-    index = create_index(spark, str(tmp_path / "idx"), num_buckets=4)
-    merge_into(docs, _src(spark, [
-        dict(doc_id=1, text="aaa", lsn=1, op="U"),
-        dict(doc_id=2, text="bbb", lsn=2, op="U"),
-    ]), batch_key="c1")
-    refresh_index(docs, index)
-    v_good = docs.current_version()
-    merge_into(docs, _src(spark, [
-        dict(doc_id=3, text="ccc", lsn=10, op="U"),
-    ]), batch_key="c2")
-    refresh_index(docs, index)
-    docs.rollback(v_good)
-    s = refresh_index(docs, index)
-    assert s["mode"] == "full"
-    _assert_index_equals_recompute(docs, index)
-    assert 3 not in {
         r["doc_id"] for r in index.read().select("doc_id").collect()
     }
 

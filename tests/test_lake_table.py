@@ -190,151 +190,6 @@ def test_lookup_prunes_buckets(spark, tmp_path):
     assert t.lookup([]).count() == 0
 
 
-def test_rollback_restores_state_and_ledger(spark, tmp_path):
-    """Rollback re-points to an old snapshot without moving data:
-    state and ledger restored, history still time-travelable, and the
-    undone batch keys become re-appliable."""
-    from etl_spark.lake.merge import merge_into
-
-    t = make_table(spark, tmp_path)
-    seed(spark, t)  # v1
-    def upd(text, lsn):
-        src = spark.createDataFrame(
-            pd.DataFrame(dict(conv_id=["c0"], turn_idx=[0], text=[text],
-                              ts=[lsn], lsn=[lsn], op=["U"]))
-        ).withColumn("turn_idx", F.col("turn_idx").cast("int"))
-        merge_into(t, src, batch_key=f"b{lsn}")
-
-    upd("good", 100)
-    v_good = t.current_version()
-    state_good = sorted(map(tuple, t.read().collect()))
-    upd("bad", 200)  # the deploy to undo
-    assert t.has_batch("b200")
-
-    v_new = t.rollback(v_good)
-    assert v_new == t.current_version()
-    assert sorted(map(tuple, t.read().collect())) == state_good
-    assert t.has_batch("b100") and not t.has_batch("b200")
-    # the bad version is still time-travel readable (until expiry)
-    bad = {r["text"] for r in t.read(version=v_good + 1).collect()}
-    assert "bad" in bad
-    # re-applying the undone span with corrected data now lands
-    upd("fixed", 200)
-    assert {r["text"] for r in t.lookup(["c0"]).filter(
-        F.col("turn_idx") == 0).collect()} == {"fixed"}
-    # a replayed pre-rollback batch stays a no-op (ledger restored)
-    upd("stale-reapply", 100)
-    # lsn 100 <= 200: merge LSN guard also protects; text unchanged
-    assert {r["text"] for r in t.lookup(["c0"]).filter(
-        F.col("turn_idx") == 0).collect()} == {"fixed"}
-
-
-def test_rebucket_migrates_layout(spark, tmp_path):
-    """Bucket-count evolution: state identical, new layout effective
-    for pruning and later merges, tombstones survive the migration."""
-    from etl_spark.lake.merge import merge_into
-
-    t = LakeTable.create(
-        spark, str(tmp_path / "tbl"), fields=FIELDS,
-        key=["conv_id", "turn_idx"], bucket_by="conv_id",
-        num_buckets=2, write_mode="mor",
-    )
-    seed(spark, t)
-    def ev(conv, turn, text, lsn, op="U"):
-        src = spark.createDataFrame(
-            pd.DataFrame(dict(conv_id=[conv], turn_idx=[turn], text=[text],
-                              ts=[lsn], lsn=[lsn], op=[op]))
-        ).withColumn("turn_idx", F.col("turn_idx").cast("int"))
-        merge_into(t, src, batch_key=f"b{lsn}")
-
-    ev("c1", 1, "new", 100)
-    ev("c2", 2, "", 101, op="D")  # tombstone must survive rebucket
-    before = sorted(map(tuple, t.read().collect()))
-
-    v = t.rebucket(16)
-    assert t.current_version() == v and t.manifest().num_buckets == 16
-    assert sorted(map(tuple, t.read().collect())) == before
-    assert all(f.bucket < 16 for f in t.manifest().files)
-    # pruned lookup under the new layout
-    got = t.lookup(["c1"]).filter(F.col("turn_idx") == 1).collect()
-    assert [r["text"] for r in got] == ["new"]
-    # the delete stays dead: a stale lower-LSN update cannot resurrect
-    ev("c2", 2, "stale", 50)
-    assert t.read().filter(
-        (F.col("conv_id") == "c2") & (F.col("turn_idx") == 2)
-    ).count() == 0
-    # replayed pre-migration batch is still a no-op (ledger carried)
-    ev("c1", 1, "replayed", 100)
-    got = t.lookup(["c1"]).filter(F.col("turn_idx") == 1).collect()
-    assert [r["text"] for r in got] == ["new"]
-    # new work lands under the new layout
-    ev("c3", 3, "post", 200)
-    got = t.lookup(["c3"]).filter(F.col("turn_idx") == 3).collect()
-    assert [r["text"] for r in got] == ["post"]
-
-
-def test_drop_column_no_resurrection_on_readd(spark, tmp_path):
-    """drop is metadata-only; re-adding a SAME-NAMED column allocates a
-    fresh field id, so the old files' bytes must NOT resurrect under
-    the new column (the classic field-ID-model correctness property)."""
-    from etl_spark.lake.merge import merge_into
-
-    t = make_table(spark, tmp_path)
-    seed(spark, t)
-    t.add_column("tool", "string")
-    src = spark.createDataFrame(
-        pd.DataFrame(dict(conv_id=["c0"], turn_idx=[0], text=["x"],
-                          ts=[100], tool=["bash"], lsn=[100], op=["U"]))
-    ).withColumn("turn_idx", F.col("turn_idx").cast("int"))
-    merge_into(t, src, batch_key="b100")
-    assert {r["tool"] for r in t.lookup(["c0"]).filter(
-        F.col("turn_idx") == 0).collect()} == {"bash"}
-    old_tool_id = next(
-        f.id for f in t.manifest().schema.fields if f.name == "tool"
-    )
-
-    t.drop_column("tool")
-    assert "tool" not in t.read().columns
-    import pytest
-    with pytest.raises(ValueError):
-        t.drop_column("conv_id")  # key column is protected
-
-    t.add_column("tool", "string")
-    new_tool_id = next(
-        f.id for f in t.manifest().schema.fields if f.name == "tool"
-    )
-    assert new_tool_id > old_tool_id  # fresh id, never recycled
-    vals = {r["tool"] for r in t.read().collect()}
-    assert vals == {None}  # nothing resurrected
-
-
-def test_history_metadata_view(spark, tmp_path):
-    """One row per retained snapshot with a correct commit-kind
-    classification across merge / schema / maintenance / rollback."""
-    from etl_spark.lake.merge import merge_into
-
-    t = make_table(spark, tmp_path)
-    seed(spark, t)  # v1: merge (ledger gains "seed")
-    t.add_column("lang", "string")  # v2: schema
-    src = spark.createDataFrame(
-        pd.DataFrame(dict(conv_id=["c0"], turn_idx=[0], text=["x"], ts=[100],
-                          lang=["en"], lsn=[100], op=["U"]))
-    ).withColumn("turn_idx", F.col("turn_idx").cast("int"))
-    merge_into(t, src, batch_key="b100")  # v3: merge
-    t.rebucket(16)  # v4: maintenance
-    t.rollback(3)  # v5: rollback
-    t.add_column("tool", "string")  # v6: schema (after a rollback)
-
-    h = {r["version"]: r for r in t.history().collect()}
-    assert [h[v]["kind"] for v in sorted(h)] == [
-        "schema", "merge", "schema", "merge", "maintenance", "rollback",
-        "schema",
-    ]  # v0 create is a schema commit with no batches
-    assert h[3]["new_batches"] == "b100"
-    assert h[4]["num_buckets"] == 16 and h[5]["num_buckets"] == 8
-    assert h[6]["parent"] == 5
-
-
 def test_two_level_manifest_carries_pointers(spark, tmp_path):
     """Two-level file index: a commit touching one bucket writes that
     bucket's group anew and carries every other bucket's group by
@@ -399,29 +254,6 @@ def test_flat_format_snapshot_is_refused(spark, tmp_path):
         t.manifest()
 
 
-def test_files_metadata_view(spark, tmp_path):
-    """files() (Iceberg <table>.files analog): one row per live data
-    file with recorded row counts (stage-time footer reads), the
-    staging commit, zone-mapped columns, and Bloom coverage."""
-    t = make_table(spark, tmp_path)
-    seed(spark, t)
-    t.build_blooms()
-    m = t.manifest()
-    rows = {r["path"]: r for r in t.files().collect()}
-    assert set(rows) == {f.path for f in m.files}
-    total = sum(r["rows"] for r in rows.values())
-    assert total == t.read().count()  # writer-recorded counts are real
-    for r in rows.values():
-        assert r["commit"].startswith("c") and r["rows"] > 0
-        assert "conv_id" in r["bloom_cols"]
-        assert "ts" in r["range_cols"]
-    # time travel: the view reflects the requested snapshot
-    v0_files = t.files(version=1).collect()
-    assert {r["path"] for r in v0_files} == {
-        f.path for f in t.manifest(1).files
-    }
-
-
 def test_add_column_initial_default(spark, tmp_path):
     """Iceberg v3 initial-default analog: rows written BEFORE the add
     read back as the declared default (file-level field-ID alignment);
@@ -477,7 +309,7 @@ def test_add_column_initial_default(spark, tmp_path):
 def test_as_of_timestamp_time_travel(spark, tmp_path):
     """Iceberg as-of-timestamp analog: every commit stamps its wall
     time; read(version=<datetime>) resolves to the greatest snapshot
-    committed at or before it. history() exposes the stamps."""
+    committed at or before it. Each manifest carries its stamp."""
     import datetime as dt
     import time
 
@@ -498,9 +330,8 @@ def test_as_of_timestamp_time_travel(spark, tmp_path):
     assert old.count() == t.read(version=1).count()
     now = t.read(version=dt.datetime.now(dt.timezone.utc))
     assert now.filter(F.col("turn_idx") == 999).count() == 1
-    stamps = {r["version"]: r["committed_at_us"]
-              for r in t.history().collect()}
-    assert all(s and s > 0 for s in stamps.values())
+    stamps = [t.manifest(v).props.get("committed_at_us") for v in range(3)]
+    assert all(s and s > 0 for s in stamps) and stamps == sorted(stamps)
     # a timestamp before the table existed fails loud
     import pytest as _pt
     with _pt.raises(ValueError, match="no retained snapshot"):

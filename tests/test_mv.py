@@ -107,61 +107,3 @@ def test_mv_crash_replayed_refresh_is_idempotent(spark, tmp_path):
     s2 = refresh(t, mv_dir, DIMS, SUMS)  # the crash-replayed run
     assert s2["mode"] == "incremental"
     pd.testing.assert_frame_equal(_mv(spark, mv_dir), want)
-
-
-def test_mv_incremental_across_erase_commit(spark, tmp_path):
-    """An out-of-band GDPR erase commits equal-LSN live->dead
-    transitions; the feed emits them as deletes (lake/changes.py
-    erase waiver), so incremental MV maintenance crossing the erase
-    must subtract the erased rows' contributions exactly — equal to a
-    full recompute of the post-erase snapshot."""
-    t = _mk(spark, tmp_path, "cow")
-    mv_dir = str(tmp_path / "mv")
-    merge_into(t, _src(spark, [
-        dict(conv_id="a", turn_idx=0, text="a0", lsn=1, op="U"),
-        dict(conv_id="a", turn_idx=3, text="a3", lsn=2, op="U"),
-        dict(conv_id="b", turn_idx=5, text="b5", lsn=3, op="U"),
-        dict(conv_id="c", turn_idx=2, text="c2", lsn=4, op="U"),
-    ]), batch_key="b0")
-    refresh(t, mv_dir, DIMS, SUMS)
-    pd.testing.assert_frame_equal(_mv(spark, mv_dir), _direct(t))
-
-    # erase conversation 'a' (whole group) and one more normal commit
-    t.erase_keys(["a"], batch_key="erase:a")
-    merge_into(t, _src(spark, [
-        dict(conv_id="c", turn_idx=9, text="c9", lsn=30, op="U"),
-    ]), batch_key="b1")
-
-    s = refresh(t, mv_dir, DIMS, SUMS)
-    assert s["mode"] == "incremental"
-    got = _mv(spark, mv_dir)
-    pd.testing.assert_frame_equal(got, _direct(t))
-    assert "a" not in set(got["conv_id"])  # erased group fully retired
-
-
-def test_mv_rollback_in_window_forces_full_resync(spark, tmp_path):
-    """A rollback commit inside the refresh window rewinds the base
-    while the change feed stays silent — incremental folding would
-    keep the undone rows in the aggregate. refresh() must detect the
-    rollback prop and fall back to a full recompute."""
-    t = _mk(spark, tmp_path, "cow")
-    mv_dir = str(tmp_path / "mv")
-    merge_into(t, _src(spark, [
-        dict(conv_id="a", turn_idx=0, text="a0", lsn=1, op="U"),
-        dict(conv_id="b", turn_idx=1, text="b1", lsn=2, op="U"),
-    ]), batch_key="b0")
-    good = t.current_version()
-    refresh(t, mv_dir, DIMS, SUMS)
-
-    merge_into(t, _src(spark, [
-        dict(conv_id="a", turn_idx=7, text="oops", lsn=10, op="U"),
-        dict(conv_id="z", turn_idx=3, text="z3", lsn=11, op="U"),
-    ]), batch_key="bad")
-    refresh(t, mv_dir, DIMS, SUMS)  # MV now includes the bad commit
-    t.rollback(good)
-
-    s = refresh(t, mv_dir, DIMS, SUMS)
-    assert s["mode"] == "full"
-    got = _mv(spark, mv_dir)
-    pd.testing.assert_frame_equal(got, _direct(t))
-    assert "z" not in set(got["conv_id"])  # undone insert retired

@@ -2,7 +2,7 @@
 refreshed from the change feed must always drive the exact same pair
 set as a from-scratch `minhash_lsh_pairs` recompute (frequency cap
 disabled — signature purity, see lake/neardup_index.py) — across
-inserts, band-moving updates, deletes, a rollback, and a
+inserts, band-moving updates, deletes, and a
 crash-replayed refresh. Also the batch probe path and its
 probe-time mega-bucket guard."""
 
@@ -119,28 +119,6 @@ def test_index_tracks_base_through_change_kinds(spark, tmp_path, mode):
 
     # no new commits -> noop
     assert refresh_neardup_index(docs, index)["mode"] == "noop"
-
-
-def test_index_rollback_forces_full_resync(spark, tmp_path):
-    docs = _mk_docs(spark, tmp_path, "cow")
-    index = create_neardup_index(spark, str(tmp_path / "idx"), num_buckets=4)
-    merge_into(docs, _src(spark, [
-        dict(doc_id=1, text=BASE, lsn=1, op="U"),
-        dict(doc_id=2, text=OTHER, lsn=2, op="U"),
-    ]), batch_key="c1")
-    refresh_neardup_index(docs, index)
-    v_good = docs.current_version()
-    merge_into(docs, _src(spark, [
-        dict(doc_id=3, text=BASE, lsn=10, op="U"),
-    ]), batch_key="c2")
-    refresh_neardup_index(docs, index)
-    docs.rollback(v_good)
-    s = refresh_neardup_index(docs, index)
-    assert s["mode"] == "full"
-    _assert_index_equals_recompute(docs, index)
-    assert 3 not in {
-        r["doc_id"] for r in index.read().select("doc_id").collect()
-    }
 
 
 def test_crash_replayed_refresh_is_idempotent(spark, tmp_path):

@@ -32,8 +32,6 @@ def test_exact_dedup(spark, docs):
     groups = {r["keeper_id"]: r["n_dups"] for r in DD.exact_dedup_groups(docs, "doc_id", "text").collect()}
     assert groups[1] == 2  # docs 1,2 collapse; keeper is min id
     assert sum(groups.values()) == len(DOCS)
-    kept = sorted(r["doc_id"] for r in DD.exact_dedup(docs, "doc_id", "text").collect())
-    assert kept == [1, 3, 4, 5, 6]
 
 
 def test_shingles_short_doc(spark):
@@ -823,7 +821,7 @@ def test_hash_split_deterministic_and_partition_invariant(spark):
     assignments at different partitionings (df.randomSplit cannot
     promise that), different seeds reshuffle membership, and weights
     that don't sum to 100 are refused."""
-    from etl_spark.operators.curation import hash_sample, hash_split
+    from etl_spark.operators.curation import hash_split
 
     df = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
     splits = (("train", 80), ("val", 10), ("test", 10))
@@ -847,11 +845,6 @@ def test_hash_split_deterministic_and_partition_invariant(spark):
     assert a != c  # a new seed is a new draw
     with pytest.raises(ValueError, match="sum to 100"):
         hash_split(df, "doc_id", (("train", 80), ("val", 10)), seed=7)
-    # sample with the same seed is the u < threshold prefix family:
-    # the 10% sample is a subset of the 20% sample (nested samples)
-    s10 = {r["doc_id"] for r in hash_sample(df, "doc_id", 10, seed=7).collect()}
-    s20 = {r["doc_id"] for r in hash_sample(df, "doc_id", 20, seed=7).collect()}
-    assert s10 < s20 and 100 < len(s10) < 300
 
 
 def test_pack_shards_matches_sequential_reference(spark):
@@ -969,16 +962,13 @@ def test_pack_shards_refuses_null_keys(spark):
 
 def test_hash_ops_refuse_null_keys_and_bad_weights(spark):
     """NULL keys have no identity: hashing them would pool every NULL
-    into the last split and drop them from every sample with no error
-    — both operators raise at row level instead. Weights must be
+    into the last split with no error — hash_split raises at row
+    level instead. Weights must be
     positive ints (a (110, -10) pair sums to 100 but silently empties
     a split)."""
-    from etl_spark.operators.curation import hash_sample, hash_split
+    from etl_spark.operators.curation import hash_split
 
     df = spark.createDataFrame([(1,), (None,)], "doc_id long")
-    with pytest.raises(Exception) as ei:
-        hash_sample(df, "doc_id", 100, seed=1).collect()
-    assert "NULL key" in str(ei.value)
     with pytest.raises(Exception) as ei:
         hash_split(
             df, "doc_id", (("a", 50), ("b", 50)), seed=1

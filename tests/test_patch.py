@@ -402,10 +402,10 @@ def test_patch_mor_cross_batch_fold_and_feed(spark, tmp_path):
     assert (feed[0]["text"], feed[0]["tool"]) == ("hello world", "search")
 
 
-def test_patch_mor_erased_key_stays_dead(spark, tmp_path):
-    """Erase/patch interaction under MoR: the read-time fold treats
-    the erase tombstone as the boundary, so a later patch delta leaves
-    the key dead; a later full image resurrects it."""
+def _table_with_deleted_key(spark, tmp_path, write_mode):
+    """Replay a small patch-free log, then delete one (conv_id,
+    turn_idx) key through a `D` event above every logged LSN. Returns
+    (table, victim, turn, next free LSN, event schema)."""
     from etl_spark.lake.merge import merge_into
     from etl_spark.lake.table import LakeTable
 
@@ -417,7 +417,7 @@ def test_patch_mor_erased_key_stays_dead(spark, tmp_path):
         manifest_dir=str(tmp_path / "manifest"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         num_buckets=8,
-        write_mode="mor",
+        write_mode=write_mode,
         patch_ops=True,
     )
     bootstrap(spark, cfg, base)
@@ -431,28 +431,63 @@ def test_patch_mor_erased_key_stays_dead(spark, tmp_path):
     oracle = replay_oracle(base, binlog, [])
     victim = oracle["conv_id"].iloc[0]
     turn = int(oracle[oracle["conv_id"] == victim]["turn_idx"].iloc[0])
-    table.erase_keys([victim], batch_key="erase:mor-patch")
-    max_lsn = int(binlog["lsn"].max())
+    lsn = int(binlog["lsn"].max()) + 1
     schema = (
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts long, op string, lsn long, "
         "_set_role boolean, _set_text boolean, _set_tool boolean, _set_ts boolean"
     )
+    delete = spark.createDataFrame(
+        [(victim, turn, None, None, None, None, "D", lsn,
+          True, True, True, True)], schema,
+    )
+    merge_into(table, delete, batch_key="d1")
+    key = (F.col("conv_id") == victim) & (F.col("turn_idx") == turn)
+    assert table.read().filter(key).count() == 0
+    return table, victim, turn, lsn + 1, schema
+
+
+def _patch_then_full_image(spark, table, victim, turn, lsn, schema):
+    """A patch onto the dead key leaves it dead; the full image that
+    follows re-creates it from its own columns."""
+    from etl_spark.lake.merge import merge_into
+
+    key = (F.col("conv_id") == victim) & (F.col("turn_idx") == turn)
     patch = spark.createDataFrame(
-        [(victim, turn, None, "zombie-patch", None, None, "P", max_lsn + 1,
+        [(victim, turn, None, "zombie-patch", None, None, "P", lsn,
           False, True, False, False)], schema,
     )
     merge_into(table, patch, batch_key="p1")
-    assert table.read().filter(F.col("conv_id") == victim).count() == 0
+    assert table.read().filter(key).count() == 0
     full = spark.createDataFrame(
-        [(victim, turn, "user", "fresh", None, 7, "U", max_lsn + 2,
+        [(victim, turn, "user", "fresh", None, 7, "U", lsn + 1,
           True, True, True, True)], schema,
     )
     merge_into(table, full, batch_key="p2")
-    row = table.read().filter(
-        (F.col("conv_id") == victim) & (F.col("turn_idx") == turn)
-    ).collect()
+    row = table.read().filter(key).collect()
     assert len(row) == 1 and row[0]["text"] == "fresh" and row[0]["role"] == "user"
+
+
+def test_patch_on_deleted_key_stays_dead_until_full_image(spark, tmp_path):
+    """Delete/patch interaction under CoW: a partial image whose base
+    was deleted must NOT resurrect the key as a mostly-NULL row (its
+    unset columns would coalesce from the nulled tombstone); only a
+    later FULL image re-creates it. The tombstone's LSN is not
+    advanced by the dropped patch, so the full image still applies."""
+    table, victim, turn, lsn, schema = _table_with_deleted_key(
+        spark, tmp_path, "cow"
+    )
+    _patch_then_full_image(spark, table, victim, turn, lsn, schema)
+
+
+def test_patch_mor_erased_key_stays_dead(spark, tmp_path):
+    """Delete/patch interaction under MoR: the read-time fold treats
+    the delete tombstone as the boundary, so a later patch delta leaves
+    the key dead; a later full image resurrects it."""
+    table, victim, turn, lsn, schema = _table_with_deleted_key(
+        spark, tmp_path, "mor"
+    )
+    _patch_then_full_image(spark, table, victim, turn, lsn, schema)
 
 
 def test_patch_bit_skips_fold_for_patch_free_buckets(spark, tmp_path):

@@ -1,78 +1,11 @@
-"""Sessionization: batch window-function form vs the streaming
-applyInPandasWithState form — identical semantics on the same log."""
+"""Sessionization: the window-function form assigns gap-based session
+indexes per key."""
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
-from etl_spark.cdc_schema import TRANSCRIPTS
-from etl_spark.engine.sessions import streaming_sessionize
-from etl_spark.gen.binlog import GenConfig, gen_base, gen_binlog, gen_schema_ops, write_segments
-from etl_spark.operators.sessions import session_summaries, sessionize
-
-
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    g = GenConfig(
-        n_convs=6, n_events=150, dup_rate=0.1, disorder_window=5,
-        segment_size=30, schema_op_fracs=(),
-    )
-    base = gen_base(g)
-    ops = gen_schema_ops(g)
-    binlog = gen_binlog(g, base, ops)
-    seg_dir = str(tmp_path / "segments")
-    write_segments(binlog, seg_dir)
-
-    # batch oracle over the deduplicated log (streaming dedups by LSN)
-    dedup = binlog.drop_duplicates(subset=["lsn"]).drop(columns="_seg")
-    bdf = spark.createDataFrame(dedup)
-    exp = (
-        session_summaries(
-            bdf, key_col="conv_id", order_col="lsn", ts_col="op_ts",
-            gap_seconds=15,
-        )
-        .toPandas()
-        .rename(columns={"first_id": "first_lsn", "last_id": "last_lsn"})
-        .sort_values(["conv_id", "session_idx"])
-        .reset_index(drop=True)
-    )
-    assert exp["session_idx"].max() > 0, "corpus must produce multiple sessions"
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS.binlog_schema())
-        .option("maxFilesPerTrigger", 1)
-        .parquet(seg_dir)
-    )
-    out = streaming_sessionize(stream, gap_seconds=15)
-    emitted: list[tuple] = []
-    q = (
-        out.writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: emitted.extend(
-            (bid, *r) for r in df.collect()
-        ))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    cols = ["batch", "conv_id", "session_idx", "n_events",
-            "first_lsn", "last_lsn", "start_s", "end_s"]
-    got = pd.DataFrame(emitted, columns=cols)
-    # update semantics: latest emission per (conv, session) wins
-    got = (
-        got.sort_values("batch")
-        .groupby(["conv_id", "session_idx"], as_index=False)
-        .last()
-        .drop(columns="batch")
-        .sort_values(["conv_id", "session_idx"])
-        .reset_index(drop=True)
-    )
-    exp = exp[got.columns.tolist()]
-    pd.testing.assert_frame_equal(
-        got.astype({"n_events": "int64"}), exp.astype({"n_events": "int64"}),
-        check_dtype=False,
-    )
+from etl_spark.operators.sessions import sessionize
 
 
 def test_sessionize_batch_shape(spark):

@@ -379,37 +379,6 @@ def test_batch_metrics_view(spark, tmp_path):
     assert (m["buckets_touched"] <= cfg.num_buckets).all()
 
 
-def test_rebucket_between_resumes_preserves_exactly_once(spark, tmp_path):
-    """Bucket-count evolution in the middle of a checkpointed replay:
-    replay half the log, rebucket the table (2x buckets), resume with
-    the rest — final state still equals the oracle, lineage still
-    covers the log exactly once (each batch's merge and lineage rollup
-    derive the bucket layout from the CURRENT manifest, so the
-    migration is invisible to the stream)."""
-    from etl_spark.lake.table import LakeTable
-
-    _, base, ops, binlog, seg_dir, paths = gen_all(tmp_path)
-    staged = str(tmp_path / "staged_segments")
-    os.makedirs(staged)
-    for p in paths[: len(paths) // 2]:
-        shutil.copy(p, staged)
-    cfg = make_cfg(tmp_path)
-    bootstrap(spark, cfg, base)
-    replay(spark, cfg, staged, ops)
-
-    t = LakeTable(spark, cfg.table_root)
-    old = t.manifest().num_buckets
-    t.rebucket(old * 2)
-
-    for p in paths[len(paths) // 2 :]:
-        shutil.copy(p, staged)
-    replay(spark, cfg, staged, ops)
-    assert t.manifest().num_buckets == old * 2
-    assert_frames_equal(final_state(spark, cfg), replay_oracle(base, binlog, ops))
-    inv = lineage.check_invariants(spark, cfg.manifest_dir)
-    assert inv["events_distinct_total"] == 150
-
-
 def test_ledger_schema_is_one_schema(spark, tmp_path):
     """A normal batch manifest, a poison-batch manifest and the empty
     ledger all read back with the one `LEDGER_COLUMNS` schema."""
