@@ -57,7 +57,7 @@ from etl_spark.engine.normalize import normalize_text
 from etl_spark.engine.quarantine import max_known_version, quarantine_split
 from etl_spark.engine.resolve import resolve_max_lsn, resolve_patch_fold
 from etl_spark.lake.merge import merge_into
-from etl_spark.lake.table import LakeTable, spark_type
+from etl_spark.lake.table import LakeTable, Manifest, spark_type
 
 
 def drain_pending(table_root: str) -> None:
@@ -68,19 +68,22 @@ def drain_pending(table_root: str) -> None:
     metric; it goes away with that wrap in the next benchmark change."""
 
 
-def parse_events(
-    df: DataFrame,
+def parse_batch(
+    batch_df: DataFrame,
     ops: list[SchemaOp],
     target_version: int,
-    versions: list[int] | None = None,
+    versions: list[int],
     spec: SourceSpec = TRANSCRIPTS,
     with_set_flags: bool = False,
 ) -> DataFrame:
-    """Decode the JSON payload by each event's schema_version and
-    project every event onto the `target_version` schema, mapping
-    payload fields to target columns by stable field ID (rename-safe)
-    and casting widened types (epoch-sec long -> timestamp; ISO string
-    -> timestamp). Pure JVM expressions (from_json + casts).
+    """The parse and normalize steps of `apply_batch`: decode the JSON
+    payload by each event's schema_version and project every event onto
+    the `target_version` schema, mapping payload fields to target
+    columns by stable field ID (rename-safe) and casting widened types
+    (epoch-sec long -> timestamp; ISO string -> timestamp), then
+    normalize the text column (Arrow pandas UDF, one ArrowEvalPython
+    over the batch; D rows keep null). A spec with
+    `normalize_field_id = None` skips normalization.
 
     One pass over the batch, whatever the number of versions: a filter
     keeps the events of `versions`, a first projection decodes each row
@@ -101,8 +104,6 @@ def parse_events(
     version's field name, the value mapped by stable field ID).
     A column that does not exist at the writer's version is unset for
     patches (a patch cannot assign a field its schema didn't have)."""
-    if versions is None:
-        versions = list(range(BASE_VERSION, target_version + 1))
     target = [
         f
         for f in fields_at_version(ops, target_version, spec.base_fields)
@@ -159,67 +160,39 @@ def parse_events(
             # unset for patches, as if the field were never named
             cols.append((is_full | mask.otherwise(F.lit(False))).alias(f"_set_{tf.name}"))
 
-    return (
-        df.filter(ver.isin(*versions))
+    parsed = (
+        batch_df.filter(ver.isin(*versions))
         .select(*[F.col(k) for k in spec.key], "lsn", "op", "op_ts", "schema_version", *decoded)
         .select(*cols)
     )
-
-
-def parse_batch(
-    batch_df: DataFrame,
-    ops: list[SchemaOp],
-    target_version: int,
-    versions: list[int],
-    spec: SourceSpec = TRANSCRIPTS,
-    with_set_flags: bool = False,
-) -> DataFrame:
-    """The parse and normalize steps of `apply_batch`: `parse_events`
-    (one pass: each row decodes once, under its own version's struct;
-    patch_ops also decodes the `_changed` mask into `_set_<col>`
-    flags), then vectorized text normalization (Arrow pandas UDF; D
-    rows keep null) — one ArrowEvalPython over the batch. A spec with
-    `normalize_field_id = None` skips normalization."""
-    parsed = parse_events(
-        batch_df,
-        ops,
-        target_version,
-        versions=versions,
-        spec=spec,
-        with_set_flags=with_set_flags,
-    )
-    if spec.normalize_field_id is None:
-        return parsed
     text_col = next(
-        (
-            f.name
-            for f in fields_at_version(ops, target_version, spec.base_fields)
-            if f.id == spec.normalize_field_id
-        ),
-        None,
+        (tf.name for tf in target if tf.id == spec.normalize_field_id), None
     )
     if text_col is None:
         return parsed
     return parsed.withColumn(text_col, normalize_text(F.col(text_col)))
 
 
-def evolve_due_ops(table: LakeTable, ops: list[SchemaOp], max_lsn: int) -> int:
+def evolve_due_ops(
+    table: LakeTable, ops: list[SchemaOp], max_lsn: int, m: Manifest
+) -> Manifest:
     """Apply schema ops that take effect at or before `max_lsn` and are
-    not yet in the table schema. Idempotent across batch replays: the
-    table's schema_id tracks how many ops are applied (schema_id 0 =
-    base). Returns the resulting schema version."""
-    applied = table.manifest().schema.schema_id  # == number of ops applied
+    not yet in snapshot `m`'s schema. Idempotent across batch replays:
+    the table's schema_id tracks how many ops are applied (schema_id 0
+    = base). Returns the post-evolve snapshot: the one the last op
+    committed, or `m` when no op was due."""
+    applied = m.schema.schema_id  # == number of ops applied
     due = [o for o in sorted(ops, key=lambda o: o.version) if o.lsn <= max_lsn]
     for op in due[applied:]:
         if op.kind == "add_column":
-            table.add_column(op.col, op.new_type)
+            m = table._add_column(op.col, op.new_type)
         elif op.kind == "rename_column":
-            table.rename_column(op.col, op.new_name)
+            m = table._rename_column(op.col, op.new_name)
         elif op.kind == "widen_type":
-            table.widen_type(op.col, op.new_type)
+            m = table._widen_type(op.col, op.new_type)
         else:
             raise ValueError(op.kind)
-    return BASE_VERSION + max(applied, len(due))
+    return m
 
 
 def _batch_files_from_checkpoint(checkpoint_dir: str, batch_id: int) -> list[str]:
@@ -393,9 +366,11 @@ def apply_batch(
     table = LakeTable(spark, cfg.table_root, branch=cfg.branch)
     batch_key = f"{source_id}:{batch_id}"
 
-    m0 = table.manifest()
-    covered = _prior_covered_ranges(m0.committed_batches, source_id, batch_id)
-    if batch_key in m0.committed_batches:
+    # the batch's one ledger snapshot: the replay check, the covered
+    # ranges and the due schema ops are all decided from it
+    m = table.manifest()
+    covered = _prior_covered_ranges(m.committed_batches, source_id, batch_id)
+    if batch_key in m.committed_batches:
         # replayed epoch after crash. The MERGE is already committed; if
         # the crash hit the window before the lineage write, fall
         # through to recompute it (merge_into below no-ops via ledger).
@@ -436,8 +411,10 @@ def apply_batch(
             f"for cross-segment re-delivery enable use_watermark_dedup"
         )
 
-    # 1. schema evolution due at this LSN horizon (metadata-only commits)
-    target_version = evolve_due_ops(table, ops, max_lsn)
+    # 1. schema evolution due at this LSN horizon (metadata-only
+    #    commits); `m` becomes the post-evolve snapshot
+    m = evolve_due_ops(table, ops, max_lsn, m)
+    target_version = BASE_VERSION + m.schema.schema_id
 
     # schema versions possibly present: version is monotone in LSN, so
     # the footer min/max of schema_version bounds the decode set,
@@ -469,7 +446,7 @@ def apply_batch(
                 cfg.manifest_dir,
                 batch_id,
                 {**stats_src, "events_quarantined": n_quarantined},
-                table.manifest().version,
+                m.version,
             )
             return
     elif stats_src["vnull"] or (vmin, vmax) != (lo, hi):
@@ -549,7 +526,7 @@ def apply_batch(
         version = merge_into(table, resolved, batch_key=batch_key, batch_stats=stats)
         try:
             lineage.write_batch_manifest(
-                spark, cfg.manifest_dir, table, resolved, batch_id, stats, version
+                spark, cfg.manifest_dir, m, resolved, batch_id, stats, version
             )
         except Exception:
             # one retry for a transient failure; a second failure
@@ -557,7 +534,7 @@ def apply_batch(
             # via the ledger and the lineage is recomputed)
             time.sleep(1.0)
             lineage.write_batch_manifest(
-                spark, cfg.manifest_dir, table, resolved, batch_id, stats, version
+                spark, cfg.manifest_dir, m, resolved, batch_id, stats, version
             )
     finally:
         resolved.unpersist()

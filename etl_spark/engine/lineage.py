@@ -30,7 +30,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from etl_spark.lake.table import BUCKET_COL, LakeTable
+from etl_spark.lake.table import BUCKET_COL, Manifest
 
 # resolve-internal count columns excluded from the content checksum
 INTERNAL_COLS = {BUCKET_COL, "_nev", "_nlsn", "_nnew"}
@@ -130,7 +130,7 @@ def _write_ledger(
 def write_batch_manifest(
     spark: SparkSession,
     manifest_dir: str,
-    table: LakeTable,
+    m: Manifest,
     resolved: DataFrame,
     batch_id: int,
     stats: dict,
@@ -144,10 +144,10 @@ def write_batch_manifest(
     full-batch count_distinct action for these). `_nnew` counts the
     distinct LSNs above the prior covered horizon, so each log event
     counts exactly once across batches even under cross-batch
-    re-delivery."""
-    m = table.manifest()
+    re-delivery. `m` is the batch's post-evolve snapshot (its bucket
+    layout assigns the rows to buckets); nothing is re-read."""
     rows = (
-        resolved.withColumn(BUCKET_COL, table.bucket_expr(m))
+        resolved.withColumn(BUCKET_COL, m.bucket_expr())
         .groupBy(F.col(BUCKET_COL).alias("partition_id"))
         .agg(
             F.min("lsn").alias("min_lsn"),

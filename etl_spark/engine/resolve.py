@@ -117,7 +117,7 @@ def resolve_patch_fold(
     column — true iff the event assigns that column (always true for
     I/U/D full images; for 'P' only the columns the patch carries, as
     decoded from the payload's `_changed` mask by
-    `engine.apply.parse_events(with_set_flags=True)`). Patches target
+    `engine.apply.parse_batch(with_set_flags=True)`). Patches target
     live rows: the log never emits 'P' for a key between its 'D' and
     the next 'I' (gen/binlog.py enforces this; a violator would
     surface as a resurrected row in the replay-oracle diff).

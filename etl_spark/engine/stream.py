@@ -33,7 +33,7 @@ def binlog_from_kafka(df: DataFrame, spec: SourceSpec = TRANSCRIPTS) -> DataFram
     onto the engine's binlog frame. The message value is a JSON
     envelope {lsn, op, <key cols>, schema_version, payload:{...}}; the
     nested payload object is kept as its raw JSON text (version-routed
-    decode happens downstream in parse_events, exactly as for the file
+    decode happens downstream in parse_batch, exactly as for the file
     source). One `json_tuple` parse per row, all JVM expressions.
 
     Production swap: `spark.readStream.format("kafka")...load()` then

@@ -45,6 +45,11 @@ def merge_into(
     """Apply a resolved change set to `table`. Returns new version
     (or current version unchanged if `batch_key` already committed).
 
+    The manifest is read once; the ledger check, target scan, staging
+    and commit all use that snapshot. A CoW merge that loses the commit
+    race to another merge raises `CommitConflict`, and the stream
+    replays the batch against the fresh snapshot.
+
     Dispatches on the table's write mode: copy-on-write joins and
     rewrites the touched buckets (below); merge-on-read appends the
     change set as delta files — O(batch) write cost — with the LSN
@@ -66,7 +71,7 @@ def merge_into(
         c: f"_set_{c}" for c in payload_cols if f"_set_{c}" in source.columns
     }
 
-    if table.write_mode(m) == "mor":
+    if m.write_mode == "mor":
         is_del = F.col(OP_COL) == F.lit("D")
         cols = [F.col(k) for k in key] + [
             F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c)
@@ -98,10 +103,11 @@ def merge_into(
             )
             props_update = {"patch_deltas": True}
         cols += [F.col(LSN_COL).alias(SYS_LSN), is_del.alias(SYS_DELETED)]
-        delta = source.select(*cols).withColumn(BUCKET_COL, table.bucket_expr(m))
+        delta = source.select(*cols).withColumn(BUCKET_COL, m.bucket_expr())
         if not set_flags:
             # full-image batch: every staged file is known patch-free
             return table.append_files(
+                m,
                 delta,
                 batch_key=batch_key,
                 batch_stats=batch_stats,
@@ -127,6 +133,7 @@ def merge_into(
                 .collect()
             }
             return table.append_files(
+                m,
                 delta,
                 batch_key=batch_key,
                 batch_stats=batch_stats,
@@ -144,7 +151,7 @@ def merge_into(
     # the withColumn plan scans the existing cache, and caching the
     # derived plan too would store the batch TWICE per micro-batch.
     already_cached = source.storageLevel.useMemory or source.storageLevel.useDisk
-    src = source.withColumn(BUCKET_COL, table.bucket_expr(m))
+    src = source.withColumn(BUCKET_COL, m.bucket_expr())
     if not already_cached:
         src = src.persist()
     try:
@@ -163,7 +170,7 @@ def merge_into(
         if not touched:
             return m.version
 
-        tgt = table.read_raw(buckets=touched)
+        tgt = table._scan(m, m.files_for(touched))
 
         s = src.select(
             *[F.col(k).alias(f"_s_{k}") for k in key],
@@ -217,23 +224,15 @@ def merge_into(
             .otherwise(F.coalesce(tgt[SYS_DELETED], F.lit(False)))
             .alias(SYS_DELETED)
         )
-        merged = j.select(*out_cols).withColumn(BUCKET_COL, table.bucket_expr(m))
+        merged = j.select(*out_cols).withColumn(BUCKET_COL, m.bucket_expr())
 
         return table.overwrite_buckets(
+            m,
             merged,
             touched,
             batch_key=batch_key,
             batch_stats=batch_stats,
             bucket_counts=bucket_counts,
-            # optimistic concurrency: this rewrite was computed from
-            # `m`; if a racing writer's merge or a publish_branch
-            # fast-forward advanced the table meanwhile, committing
-            # would drop the winner's rows in these buckets (the stale
-            # target scan carries the pre-race rows over). Raise
-            # CommitConflict instead — the streaming engine fails the
-            # batch and the checkpoint replay re-plans it against the
-            # fresh snapshot (idempotent via the ledger).
-            expected_version=m.version,
             patch_buckets=set(),  # CoW rewrite emits full images only
         )
     finally:

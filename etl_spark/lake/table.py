@@ -454,6 +454,25 @@ class Manifest:
     def files(self) -> list[DataFile]:
         return self.files_for(None)
 
+    @property
+    def write_mode(self) -> str:
+        return self.props.get("write_mode", "cow")
+
+    def bucket_expr(self) -> Column:
+        return F.pmod(F.xxhash64(F.col(self.bucket_by)), F.lit(self.num_buckets)).cast("int")
+
+    def covered_max_lsn(self) -> int:
+        """Highest LSN any committed batch covered (0 if none) — the
+        log horizon the ledger proves applied."""
+        return max(
+            (
+                int(st["max_lsn"])
+                for st in self.committed_batches.values()
+                if st and "max_lsn" in st
+            ),
+            default=0,
+        )
+
     def child(
         self, groups: dict[int, list[DataFile]] | None = None, **changes
     ) -> "Manifest":
@@ -707,13 +726,14 @@ class LakeTable:
         finally:
             os.unlink(tmp)
 
-    def _commit_loop(self, cur: Manifest, build, on_race=None) -> int:
+    def _commit_loop(self, cur: Manifest, build, on_race=None) -> Manifest:
         """The optimistic-concurrency commit: publish `build(cur)` and
-        return the version it landed at. `build` may return a version
-        instead of a manifest — nothing to commit, return it. On a lost
-        race (`FileExistsError`) the fresh snapshot goes to `on_race`,
-        which raises `CommitConflict` when the planned work cannot
-        rebase onto it; otherwise `build` runs again on top of it.
+        return the snapshot that landed. `build` may return `cur`
+        itself — nothing to commit, return it. On a lost race
+        (`FileExistsError`) the fresh snapshot goes to `on_race`, which
+        raises `CommitConflict` when the planned work cannot rebase
+        onto it; otherwise `build` runs again on top of it. This is the
+        only judge of commits that landed after the caller's read.
 
         `cur` must be the snapshot the caller planned and staged
         against, never a fresh read: a fresh read would silently absorb
@@ -721,14 +741,14 @@ class LakeTable:
         judging it."""
         while True:
             m = build(cur)
-            if isinstance(m, int):
-                return m
+            if m is cur:
+                return cur
             try:
                 self._commit_manifest(m)
             except FileExistsError:
                 cur = self.manifest()
             else:
-                return m.version
+                return m
             if on_race is not None:
                 on_race(cur)
 
@@ -773,20 +793,12 @@ class LakeTable:
         t._commit_manifest(m)
         return t
 
-    def write_mode(self, m: Manifest | None = None) -> str:
-        m = m or self.manifest()
-        return m.props.get("write_mode", "cow")
-
     @classmethod
     def exists(cls, root: str) -> bool:
         meta = os.path.join(root, "_meta")
         return os.path.isdir(meta) and any(n.endswith(".json") for n in os.listdir(meta))
 
     # ------------------------------------------------------------- read
-    def bucket_expr(self, m: Manifest | None = None):
-        m = m or self.manifest()
-        return F.pmod(F.xxhash64(F.col(m.bucket_by)), F.lit(m.num_buckets)).cast("int")
-
     def _read_files(self, m: Manifest, files: list[DataFile]) -> DataFrame | None:
         """Read a file set, mapping every file's write-time schema to
         the current schema by field ID (rename-safe, widen-casting)."""
@@ -1040,7 +1052,7 @@ class LakeTable:
         import datetime as _dt
 
         m = self.manifest(version)
-        resolve = self.write_mode(m) == "mor"
+        resolve = m.write_mode == "mor"
         by_name_all = {f.name: f for f in m.schema.fields}
         if where_in:
             for col, vals in where_in.items():
@@ -1110,7 +1122,7 @@ class LakeTable:
         )
         return sorted(
             r[0]
-            for r in lit_df.select(self.bucket_expr(m).alias("b")).distinct().collect()
+            for r in lit_df.select(m.bucket_expr().alias("b")).distinct().collect()
         )
 
     def lookup(self, values: list, version: int | None = None) -> DataFrame:
@@ -1315,12 +1327,12 @@ class LakeTable:
                 if changed:
                     groups[b] = new_group
             if not groups:
-                return cur.version
+                return cur
             return cur.child(
                 groups, props={**cur.props, "maintenance_commit": cur.version + 1}
             )
 
-        version = self._commit_loop(m, build)
+        version = self._commit_loop(m, build).version
         return {
             "files_bloomed": n_annotated, "m_bits": m_bits,
             "version": version, "columns": cols,
@@ -1339,7 +1351,7 @@ class LakeTable:
         write mode — merge-on-read resolved (`_scan_resolved`) for MoR,
         raw rows (`_read_files`) for CoW. Tombstones and system columns
         are kept; an empty file set yields an empty frame."""
-        if self.write_mode(m) == "mor":
+        if m.write_mode == "mor":
             df = self._scan_resolved(m, files)
         else:
             df = self._read_files(m, files)
@@ -1370,9 +1382,6 @@ class LakeTable:
         return out
 
     # ------------------------------------------------------------ write
-    def has_batch(self, batch_key: str) -> bool:
-        return batch_key in self.manifest().committed_batches
-
     def _stage_dataframe(
         self,
         df: DataFrame,
@@ -1601,9 +1610,9 @@ class LakeTable:
             for rel, _n in written
         }
 
-    def _rebase_safe(self, base_version: int, base: Manifest, fresh: Manifest) -> bool:
-        """True iff a rewrite computed from `base_version` may be
-        rebased onto `fresh`: every intervening commit is maintenance
+    def _rebase_safe(self, base: Manifest, fresh: Manifest) -> bool:
+        """True iff a rewrite computed from `base` may be rebased onto
+        `fresh`: every intervening commit is maintenance
         (compaction/tombstone GC — logical state of live rows
         unchanged; a purged tombstone re-staged by the stale rewrite
         is harmless) AND the bucket layout is unchanged. The layout is
@@ -1620,20 +1629,20 @@ class LakeTable:
         try:
             return all(
                 self.manifest(v).props.get("maintenance_commit") == v
-                for v in range(base_version + 1, fresh.version + 1)
+                for v in range(base.version + 1, fresh.version + 1)
             )
         except FileNotFoundError:
             return False
 
     def overwrite_buckets(
         self,
+        m: Manifest,
         df: DataFrame,
         replaced_buckets: list[int],
         batch_key: str | None = None,
         batch_stats: dict | None = None,
         props_update: dict | None = None,
         bucket_counts: dict[int, int] | None = None,
-        expected_version: int | None = None,
         stamp_props: tuple = (),
         patch_buckets: set[int] | None = None,
         range_layout: tuple[str | Column, int] | None = None,
@@ -1645,11 +1654,11 @@ class LakeTable:
         engages the write-skew guard in `_stage_dataframe`. Returns the
         new version.
 
-        `expected_version` (optimistic concurrency): the snapshot the
-        replacement content was computed from. If the table advanced
-        past it and the winners are not rebase-safe (`_rebase_safe`),
-        raise `CommitConflict` — committing would silently drop the
-        winner's rows in the replaced buckets.
+        `m`: the snapshot the replacement was computed from; the ledger
+        check, staging and commit run against it. Unless every commit
+        that landed since is rebase-safe (`_rebase_safe`, judged by
+        `on_race`), raise `CommitConflict` — committing would silently
+        drop the winner's rows in the replaced buckets.
 
         `stamp_props`: prop names set to the version this commit
         ACTUALLY lands at (compaction's `maintenance_commit`) —
@@ -1658,19 +1667,8 @@ class LakeTable:
         stamp would break every consumer that matches
         `props[k] == version` (the change feed's maintenance skip,
         `_rebase_safe`)."""
-        m = self.manifest()
         if batch_key is not None and batch_key in m.committed_batches:
             return m.version  # idempotent replay of a committed batch
-        if expected_version is not None and m.version != expected_version:
-            try:
-                base_m = self.manifest(expected_version)
-            except FileNotFoundError:
-                base_m = None
-            if base_m is None or not self._rebase_safe(expected_version, base_m, m):
-                raise CommitConflict(
-                    f"table advanced to v{m.version}; rewrite was computed "
-                    f"from v{expected_version}"
-                )
         staged = self._stage_dataframe(
             df, m, m.version + 1, bucket_counts=bucket_counts,
             patch_buckets=patch_buckets, range_layout=range_layout,
@@ -1679,13 +1677,9 @@ class LakeTable:
         bad = [f for f in staged if f.bucket not in replaced]
         if bad:
             raise ValueError(f"staged rows outside replaced buckets: {bad[:3]}")
-        # Commit loop: the publish loses to a racer landing between
-        # staging and commit (the NARROW window the expected_version
-        # check above cannot see). Same resolution rule via
-        # _rebase_safe (fresh file keep-list, staged content unchanged
-        # — logically identical rows). Untouched buckets carry over as
-        # POINTER strings; only the replaced buckets' new groups are
-        # materialized — O(touched) commit metadata.
+        # Untouched buckets carry over as POINTER strings; only the
+        # replaced buckets' new groups are materialized — O(touched)
+        # commit metadata.
         groups = {b: [] for b in replaced} | _group_files(staged)
 
         def build(cur: Manifest) -> Manifest:
@@ -1703,17 +1697,18 @@ class LakeTable:
             )
 
         def on_race(fresh: Manifest) -> None:
-            if not self._rebase_safe(m.version, m, fresh):
+            if not self._rebase_safe(m, fresh):
                 raise CommitConflict(
                     f"lost the commit race: table advanced to "
                     f"v{fresh.version}; rewrite was computed from "
                     f"v{m.version}"
                 )
 
-        return self._commit_loop(m, build, on_race)
+        return self._commit_loop(m, build, on_race).version
 
     def append_files(
         self,
+        m: Manifest,
         df: DataFrame,
         batch_key: str | None = None,
         batch_stats: dict | None = None,
@@ -1721,17 +1716,18 @@ class LakeTable:
         patch_buckets: set[int] | None = None,
     ) -> int:
         """Merge-on-read commit: stage `df` (BUCKET_COL + physical
-        schema + system columns) as new delta files; existing files
-        untouched. The max-LSN winner is resolved at read/compaction.
+        schema + system columns) under `m`, the snapshot the caller
+        planned on, as new delta files; existing files untouched. The
+        max-LSN winner is resolved at read/compaction.
 
         Concurrency: a pure append never loses an update, so losing
         the O_EXCL race is resolved by re-appending to the fresh file
-        list — UNLESS the winner's bucket layout differs. The layout
-        is fixed at `create`, so this guards against a racing manifest
-        that disagrees: the staged deltas carry the old bucket ids and
-        would misplace rows, so that raises `CommitConflict` (the
-        stream replays the batch against the fresh layout)."""
-        m = self.manifest()
+        list (deltas read by field ID, so a column added meanwhile
+        reads NULL) — UNLESS the winner's bucket layout differs. The
+        layout is fixed at `create`, so this guards against a racing
+        manifest that disagrees: the staged deltas carry the old bucket
+        ids and would misplace rows, so that raises `CommitConflict`
+        (the stream replays the batch against the fresh layout)."""
         if batch_key is not None and batch_key in m.committed_batches:
             return m.version
         staged = self._stage_dataframe(
@@ -1739,9 +1735,9 @@ class LakeTable:
         )
         added = _group_files(staged)
 
-        def build(cur: Manifest) -> Manifest | int:
+        def build(cur: Manifest) -> Manifest:
             if batch_key is not None and batch_key in cur.committed_batches:
-                return cur.version  # racer was our own replay
+                return cur  # racer was our own replay
             batches = dict(cur.committed_batches)
             if batch_key is not None:
                 batches[batch_key] = batch_stats or {}
@@ -1764,7 +1760,7 @@ class LakeTable:
                     f"deltas carry stale bucket ids"
                 )
 
-        return self._commit_loop(m, build, on_race)
+        return self._commit_loop(m, build, on_race).version
 
     def append_full(self, df: DataFrame, batch_key: str | None = None) -> int:
         """Bulk load `df` (logical columns only; lsn defaults to 0) by
@@ -1776,38 +1772,38 @@ class LakeTable:
         if SYS_DELETED not in df.columns:
             df = df.withColumn(SYS_DELETED, F.lit(False))
         df = df.select(*cols, F.col(SYS_LSN), F.col(SYS_DELETED)).withColumn(
-            BUCKET_COL, self.bucket_expr(m)
+            BUCKET_COL, m.bucket_expr()
         )  # _stage_dataframe adds a NULL _patched (full images)
         return self.overwrite_buckets(
-            df, list(range(m.num_buckets)), batch_key=batch_key,
+            m, df, list(range(m.num_buckets)), batch_key=batch_key,
             patch_buckets=set(),  # bulk load stages full images only
         )
 
     # --------------------------------------------------------- evolve
-    def _evolve(self, mutate) -> int:
-        """Metadata-only schema commit. The manifest's `key` and
-        `bucket_by` are NAMES, so a rename of a key/bucket column is
-        mapped through its field ID onto the new schema — otherwise
-        every later `bucket_expr`/merge/lookup would resolve a stale
-        name (regression: test_bloom.py rename-and-widen golden)."""
-        m = self.manifest()
-        new_fields = mutate(list(m.schema.fields))
-        new_schema = TableSchema(m.schema.schema_id + 1, new_fields)
-        old_by_name = {f.name: f.id for f in m.schema.fields}
-        new_by_id = {f.id: f.name for f in new_fields}
+    def _evolve(self, mutate) -> Manifest:
+        """Metadata-only schema commit of `mutate(m)`, snapshot `m`'s
+        new field list; returns the committed snapshot. After a lost
+        race the mutation re-runs on the fresh snapshot, so field IDs
+        and name/bucket-key checks are decided on the one it lands on.
+        `key` and `bucket_by` are NAMES, so a rename of a key/bucket
+        column is mapped through its field ID onto the new schema —
+        otherwise every later `bucket_expr`/merge/lookup would resolve
+        a stale name (regression: test_bloom.py rename-and-widen
+        golden)."""
 
-        def _track(name: str) -> str:
-            fid = old_by_name.get(name)
-            return new_by_id.get(fid, name) if fid is not None else name
+        def build(cur: Manifest) -> Manifest:
+            new_fields = mutate(cur)
+            new_schema = TableSchema(cur.schema.schema_id + 1, new_fields)
+            new_names = {f.id: f.name for f in new_fields}
+            renamed = {f.name: new_names.get(f.id, f.name) for f in cur.schema.fields}
+            return cur.child(
+                key=[renamed.get(k, k) for k in cur.key],
+                bucket_by=renamed.get(cur.bucket_by, cur.bucket_by),
+                schema=new_schema,
+                schemas={**cur.schemas, new_schema.schema_id: new_schema},
+            )
 
-        m2 = m.child(
-            key=[_track(k) for k in m.key],
-            bucket_by=_track(m.bucket_by),
-            schema=new_schema,
-            schemas={**m.schemas, new_schema.schema_id: new_schema},
-        )
-        self._commit_manifest(m2)
-        return m2.version
+        return self._commit_loop(self.manifest(), build)
 
     def _set_props(self, updates: dict) -> int:
         """Props-only metadata commit (no schema or file change). A
@@ -1826,7 +1822,7 @@ class LakeTable:
                 props={**props, "maintenance_commit": cur.version + 1}
             )
 
-        return self._commit_loop(self.manifest(), build)
+        return self._commit_loop(self.manifest(), build).version
 
     def set_bloom_on_write(
         self,
@@ -1885,17 +1881,9 @@ class LakeTable:
         alignment time instead of NULL; rows written after the add
         store their own values (including explicit NULLs), and
         rewrites materialize the default physically."""
-        # allocate the id above every field EVER used (all historical
-        # schemas), not just the live ones: a table written by an
-        # older version of this format may have dropped a column, and
-        # max(live)+1 would recycle that field's id so the field-ID
-        # read path would resurrect its old data under the new
-        # column's name
-        m = self.manifest()
-        next_id = 1 + max(
-            f.id for s in m.schemas.values() for f in s.fields
-        )
+        return self._add_column(name, type_, default).version
 
+    def _add_column(self, name: str, type_: str, default=None) -> Manifest:
         if default is not None:
             # fail at declaration, not at first read: the default must
             # be a JSON-encodable literal (no NaN/inf — not JSON) that
@@ -1915,15 +1903,26 @@ class LakeTable:
                     f"default {default!r} does not cast to {type_}"
                 )
 
-        def mut(fields: list[Field]) -> list[Field]:
-            if any(f.name == name for f in fields):
+        def mut(m: Manifest) -> list[Field]:
+            if any(f.name == name for f in m.schema.fields):
                 raise ValueError(f"column {name} exists")
-            return fields + [Field(next_id, name, type_, default)]
+            # allocate the id above every field EVER used (all
+            # historical schemas), not just the live ones: a table
+            # written by an older version of this format may have
+            # dropped a column, and max(live)+1 would recycle that
+            # field's id so the field-ID read path would resurrect its
+            # old data under the new column's name
+            next_id = 1 + max(f.id for s in m.schemas.values() for f in s.fields)
+            return m.schema.fields + [Field(next_id, name, type_, default)]
 
         return self._evolve(mut)
 
     def rename_column(self, old: str, new: str) -> int:
-        def mut(fields: list[Field]) -> list[Field]:
+        return self._rename_column(old, new).version
+
+    def _rename_column(self, old: str, new: str) -> Manifest:
+        def mut(m: Manifest) -> list[Field]:
+            fields = m.schema.fields
             if not any(f.name == old for f in fields):
                 raise ValueError(f"no column {old}")
             if any(f.name == new for f in fields):
@@ -1936,16 +1935,17 @@ class LakeTable:
         return self._evolve(mut)
 
     def widen_type(self, name: str, new_type: str) -> int:
-        m0 = self.manifest()
+        return self._widen_type(name, new_type).version
 
-        def mut(fields: list[Field]) -> list[Field]:
+    def _widen_type(self, name: str, new_type: str) -> Manifest:
+        def mut(m: Manifest) -> list[Field]:
             out = []
             hit = False
-            for f in fields:
+            for f in m.schema.fields:
                 if f.name == name:
                     if f.type != new_type and (f.type, new_type) not in ALLOWED_WIDENS:
                         raise ValueError(f"illegal widen {f.type} -> {new_type}")
-                    if f.type != new_type and name == m0.bucket_by:
+                    if f.type != new_type and name == m.bucket_by:
                         # xxhash64 is TYPE-sensitive (int 5 and long 5
                         # hash differently), so widening the bucket
                         # key would route new events to different
@@ -2292,20 +2292,6 @@ class LakeTable:
                 stats["groups_removed"] += 1
         return stats
 
-    def covered_max_lsn(self, m: Manifest | None = None) -> int:
-        """Highest LSN any committed batch covered (0 if none) — the
-        log horizon the ledger proves applied. Driver-side manifest
-        read, no job."""
-        m = m or self.manifest()
-        return max(
-            (
-                int(st["max_lsn"])
-                for st in m.committed_batches.values()
-                if st and "max_lsn" in st
-            ),
-            default=0,
-        )
-
     def compact(
         self,
         max_files_per_bucket: int = 1,
@@ -2340,7 +2326,7 @@ class LakeTable:
         Mutually exclusive with `sort_by`; see lake/zorder.py.
 
         `tombstone_grace_lsns` additionally GARBAGE-COLLECTS delete
-        tombstones older than `covered_max_lsn() - grace` from the
+        tombstones older than `Manifest.covered_max_lsn() - grace` from the
         rewritten buckets (the Cassandra gc_grace / Iceberg
         delete-file-retention analog). Tombstones exist to fence
         later-arriving STALE events (lower LSN) off dead keys; on a
@@ -2362,7 +2348,7 @@ class LakeTable:
             per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
         purge_below = None
         if tombstone_grace_lsns is not None:
-            purge_below = max(0, self.covered_max_lsn(m) - int(tombstone_grace_lsns))
+            purge_below = max(0, m.covered_max_lsn() - int(tombstone_grace_lsns))
         if sort_by is not None and sort_by not in m.schema.names():
             raise ValueError(f"unknown sort_by column {sort_by!r}")
         if zorder_by:
@@ -2404,12 +2390,12 @@ class LakeTable:
             # harmless extra work, never a semantic change.)
             qualifying = [
                 r[0]
-                for r in self.read_raw()
+                for r in self.read_raw(version=m.version)
                 .filter(
                     F.coalesce(F.col(SYS_DELETED), F.lit(False))
                     & (F.col(SYS_LSN) < F.lit(purge_below))
                 )
-                .select(self.bucket_expr(m).alias("b"))
+                .select(m.bucket_expr().alias("b"))
                 .distinct()
                 .collect()
             ]
@@ -2425,7 +2411,7 @@ class LakeTable:
         if purge_below:
             is_dead = F.coalesce(F.col(SYS_DELETED), F.lit(False))
             df = df.filter(~(is_dead & (F.col(SYS_LSN) < F.lit(purge_below))))
-        df = df.withColumn(BUCKET_COL, self.bucket_expr(m))
+        df = df.withColumn(BUCKET_COL, m.bucket_expr())
         n_splits = len(todo) * max(1, split_per_bucket)
         if zorder_by:
             from etl_spark.lake import zorder as _zo
@@ -2445,10 +2431,10 @@ class LakeTable:
         # an OLD version and never matches — no prop-stripping needed)
         try:
             return self.overwrite_buckets(
+                m,
                 df,
                 todo,
                 stamp_props=("maintenance_commit",),
-                expected_version=m.version,
                 # compaction collapses patch chains to full images:
                 # resets has_patches so these buckets skip the fold
                 patch_buckets=set(),

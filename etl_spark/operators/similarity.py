@@ -459,9 +459,14 @@ def embedding_neardup_pairs(
     recall trade-off, tunable via n_bits; the paired SQL oracle applies
     the identical restriction). n_bits=0 -> exact all-pairs crossJoin —
     O(n^2), small-corpus verification ONLY, never the scale path
-    (VERDICT r01 rejected it as the benched default)."""
+    (VERDICT r01 rejected it as the benched default). Each side's
+    norm is computed before the join (`cosine`'s expression, identical
+    doubles): inlined, the unrolled norms make the pair stage too large
+    for whole-stage codegen."""
     a = df.select(F.col(id_col).alias("id_a"), as_double(F.col(vec_col)).alias("_va"))
     b = df.select(F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("_vb"))
+    a = a.withColumn("_na", norm(F.col("_va"), dim))
+    b = b.withColumn("_nb", norm(F.col("_vb"), dim))
     if n_bits:
         a = a.withColumn("_bkt", sign_bucket(F.col("_va"), n_bits))
         b = b.withColumn("_bkt", sign_bucket(F.col("_vb"), n_bits))
@@ -470,7 +475,10 @@ def embedding_neardup_pairs(
         pairs = a.crossJoin(b)
     return (
         pairs.filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("score", cosine(F.col("_va"), F.col("_vb"), dim))
+        .withColumn(
+            "score",
+            dot(F.col("_va"), F.col("_vb"), dim) / (F.col("_na") * F.col("_nb")),
+        )
         .filter(F.col("score") >= threshold)
         .select("id_a", "id_b", F.round("score", 4).alias("score_r4"))
     )

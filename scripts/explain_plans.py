@@ -272,7 +272,7 @@ def main() -> None:
     )
     b_of = {r[0]: r[1] for r in spark.createDataFrame(
         [(f"c{i}",) for i in range(10)], ["conv_id"]
-    ).select("conv_id", mt.bucket_expr().alias("b")).collect()}
+    ).select("conv_id", mt.manifest().bucket_expr().alias("b")).collect()}
     c1, c2 = "c0", next(c for c in b_of if b_of[c] != b_of["c0"])
 
     def _src(rows):

@@ -100,7 +100,7 @@ def test_tombstone_gc_with_grace(spark, tmp_path):
     table = LakeTable(spark, cfg.table_root)
     oracle = replay_oracle(base, binlog, ops)
 
-    horizon = table.covered_max_lsn()
+    horizon = table.manifest().covered_max_lsn()
     assert horizon == g.n_events
     raw = table.compact(max_files_per_bucket=1)  # collapse deltas first
     dead = (

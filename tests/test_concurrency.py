@@ -1,11 +1,13 @@
 """Optimistic concurrency for maintenance and other writers racing
-the stream's merges: the O_EXCL manifest create alone only catches the
-final instant; `expected_version`/`CommitConflict` closes the WIDE
-window where a competing commit lands during an expensive bucket
-rewrite and a stale commit would silently drop the winner's rows
-(Iceberg commit-conflict analog). The reference has no concurrency
-story at all — its registry insert races its JDBC append
-(/root/reference/src/pipeline/core/client_clickhouse.py:197-203)."""
+the stream's merges. Every `LakeTable` write reads one snapshot,
+plans and stages against it, and commits against it; a commit that
+lands in between is judged once, by `_commit_loop`'s lost-race rule
+(the O_EXCL manifest create catches the race, `on_race` decides):
+a stale copy-on-write rewrite raises `CommitConflict` rather than
+silently drop the winner's rows (Iceberg commit-conflict analog),
+and appends and schema changes rebase onto the winner. The reference
+has no concurrency story at all — its registry insert races its JDBC
+append (/root/reference/src/pipeline/core/client_clickhouse.py:197-203)."""
 
 from __future__ import annotations
 
@@ -82,6 +84,71 @@ def _inject_before_commit(inject):
         return real(self, m)
 
     return mock.patch.object(LakeTable, "_commit_manifest", wrapper)
+
+
+def _inject_after_first_read(table, inject):
+    """Patch LakeTable.manifest so `inject` runs once right after
+    `table`'s first snapshot read — a racer landing between a write's
+    planning read and everything the write does after it."""
+    real = LakeTable.manifest
+    state = {"fired": False}
+
+    def wrapper(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)
+        if self is table and not state["fired"]:
+            state["fired"] = True
+            inject()
+        return out
+
+    return mock.patch.object(LakeTable, "manifest", wrapper)
+
+
+def test_add_column_racing_add_column_keeps_ids_distinct(spark, tmp_path):
+    """Two handles adding different columns at once: the loser re-runs
+    its mutation on the winner's snapshot, so each column gets its own
+    field ID and both read back. (A field ID allocated from a read
+    older than the snapshot the commit lands on aliases the winner's
+    column.)"""
+    root = str(tmp_path / "tbl")
+    table = LakeTable.create(
+        spark, root, [("k", "string"), ("v", "long")], ["k"], "k", num_buckets=4
+    )
+    table.append_full(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long"))
+    racer = LakeTable(spark, root)
+
+    with _inject_after_first_read(table, lambda: racer.add_column("score", "double")):
+        table.add_column("tool", "string")
+    m = table.manifest()
+    ids = [f.id for f in m.schema.fields]
+    assert len(set(ids)) == len(ids), m.schema.fields
+    assert m.schema.names() == ["k", "v", "score", "tool"]
+    rows = table.read().orderBy("k").collect()
+    assert [(r["k"], r["v"], r["score"], r["tool"]) for r in rows] == [
+        ("a", 1, None, None), ("b", 2, None, None),
+    ]
+
+
+def test_mor_merge_rebases_over_add_column_race(spark, tmp_path):
+    """A MoR merge raced by `add_column` after its planning read stages
+    its deltas under the planned schema and rebases onto the new one:
+    the merge commits, and its row reads back with the new column
+    NULL."""
+    g, base, binlog, cfg, table = _table(spark, tmp_path)  # mor default
+    oracle = replay_oracle(base, binlog, [])
+    conv = oracle["conv_id"].iloc[0]
+    lsn = int(binlog["lsn"].max()) + 1
+    racer = LakeTable(spark, cfg.table_root)
+    v0 = table.current_version()
+
+    with _inject_after_first_read(table, lambda: racer.add_column("score", "string")):
+        v = _racing_merge(spark, table, conv, lsn)
+    assert v == table.current_version() == v0 + 2
+    assert f"race:{lsn}" in table.manifest().committed_batches
+    row = table.read().filter(
+        (F.col("conv_id") == conv) & (F.col("turn_idx") == 0)
+    ).collect()
+    assert len(row) == 1
+    assert row[0]["text"] == f"winner-{lsn}" and row[0]["score"] is None
 
 
 def test_compact_loses_race_gracefully(spark, tmp_path):

@@ -50,10 +50,11 @@ def test_commit_is_versioned_and_idempotent(spark, tmp_path):
     seed(spark, t)
     v1 = t.current_version()
     # same batch key again -> no-op commit
-    df = t.read_raw().withColumn(BUCKET_COL, t.bucket_expr())
-    v2 = t.overwrite_buckets(df, list(range(8)), batch_key="seed")
+    m = t.manifest()
+    df = t.read_raw().withColumn(BUCKET_COL, m.bucket_expr())
+    v2 = t.overwrite_buckets(m, df, list(range(8)), batch_key="seed")
     assert v2 == v1
-    assert t.has_batch("seed")
+    assert "seed" in t.manifest().committed_batches
 
 
 def test_bucket_pruned_read(spark, tmp_path):
@@ -92,10 +93,11 @@ def test_widen_rejects_narrowing(spark, tmp_path):
 def test_tombstones_hidden_from_read(spark, tmp_path):
     t = make_table(spark, tmp_path)
     seed(spark, t)
+    m = t.manifest()
     raw = t.read_raw().withColumn(
         SYS_DELETED, F.col("turn_idx") < 5
-    ).withColumn(SYS_LSN, F.lit(1).cast("long")).withColumn(BUCKET_COL, t.bucket_expr())
-    t.overwrite_buckets(raw, list(range(8)), batch_key="del")
+    ).withColumn(SYS_LSN, F.lit(1).cast("long")).withColumn(BUCKET_COL, m.bucket_expr())
+    t.overwrite_buckets(m, raw, list(range(8)), batch_key="del")
     assert t.read().count() == 15
     assert t.read_raw().count() == 20
 
@@ -103,10 +105,11 @@ def test_tombstones_hidden_from_read(spark, tmp_path):
 def test_compact_bounds_files(spark, tmp_path):
     t = make_table(spark, tmp_path)
     seed(spark, t)
-    seed2 = t.read_raw().withColumn(BUCKET_COL, t.bucket_expr())
+    m = t.manifest()
+    seed2 = t.read_raw().withColumn(BUCKET_COL, m.bucket_expr())
     # append same buckets again as extra files via a manual two-commit
     t.overwrite_buckets(
-        seed2.unionByName(seed2), list({f.bucket for f in t.manifest().files}),
+        m, seed2.unionByName(seed2), list({f.bucket for f in m.files}),
         batch_key="dupe",
     )
     v = t.compact(max_files_per_bucket=1)

@@ -116,7 +116,7 @@ def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
     touched_bucket = [
         r[0]
         for r in t.spark.createDataFrame([("conv-3",)], "conv_id string")
-        .select(t.bucket_expr(m))
+        .select(m.bucket_expr())
         .collect()
     ][0]
     for f in m.files:

@@ -508,7 +508,7 @@ def test_patch_bit_skips_fold_for_patch_free_buckets(spark, tmp_path):
     # conv ids hashing to distinct buckets
     b_of = {r[0]: r[1] for r in spark.createDataFrame(
         [(f"c{i}",) for i in range(10)], ["conv_id"]
-    ).select("conv_id", t.bucket_expr().alias("b")).collect()}
+    ).select("conv_id", t.manifest().bucket_expr().alias("b")).collect()}
     c1, c2 = "c0", next(c for c in b_of if b_of[c] != b_of["c0"])
 
     def src(rows):

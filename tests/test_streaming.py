@@ -396,7 +396,9 @@ def test_ledger_schema_is_one_schema(spark, tmp_path):
     m_counts, m_poison, m_empty = (
         str(tmp_path / d) for d in ("counts", "poison", "empty")
     )
-    lineage.write_batch_manifest(spark, m_counts, table, resolved, 0, stats, 1)
+    lineage.write_batch_manifest(
+        spark, m_counts, table.manifest(), resolved, 0, stats, 1
+    )
     lineage.write_poison_batch_manifest(
         m_poison, 0, {**stats, "events_quarantined": 3}, 1
     )
@@ -408,3 +410,40 @@ def test_ledger_schema_is_one_schema(spark, tmp_path):
     for d in (m_counts, m_poison):
         assert lineage.read_manifest(spark, d).schema == empty.schema, d
     assert lineage.read_manifest(spark, [m_counts, m_poison]).schema == empty.schema
+
+
+def test_apply_batch_reads_the_manifest_once_per_commit(spark, tmp_path):
+    """A direct `apply_batch` plans on one ledger snapshot: the
+    manifest is read once by `apply_batch`, once per due schema op and
+    once by the merge. The commit primitives, their ledger checks and
+    the lineage rollup reuse those snapshots."""
+    from unittest import mock
+
+    from etl_spark.cdc_schema import TRANSCRIPTS, canonical_ops
+    from etl_spark.engine.apply import apply_batch
+    from etl_spark.lake.table import LakeTable
+
+    g = GenConfig(n_convs=4, n_events=60, segment_size=30)
+    base = gen_base(g)
+    paths = write_segments(gen_binlog(g, base, []), str(tmp_path / "segments"))
+    cfg = make_cfg(tmp_path)
+    bootstrap(spark, cfg, base)
+    add_lang = canonical_ops([1])  # due in every batch, absent from the log
+
+    real = LakeTable.manifest
+    reads = []
+
+    def counting(self, *args, **kwargs):
+        reads.append(args)
+        return real(self, *args, **kwargs)
+
+    for bid, ops, want in ((0, [], 2), (1, add_lang, 3)):
+        bdf = spark.read.schema(TRANSCRIPTS.binlog_schema()).parquet(paths[bid])
+        reads.clear()
+        with mock.patch.object(LakeTable, "manifest", counting):
+            apply_batch(spark, cfg, ops, bdf, batch_id=bid)
+        assert len(reads) == want, (bid, reads)
+    m = LakeTable(spark, cfg.table_root).manifest()
+    assert {"cdc:0", "cdc:1"} <= set(m.committed_batches)
+    assert "lang" in m.schema.names()
+    assert lineage.has_batch_manifest(cfg.manifest_dir, 1)
